@@ -89,7 +89,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   }
 
   /** (shardSpan, fields) persisted in the manifest, if present. */
-  private[index] def persistedLayout(): Option[(Long, Seq[String])] = {
+  private[graft] def persistedLayout(): Option[(Long, Seq[String])] = {
     if (!fs.exists(p("manifest.json"))) return None
     val node = manifestNode()
     Option(node.get("config")).map { c =>
@@ -536,21 +536,22 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   /** Aggregated tombstones as a DataFrame (t_doc_id, t_max_seg) — the
     * distributed anti-join form used when the set exceeds the driver bound.
     * Never collected or broadcast. */
-  def tombstoneAgg(): DataFrame = {
-    val tp = p("tombstones")
-    if (!fs.exists(tp))
+  def tombstoneAgg(): DataFrame =
+    if (!fs.exists(p("tombstones")))
       spark.emptyDataset[Tombstone].toDF("t_doc_id", "t_max_seg")
+    else tombstonesDF()
+      .groupBy(col("doc_id")).agg(max(col("max_seg")).as("max_seg"))
+      .toDF("t_doc_id", "t_max_seg")
+
+  /** Raw tombstone rows (doc_id, max_seg), one per delete, never
+    * aggregated — what the search layer shuffles beside the postings past
+    * the driver bound. */
+  def tombstonesDF(): DataFrame = {
+    val tp = p("tombstones")
+    if (!fs.exists(tp)) spark.emptyDataset[Tombstone].toDF()
     else spark.read
       .schema(org.apache.spark.sql.Encoders.product[Tombstone].schema)
       .parquet(tp.toString) // explicit schema: no inference job
-      .groupBy(col("doc_id")).agg(max(col("max_seg")).as("max_seg"))
-      .toDF("t_doc_id", "t_max_seg")
-  }
-
-  def tombstonesDF(): DataFrame = {
-    val tp = p("tombstones")
-    if (!fs.exists(tp)) spark.createDataFrame(Seq.empty[Tombstone])
-    else spark.read.parquet(tp.toString)
   }
 
   /** One-row plan counting the (doc, segment) pairs killed by tombstones —

@@ -1,19 +1,21 @@
 package graft.search
 
-/** Open-addressing docId → (score, termMask) accumulator for the driver
-  * fast paths. Parallel primitive arrays (no boxing, no per-entry objects):
-  * the driver-exhaustive path touches one entry per posting of a hot term's
-  * list, so a Scala HashMap's Long/Double boxing dominated its runtime.
+/** Open-addressing docId → (score, term mask) accumulator for the scoring
+  * kernel. Parallel primitive arrays (no boxing, no per-entry objects):
+  * exhaustive scoring touches one entry per posting of a hot term's list,
+  * so a Scala HashMap's Long/Double boxing dominated its runtime.
   *
   * Keys are non-negative docIds; EMPTY = -1. Linear probing, ×2 growth at
-  * 0.7 load. `mask` tracks which query-term bits contributed (AND mode,
-  * ≤ 64 terms — wider AND queries use the distributed plan instead).
+  * 0.7 load. Each entry carries `maskWords` longs of query-term bits (AND
+  * mode: ⌈terms/64⌉ words, so any number of AND terms is tracked exactly;
+  * OR mode: 0 words, no mask storage at all).
   */
-private[graft] final class DriverScoreMap(initialCapacity: Int = 1 << 12) {
+private[graft] final class DriverScoreMap(initialCapacity: Int = 1 << 12,
+                                          maskWords: Int = 1) {
   private var cap = Integer.highestOneBit(math.max(initialCapacity, 16) * 2 - 1)
   private var keys = Array.fill[Long](cap)(-1L)
   private var scores = new Array[Double](cap)
-  private var masks = new Array[Long](cap)
+  private var masks = new Array[Long](cap * maskWords)
   private var n = 0
 
   @inline private def idx(key: Long, c: Int): Int =
@@ -21,15 +23,20 @@ private[graft] final class DriverScoreMap(initialCapacity: Int = 1 << 12) {
     (java.lang.Long.hashCode(
       (key ^ (key >>> 31)) * 0x7fb5d329728ea185L) & (c - 1))
 
-  def add(key: Long, delta: Double, bit: Long): Unit = {
+  /** Adds `delta` to `key`'s score and ORs `mask` (`maskWords` longs; ignored
+    * when the map tracks no mask) into its term bits. */
+  def add(key: Long, delta: Double, mask: Array[Long]): Unit = {
     var i = idx(key, cap)
     while (true) {
       val k = keys(i)
-      if (k == key) {
-        scores(i) += delta; masks(i) |= bit; return
-      } else if (k == -1L) {
-        keys(i) = key; scores(i) = delta; masks(i) = bit
-        n += 1
+      if (k == key || k == -1L) {
+        if (k == key) scores(i) += delta
+        else {
+          keys(i) = key; scores(i) = delta
+          n += 1
+        }
+        var w = 0
+        while (w < maskWords) { masks(i * maskWords + w) |= mask(w); w += 1 }
         if (n * 10 > cap * 7) grow()
         return
       } else i = (i + 1) & (cap - 1)
@@ -41,14 +48,15 @@ private[graft] final class DriverScoreMap(initialCapacity: Int = 1 << 12) {
     cap <<= 1
     keys = Array.fill[Long](cap)(-1L)
     scores = new Array[Double](cap)
-    masks = new Array[Long](cap)
+    masks = new Array[Long](cap * maskWords)
     var i = 0
     while (i < oldKeys.length) {
       val k = oldKeys(i)
       if (k != -1L) {
         var j = idx(k, cap)
         while (keys(j) != -1L) j = (j + 1) & (cap - 1)
-        keys(j) = k; scores(j) = oldScores(i); masks(j) = oldMasks(i)
+        keys(j) = k; scores(j) = oldScores(i)
+        System.arraycopy(oldMasks, i * maskWords, masks, j * maskWords, maskWords)
       }
       i += 1
     }
@@ -56,11 +64,16 @@ private[graft] final class DriverScoreMap(initialCapacity: Int = 1 << 12) {
 
   def size: Int = n
 
-  /** Visits every live entry. */
-  def foreach(f: (Long, Double, Long) => Unit): Unit = {
+  /** Visits every live entry with its number of set term bits. */
+  def foreach(f: (Long, Double, Int) => Unit): Unit = {
     var i = 0
     while (i < cap) {
-      if (keys(i) != -1L) f(keys(i), scores(i), masks(i))
+      if (keys(i) != -1L) {
+        var bits = 0
+        var w = 0
+        while (w < maskWords) { bits += java.lang.Long.bitCount(masks(i * maskWords + w)); w += 1 }
+        f(keys(i), scores(i), bits)
+      }
       i += 1
     }
   }

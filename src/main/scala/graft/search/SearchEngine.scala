@@ -2,9 +2,12 @@ package graft.search
 
 import graft.analysis.Analyzer
 import graft.core._
-import graft.index.{IndexStore, PostingCodec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.index.IndexStore
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Query modes. The reference's multi-term search is disjunctive
   * accumulation (OR, indexing.go:385-493); AND is the intersection variant
@@ -23,18 +26,25 @@ object SearchMode {
 
 /** BM25 top-k search over an [[IndexStore]] (SURVEY.md §A.4 pinned scorer).
   *
-  * Plan shape (exhaustive path):
-  *   postings scan (parquet min/max pruned to the query terms / prefix range)
-  *   → blob decode (flatMap) → tombstone anti-filter → broadcast join with
-  *   the per-(field,term) idf + per-field avgdl stats (tiny, driver-built)
-  *   → per-row BM25 contribution (pure Column arithmetic, codegen'd)
-  *   → groupBy(doc_id) sum (partial agg map-side; cardinality ≤ matched docs)
-  *   → orderBy(score desc, doc_id).limit(k) ⇒ TakeOrderedAndProjectExec —
-  *   no global sort is ever materialized.
+  * Every query scores through the one [[ScoringKernel]]: per docId-range
+  * shard group, `(group rows, term stats, mode, tombstones) → bounded
+  * heap`, summing each doc in (field, term, seg) order — bit-identical to
+  * [[OracleScorer]]. Where the kernel runs is a size gate:
   *
-  * The only shuffle is the final groupBy(doc_id) over matched postings —
-  * the same irreducible "accumulate per doc" the reference does in a hash
-  * map (indexing.go:380, 407-419), here distributed and spill-safe.
+  *  - Driver path (Σ df · 8 ≤ `driverWandMaxBytes` and the tombstones fit
+  *    the driver map): shard rows come from the driver LRU (one pruned scan
+  *    on a miss, no Spark job when warm), and the groups score concurrently
+  *    on [[DriverPool]] against a shared θ floor.
+  *  - Fused distributed job ([[ScoringKernel.fused]]), otherwise: ONE
+  *    Spark job of two stages. Map stage: postings scan with the field/term
+  *    IN filters pushed into parquet, exact-pair filter in the closure, rows
+  *    keyed by shard (large tombstone sets ride the same shuffle, keyed by
+  *    their doc's shard). Reduce stage: sort on shard, stream one shard
+  *    group at a time through the kernel into one heap per partition. The
+  *    driver merges the ≤ k × partitions survivors.
+  *
+  * Either way `search` returns a local frame of ≤ k rows: the work is done
+  * by the time it returns, and collecting the result runs no job.
   */
 class SearchEngine(val store: IndexStore) {
   import store.spark.implicits._
@@ -132,8 +142,8 @@ class SearchEngine(val store: IndexStore) {
   def searchFuzzy(query: String, fields: Seq[String] = CorpusDoc.Fields,
                   k: Int = 100): DataFrame = {
     val qTerms = Analyzer.tokenize(query).distinct.sorted.toSeq
-    val matched = qTerms.flatMap(t => expandFuzzy(t, fields)).distinct
-    exhaustive(qTerms, matched, fields, k, SearchMode.Or)
+    topK(qTerms, qTerms.flatMap(t => expandFuzzy(t, fields).map { case (f, mt) => (f, mt, t) }),
+      k, SearchMode.Or)
   }
 
   /** Full search entry point mirroring the reference API
@@ -146,41 +156,17 @@ class SearchEngine(val store: IndexStore) {
              mode: SearchMode = SearchMode.Or,
              boosts: Map[String, Double] = Map.empty): DataFrame = {
     val qTerms = Analyzer.tokenize(query).distinct.sorted.toSeq
-    if (qTerms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    require(!(mode == SearchMode.And && beginsWith && qTerms.size > 64),
-      "AND + prefix supports at most 64 query terms")
     // a negative boost would flip idf's sign and invert WAND's upper bounds
     // into lower bounds, silently breaking pruning
     require(boosts.values.forall(_ >= 0.0), s"boosts must be >= 0: $boosts")
-    // .distinct: overlapping prefix expansions (e.g. "cl cla" both matching
-    // "class") must contribute one (field, term) pair, not two — a duplicate
-    // would double-count that term's BM25 contribution in the distributed
-    // join path. Each pair keeps the bit(s) of the QUERY term(s) it expands
-    // from, so AND semantics stay "every query term has ≥1 matched
-    // expansion" under prefix expansion.
-    val qIdx: Map[String, Int] = qTerms.zipWithIndex.toMap
-    val matchedSrc: Seq[(String, String, String)] =
+    // each matched (field, term) pair keeps the query term it expands from,
+    // so AND stays "every query term has ≥ 1 matched expansion" under
+    // prefix expansion
+    val matched: Seq[(String, String, String)] =
       if (beginsWith)
         qTerms.flatMap(t => expandPrefix(t, fields).map { case (f, mt) => (f, mt, t) })
       else fields.flatMap(f => qTerms.map(t => (f, t, t)))
-    val matched: Seq[(String, String)] =
-      matchedSrc.map { case (f, t, _) => (f, t) }.distinct
-    val srcBit: Map[(String, String), Long] =
-      matchedSrc.groupBy { case (f, t, _) => (f, t) }
-        .map { case (key, vs) =>
-          key -> vs.map(v => 1L << (qIdx(v._3) % 64)).reduce(_ | _) }
-    mode match {
-      // WAND needs a per-executor tombstone lookup; past the driver-map
-      // bound its pruning advantage is gone anyway (upper bounds ignore
-      // deletions), so fall back to the exhaustive OR plan — identical
-      // top-k semantics, anti-join tombstone filtering.
-      case SearchMode.Wand if tombstonesSmall =>
-        new WandExecutor(this).search(qTerms, matched, fields, k, boosts)
-      case SearchMode.Wand =>
-        exhaustive(qTerms, matched, fields, k, SearchMode.Or, boosts, srcBit)
-      case _ =>
-        exhaustive(qTerms, matched, fields, k, mode, boosts, srcBit)
-    }
+    topK(qTerms, matched, k, mode, boosts)
   }
 
   /** Top-k hits hydrated with the stored documents (reference loads the ≤100
@@ -204,6 +190,8 @@ class SearchEngine(val store: IndexStore) {
   private var fieldStatsC: Map[String, (Long, Long)] = Map.empty
   private var tombstoneC: Map[Long, Int] = Map.empty
   private var tombSmallC: Boolean = true
+  private var tombRowsC: Option[DataFrame] = None
+  private var shardSpanC: Long = store.cfg.shardSpan
   private var postingsC: DataFrame = _
   private var termDfC: DataFrame = _
 
@@ -212,10 +200,14 @@ class SearchEngine(val store: IndexStore) {
     if (t != cacheToken) {
       fieldStatsC = store.fieldStats()
       // size-guard the driver tombstone map: past the configured bound the
-      // map is never collected — anti-joins run against the tombstone table
-      // instead (a bulk delete of 10^9 ids must not OOM the driver)
+      // map is never collected — the raw tombstone rows join the fused
+      // job's shard shuffle instead (a bulk delete of 10^9 ids must not OOM
+      // the driver)
       tombSmallC = store.tombstoneCount() <= store.cfg.maxDriverTombstones
       tombstoneC = if (tombSmallC) store.tombstoneMap() else Map.empty
+      tombRowsC = if (tombSmallC) None else Some(store.tombstonesDF())
+      // tombstones must be keyed by the span the postings were built with
+      shardSpanC = store.persistedLayout().fold(store.cfg.shardSpan)(_._1)
       postingsC = store.postings()
       termDfC = store.termDf()
       blobCache.clear()
@@ -233,17 +225,17 @@ class SearchEngine(val store: IndexStore) {
   // the fast paths ever reach here; a repeat query over cached terms runs
   // ZERO Spark jobs. Invalidated wholesale when the store version changes.
 
-  private type ShardRow = (String, String, Int, Long, Array[Byte], Array[Byte])
+  private type ShardRow = ScoringKernel.ShardRow
   private val blobCache =
     new java.util.LinkedHashMap[(String, String), Array[ShardRow]](64, 0.75f, true)
   private var blobCacheSize = 0L
   private def rowBytes(r: ShardRow): Long =
     (if (r._5 == null) 0 else r._5.length).toLong + r._6.length + 64
 
+  /** The pairs' shard rows plus, for prefix expansions, rows of other
+    * pairs inside the same field × term bounds; callers pick by key. */
   private def collectRows(pairs: Seq[(String, String)]): Array[ShardRow] =
-    matchedShards(pairs)
-      .select($"field", $"term", $"seg", $"shard", $"blocks", $"blob")
-      .as[ShardRow].collect()
+    shardScan(pairs).as[ShardRow].collect()
 
   /** Shard rows for the matched pairs, served from the LRU where possible.
     * Rows fetched by this call are returned even if eviction (or a version
@@ -306,24 +298,21 @@ class SearchEngine(val store: IndexStore) {
     attempt(1)
   }
 
-  private[search] def cachedPostings(): DataFrame = { refreshIfStale(); postingsC }
   private[search] def cachedTermDf(): DataFrame = { refreshIfStale(); termDfC }
-  private[search] def cachedTombstones(): Map[Long, Int] = { refreshIfStale(); tombstoneC }
   /** Whether the tombstone set fits the driver-map bound; when false, every
-    * query path uses distributed anti-joins and WAND falls back to the
-    * exhaustive plan. */
+    * query runs the fused distributed job with co-shuffled tombstones. */
   def tombstonesSmall: Boolean = { refreshIfStale(); tombSmallC }
 
-  // ---------- scoring internals ----------
+  // ---------- scoring ----------
 
   /** idf + avgdl + df statistics for the matched (field, term) pairs,
-    * computed on the driver (≤ |fields|·|terms| rows) and broadcast.
+    * computed on the driver (≤ |fields|·|terms| rows).
     *
     * Per-field boosts scale idf here, at the single source of scoring
-    * statistics: every downstream path (Column arithmetic, driver
-    * accumulation, WAND global/block upper bounds and contributions) is
-    * linear in idf, so one multiplication boosts them all consistently —
-    * WAND pruning stays safe because bounds scale with contributions. */
+    * statistics: every downstream use (exhaustive accumulation, WAND
+    * global/block upper bounds and contributions) is linear in idf, so one
+    * multiplication boosts them all consistently — WAND pruning stays safe
+    * because bounds scale with contributions. */
   private[search] def termStats(matched0: Seq[(String, String)],
                                 boosts: Map[String, Double] = Map.empty): Seq[TermStat] = {
     refreshIfStale()
@@ -378,232 +367,84 @@ class SearchEngine(val store: IndexStore) {
     }
   }
 
-  private[search] def tombstoneFiltered(decoded: DataFrame): DataFrame = {
+  /** The postings bounded by two parquet-pushable IN filters, on the
+    * fields and on the terms of `matched`: exact for a field × term cross
+    * product (every non-prefix query), a superset for prefix expansions. */
+  private def bounded(matched: Seq[(String, String)]): DataFrame = {
     refreshIfStale()
-    if (tombSmallC) {
-      val ts = tombstoneC
-      if (ts.isEmpty) decoded
-      else {
-        val tsDF = broadcast(ts.toSeq.toDF("t_doc_id", "t_max_seg"))
-        decoded.join(tsDF,
-          decoded("doc_id") === tsDF("t_doc_id") && decoded("seg") <= tsDF("t_max_seg"),
-          "left_anti")
-      }
-    } else {
-      // past the driver bound: distributed anti-join against the aggregated
-      // tombstone table (shuffled, spill-safe — never materialized anywhere)
-      val tsDF = store.tombstoneAgg()
-      decoded.join(tsDF,
-        decoded("doc_id") === tsDF("t_doc_id") && decoded("seg") <= tsDF("t_max_seg"),
-        "left_anti")
-    }
+    postingsC.filter($"field".isInCollection(matched.map(_._1).distinct) &&
+      $"term".isInCollection(matched.map(_._2).distinct))
   }
+
+  /** The scan the kernel reads, on the driver and in the fused job: the
+    * bounded postings as [[ScoringKernel.ShardRow]] columns. */
+  private[graft] def shardScan(matched: Seq[(String, String)]): DataFrame =
+    bounded(matched).select($"field", $"term", $"seg", $"shard", $"blocks", $"blob")
 
   /** Selects only the shards of the matched terms — equality pushdown on the
     * (field, term)-sorted postings table. */
   def matchedShards(matched0: Seq[(String, String)]): DataFrame = {
     val matched = matched0.distinct // duplicates would fool the cross-product check
-    val all = cachedPostings()
-    if (all.isEmpty) return all
-    val fields = matched.map(_._1).distinct
-    val terms = matched.map(_._2).distinct
-    // two parquet-pushable IN filters bound the scan
-    val bounded = all.filter(
-      $"field".isInCollection(fields) && $"term".isInCollection(terms))
-    // when the matched set IS the fields × terms cross product (every
-    // non-prefix query), the IN filters are already exact — skip the
-    // broadcast semi-join and its exchange/job. Prefix expansion, where
-    // matched terms differ per field, still enforces the exact pair set.
-    if (matched.size.toLong == fields.size.toLong * terms.size) bounded
-    else {
-      val pairs = broadcast(matched.toDF("field", "term"))
-      bounded.join(pairs, Seq("field", "term"), "left_semi")
-    }
+    val cross = matched.map(_._1).distinct.size.toLong * matched.map(_._2).distinct.size
+    // prefix expansions, whose terms differ per field, need the exact pairs
+    if (matched.size.toLong == cross) bounded(matched)
+    else bounded(matched).join(broadcast(matched.toDF("field", "term")), Seq("field", "term"), "left_semi")
   }
 
-  private def exhaustive(qTerms: Seq[String], matched: Seq[(String, String)],
-                         fields: Seq[String], k: Int, mode: SearchMode,
-                         boosts: Map[String, Double] = Map.empty,
-                         srcBit: Map[(String, String), Long] = Map.empty): DataFrame = {
-    if (matched.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val stats = termStats(matched, boosts)
-    if (stats.isEmpty) return spark.emptyDataset[Hit].toDF()
-    // AND intersection mask: bit(s) of the query term(s) each matched pair
-    // expands from — identity when no expansion happened
-    val bitOf: Map[(String, String), Long] =
-      if (mode != SearchMode.And) Map.empty
-      else if (srcBit.nonEmpty) srcBit
+  /** Scores `matched` — (field, index term, query term it expands from) —
+    * through the kernel and returns the top-k as a local frame. */
+  private def topK(qTerms: Seq[String], matched: Seq[(String, String, String)], k: Int,
+                   mode: SearchMode, boosts: Map[String, Double] = Map.empty): DataFrame = {
+    val pairs = matched.map { case (f, t, _) => (f, t) }.distinct
+    val stats = if (pairs.isEmpty || k <= 0) Nil else termStats(pairs, boosts)
+    val hits =
+      if (stats.isEmpty) Nil
       else {
+        val words = KernelQuery.maskWords(mode, qTerms.size)
         val qIdx = qTerms.zipWithIndex.toMap
-        matched.map(p => p -> (1L << (qIdx.getOrElse(p._2, 0) % 64))).toMap
+        val masks = matched.groupBy { case (f, t, _) => (f, t) }.map { case (pair, src) =>
+          val m = new Array[Long](words)
+          if (words > 0) src.foreach { case (_, _, q) => val i = qIdx(q); m(i >> 6) |= 1L << (i & 63) }
+          pair -> m
+        }
+        val q = KernelQuery(stats.map(s =>
+          (s.field, s.term) -> PairStat(s.idf, s.avgdl, masks((s.field, s.term)))).toMap,
+          mode, qTerms.size, k, bm25)
+        // ~8 bytes per posting bounds the candidate volume
+        if (stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes && tombstonesSmall)
+          driverTopK(q, pairs)
+        else {
+          val (tombRows, tomb, span) = synchronized((tombRowsC, tombstoneC, shardSpanC))
+          ScoringKernel.fused(shardScan(pairs), tombRows, tomb, q, span,
+            spark.conf.get("spark.sql.shuffle.partitions").toInt)
+        }
       }
-    // small-query fast path (same bound as WAND): accumulate on the driver
-    // from one pruned scan instead of decode+shuffle+agg jobs. Requires the
-    // driver-side tombstone map, so it is skipped past the tombstone bound;
-    // AND tracking uses a 64-bit term mask, so wider AND queries distribute.
-    if (stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes && tombstonesSmall
-        && (mode != SearchMode.And || qTerms.size <= 64))
-      return driverExhaustive(qTerms, matched, stats, k, mode, bitOf)
-    val statsDF = broadcast(
-      stats.map(s => (s.field, s.term, s.idf, s.avgdl,
-          bitOf.getOrElse((s.field, s.term), 0L)))
-        .toDF("field", "term", "idf", "avgdl", "tbit"))
-    // Attach the per-term stats to the SHARD rows (one row per (field,
-    // term, seg, shard) — vocabulary-sized) and explode AFTERWARDS, so the
-    // broadcast hash join hashes two string keys once per shard row, not
-    // once per decoded posting, and the per-posting stream carries three
-    // doubles + seg instead of two strings (guide §3.3: "explode before a
-    // join multiplies the shuffle; join first on the un-exploded key and
-    // explode after"). Contribution values are identical per posting; only
-    // the plan order changes.
-    val rows = tombstoneFiltered(
-      matchedShards(matched).join(statsDF, Seq("field", "term"))
-        .select($"seg", $"idf", $"avgdl", $"tbit",
-          graft.functions.GraftFunctions.posting_explode($"blob")))
-    val k1 = lit(bm25.k1); val b = lit(bm25.b)
-    val contrib = rows
-      .withColumn("part",
-        $"idf" * ($"tf" * (k1 + lit(1.0))) /
-          ($"tf" + k1 * (lit(1.0) - b + b * $"dl" / $"avgdl")))
-    // OR mode needs only the score sum. AND tracks the distinct-term set as
-    // a bit_or mask — one shuffle, unlike countDistinct, whose distinct
-    // rewrite inserts a second aggregate exchange on (doc_id, term).
-    val filtered = mode match {
-      case SearchMode.And if qTerms.size <= 64 =>
-        contrib.groupBy($"doc_id")
-          .agg(sum($"part").as("score"), bit_or($"tbit").as("mask"))
-          .filter(bit_count($"mask") === lit(qTerms.size))
-      case SearchMode.And =>
-        contrib.groupBy($"doc_id")
-          .agg(sum($"part").as("score"), countDistinct($"term").as("mterms"))
-          .filter($"mterms" === lit(qTerms.size.toLong))
-      case _ =>
-        contrib.groupBy($"doc_id").agg(sum($"part").as("score"))
-    }
-    filtered.select($"doc_id", $"score")
-      .orderBy(desc("score"), asc("doc_id")).limit(k)
+    // rows under a fixed schema: no encoder to generate code for and no
+    // renaming projection to analyze on every read
+    spark.createDataFrame(hits.map { case (d, s) => Row(d, s) }.asJava, SearchEngine.HitSchema)
   }
 
-  /** Driver-side exhaustive scoring for small candidate sets: collects the
-    * pruned shard rows, decodes and accumulates per-doc scores in ascending
-    * (field, term) order — the exact summation order of the oracle scorer,
-    * so scores are bit-identical to it (the distributed path sums in
-    * shuffle order and matches within fp tolerance).
-    *
-    * The inner loop is allocation-free: varints are decoded inline (no
-    * tuple materialization) into a primitive open-addressing accumulator
-    * ([[DriverScoreMap]]); AND-mode distinct-term tracking is a bitmask.
-    * The previous HashMap[Long, Double] + Set[String] version spent ~3x
-    * this path's runtime on boxing. */
-  private def driverExhaustive(qTerms: Seq[String], matched: Seq[(String, String)],
-                               stats: Seq[TermStat], k: Int, mode: SearchMode,
-                               bitOf: Map[(String, String), Long]): DataFrame = {
-    val statsMap = stats.map(s => (s.field, s.term) -> s).toMap
-    // rows BEFORE tombstones: if a concurrent delete lands between the two
-    // reads, the tombstone map is the newer of the pair and the deleted doc
-    // is still filtered (the reverse order could resurface it)
-    //
-    // SHARD-major sort: shard groups hold pairwise-disjoint docId ranges
-    // (shard = docId / span), so contiguous shard runs are independent
-    // scoring units executed CONCURRENTLY on the driver pool below —
-    // within a run the (f, t, seg) order is exactly the old global
-    // (f, t, shard, seg) order restricted to that shard's docs, so every
-    // doc's contributions still sum in ascending (field, term) order and
-    // scores stay bit-identical to the oracle scorer.
-    val rows = fetchShardRows(matched)
-      .sortBy { case (f, t, seg, shard, _, _) => (shard, f, t, seg) }
-    val tomb = cachedTombstones()
-    val and = mode == SearchMode.And
-    val est = math.min(stats.map(_.df).sum, 1L << 21).toInt
-    val k1 = bm25.k1; val b = bm25.b
-    val noTomb = tomb.isEmpty
-    val want = qTerms.size
-    // contiguous shard-run boundaries
-    val starts = scala.collection.mutable.ArrayBuffer(0)
-    var ri = 1
-    while (ri < rows.length) {
-      if (rows(ri)._4 != rows(ri - 1)._4) starts += ri
-      ri += 1
-    }
-    val nUnits = if (rows.isEmpty) 0 else starts.length
-    // One unit: accumulate its shard's postings into a private map, filter
-    // (AND mask), and return its local top-k. Per-unit map pre-sizing uses
-    // the unit's blob bytes (≥ 3 bytes per posting ⇒ bytes/3 bounds its
-    // distinct docs) instead of the global Σdf — the old single global
-    // accumulator pre-sized from Σdf to avoid ~7 re-hashes per hot query;
-    // the same reasoning applies per unit with the tighter local bound.
-    def scoreUnit(u: Int): BoundedHitHeap = {
-      val from = starts(u)
-      val until = if (u + 1 < nUnits) starts(u + 1) else rows.length
-      var bytes = 0L
-      var i = from
-      while (i < until) { bytes += rows(i)._6.length; i += 1 }
-      val estU = math.min(est.toLong, bytes / 3 + 16).toInt
-      val acc = new DriverScoreMap(math.max(estU * 10 / 7, 1 << 10))
-      i = from
-      while (i < until) {
-        val (f, t, seg, _, _, blob) = rows(i)
-        statsMap.get((f, t)).foreach { st =>
-          val idf = st.idf
-          val avgdl = st.avgdl
-          val bit = if (and) bitOf.getOrElse((f, t), 0L) else 0L
-          var p = 0
-          var prevDoc = 0L
-          while (p < blob.length) {
-            // inline LEB128 × 3: docId delta, tf, dl
-            var v = 0L; var shift = 0; var by = 0
-            do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-            while ((by & 0x80) != 0)
-            val d = prevDoc + v
-            prevDoc = d
-            v = 0L; shift = 0
-            do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-            while ((by & 0x80) != 0)
-            val tf = v.toDouble
-            v = 0L; shift = 0
-            do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-            while ((by & 0x80) != 0)
-            val dl = v.toDouble
-            if (noTomb || !tomb.get(d).exists(seg <= _)) {
-              // EXACT expression shape of OracleScorer / the Column plan —
-              // re-associating it would break bit-identity with both
-              val part = idf * (tf * (k1 + 1.0)) /
-                (tf + k1 * (1.0 - b + b * dl / avgdl))
-              acc.add(d, part, bit)
-            }
-          }
-        }
-        i += 1
-      }
-      val h = new BoundedHitHeap(k)
-      acc.foreach { (d, s, m) =>
-        if (!and || java.lang.Long.bitCount(m) == want) h.offer(d, s)
-      }
+  /** The kernel on the driver: the pairs' shard rows (LRU, or one pruned
+    * scan) grouped by shard, the groups scored concurrently on the pool.
+    * Rows are read BEFORE the tombstone map: if a delete lands between the
+    * two reads, the map is the newer of the pair and the deleted doc stays
+    * filtered (the reverse order could resurface it). */
+  private def driverTopK(q: KernelQuery, pairs: Seq[(String, String)]): Seq[(Long, Double)] = {
+    val groups = fetchShardRows(pairs).groupBy(_._4).toArray.sortBy(_._1).map(_._2)
+    val tomb = synchronized(tombstoneC)
+    // only WAND prunes against θ; exhaustive heaps need no shared floor
+    val shared = if (q.mode == SearchMode.Wand) new SharedTheta else null
+    val heaps = DriverPool.run(groups.length, spark.sparkContext.defaultParallelism) { g =>
+      val h = new BoundedHitHeap(q.k, shared)
+      ScoringKernel.score(q, groups(g), tomb, h)
       h
     }
-    // Disjoint doc ranges ⇒ merged per-unit top-ks equal the global top-k
-    // under the (score desc, docId asc) total order. Pool size = the
-    // session's defaultParallelism (never a hard-coded core count); the
-    // single-unit / single-core case runs inline with zero pool overhead —
-    // the previous sequential behavior exactly.
-    val par = math.max(1, spark.sparkContext.defaultParallelism)
-    val heap = new BoundedHitHeap(k)
-    if (nUnits <= 1 || par <= 1) {
-      var u = 0
-      while (u < nUnits) {
-        scoreUnit(u).result().foreach { case (d, s) => heap.offer(d, s) }
-        u += 1
-      }
-    } else {
-      val pool = DriverPool(par)
-      val futs = (0 until nUnits).map { u =>
-        pool.submit(new java.util.concurrent.Callable[BoundedHitHeap] {
-          def call(): BoundedHitHeap = scoreUnit(u)
-        })
-      }
-      futs.foreach(_.get().result().foreach { case (d, s) => heap.offer(d, s) })
-    }
-    // already (score desc, doc_id asc)-sorted and ≤ k: plain LocalRelation
-    heap.result().toDF("doc_id", "score")
+    val top = new BoundedHitHeap(q.k)
+    heaps.foreach(_.result().foreach { case (d, s) => top.offer(d, s) })
+    top.result()
   }
+}
+
+private object SearchEngine {
+  val HitSchema: StructType = Encoders.product[Hit].schema
 }

@@ -1,153 +1,32 @@
 package graft.search
 
-import graft.core._
 import graft.index.PostingCodec
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** Distributed Block-Max WAND top-k (SURVEY.md §7.2 M4; north rule:
-  * "posting-list intersection with block-max WAND pruning and a bounded
-  * min-heap per partition merged via a final top-k reduce").
+/** Block-Max WAND, the Wand mode of [[ScoringKernel]] (SURVEY.md §7.2 M4;
+  * north rule: "posting-list intersection with block-max WAND pruning and
+  * a bounded min-heap per partition merged via a final top-k reduce").
   *
-  * Parallelism model: posting shards are docId-range disjoint, so
-  * repartitioning the matched shards ON `shard` colocates, for each docId
-  * range, every query term's postings in one task. Each task runs classic
-  * BMW (Broder et al. WAND + Ding/Suel block-max bounds) over its shards
-  * with ONE bounded min-heap shared across the task's shards — the heap
-  * threshold θ only tightens as the task progresses, so pruning is safe, and
-  * partitions prune independently starting from θ=0. The driver merges the
-  * ≤ k·partitions candidates with a final top-k — at k=10..100 this merge is
-  * trivially small at any corpus scale.
+  * The kernel hands [[WandExecutor.runWand]] one shard group's cursors in
+  * ascending (field, term, seg) order plus the heap to fill. Shard groups
+  * are docId-range disjoint, so each runs BMW (Broder et al. WAND +
+  * Ding/Suel block-max bounds) on its own:
+  *  - on the driver pool (small candidate sets), one heap per group, every
+  *    heap pruning against the monotone [[SharedTheta]] floor;
+  *  - inside the fused distributed job ([[ScoringKernel.fused]]), where the
+  *    reduce side streams a partition's groups through ONE heap, whose θ
+  *    only tightens as the task progresses.
+  * Either way the merged per-group top-ks equal the global top-k, and the
+  * driver merge of ≤ k × groups entries is trivially small.
   *
-  * Small-query fast path: when Σ df(t) (known on the driver from the stats
-  * lookup) bounds the candidate volume under `IndexConfig.driverWandMaxBytes`,
-  * the pruned blob rows are collected and BMW runs on the driver — one scan
-  * job instead of scan+shuffle+reduce. Hot-term queries at corpus scale
-  * exceed the bound and stay fully distributed (the query-coordinator
-  * pattern of real search engines).
-  *
-  * Determinism: at full evaluation a doc's contributions are summed in
-  * ascending (field, term) cursor order — the same order the single-node
-  * oracle scorer uses — so scores are bit-identical and ranks exact
-  * (SURVEY.md §7.4 float determinism).
+  * Determinism: a fully evaluated doc sums its contributions in cursor
+  * order — the same (field, term) order the single-node oracle scorer uses
+  * — so scores are bit-identical and ranks exact (SURVEY.md §7.4 float
+  * determinism).
   */
-class WandExecutor(engine: SearchEngine) {
-  import engine.store.spark.implicits._
-
-  private val bm25 = engine.store.cfg.bm25
-
-  def search(qTerms: Seq[String], matched: Seq[(String, String)],
-             fields: Seq[String], k: Int,
-             boosts: Map[String, Double] = Map.empty): DataFrame = {
-    val spark = engine.store.spark
-    if (matched.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val stats = engine.termStats(matched, boosts)
-    if (stats.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val statsMap = stats.map(s => (s.field, s.term) -> (s.idf, s.avgdl)).toMap
-    val k1 = bm25.k1; val b = bm25.b; val kk = k
-
-    def cursorsOf(
-        group: Iterable[(String, String, Int, Long, Array[Byte], Array[Byte])]): Array[TermCursor] =
-      group.toSeq
-        .flatMap { case (f, t, seg, _, blocks, blob) =>
-          statsMap.get((f, t)).map { case (idf, avgdl) =>
-            new TermCursor(f, t, seg, idf, avgdl, k1, b,
-              new PostingCodec.Cursor(blob, PostingCodec.decodeBlocks(blocks)))
-          }
-        }
-        .sortBy(c => (c.field, c.term, c.seg)).toArray
-
-    // ~8 bytes/posting is conservative for the varint triplets + block meta
-    val estBytes = stats.map(_.df).sum * 8
-    if (estBytes <= engine.store.cfg.driverWandMaxBytes) {
-      // blob rows come from the engine's LRU — a warm repeat query runs
-      // zero Spark jobs, mirroring the reference's resident-index serving.
-      // heap.result() is already (score desc, doc_id asc)-sorted and ≤ k,
-      // so the result is a plain LocalRelation (collect needs no job).
-      //
-      // Shard groups hold pairwise-DISJOINT docId ranges (shard = docId /
-      // span), so they are scored CONCURRENTLY on the driver pool — the
-      // sequential walk left every other core idle for the whole scoring
-      // loop (guide §2.6, idle capacity). Each group gets its own heap;
-      // the sequential run's cross-group θ carry-over is kept through the
-      // monotone [[SharedTheta]] floor (strict-<θ pruning ⇒ exact), and
-      // the merged top-k of per-group top-ks equals the global top-k under
-      // the (score desc, docId asc) total order. Pool size = the session's
-      // defaultParallelism — never a hard-coded core count.
-      val groups = engine.fetchShardRows(matched)
-        .groupBy(_._4).toArray.sortBy(_._1).map(_._2)
-      val tomb = engine.cachedTombstones()
-      val par = math.max(1, spark.sparkContext.defaultParallelism)
-      val heap = new BoundedHitHeap(kk)
-      if (groups.length <= 1 || par <= 1) {
-        groups.foreach { g =>
-          val cursors = cursorsOf(g)
-          if (cursors.nonEmpty) WandExecutor.runWand(cursors, tomb, heap)
-        }
-      } else {
-        val shared = new SharedTheta
-        val pool = DriverPool(par)
-        val futs = groups.map { g =>
-          pool.submit(new java.util.concurrent.Callable[BoundedHitHeap] {
-            def call(): BoundedHitHeap = {
-              val h = new BoundedHitHeap(kk, shared)
-              val cursors = cursorsOf(g)
-              if (cursors.nonEmpty) WandExecutor.runWand(cursors, tomb, h)
-              h
-            }
-          })
-        }
-        futs.foreach(_.get().result().foreach { case (d, s) => heap.offer(d, s) })
-      }
-      heap.result().toDF("doc_id", "score")
-    } else {
-      val shardRows = engine.matchedShards(matched)
-        .select($"field", $"term", $"seg", $"shard", $"blocks", $"blob")
-        .as[(String, String, Int, Long, Array[Byte], Array[Byte])]
-      val statsB = spark.sparkContext.broadcast(statsMap)
-      val tombB = spark.sparkContext.broadcast(engine.cachedTombstones())
-      // Hash-exchange on shard colocates each docId range's term lists, then
-      // a partition-local sort on shard lets the task STREAM one shard group
-      // at a time (the same group-walk pattern as ShardEncoder): task memory
-      // is one shard's matched rows (≤ |matched| × |segments|), never the
-      // whole shuffle partition — a hot term's partition at 100× scale would
-      // otherwise hold hundreds of MB of blobs as JVM objects.
-      val partials = shardRows
-        .repartition(col("shard"))
-        .sortWithinPartitions("shard")
-        .mapPartitions { rows =>
-          val st = statsB.value
-          val tomb = tombB.value
-          val heap = new BoundedHitHeap(kk)
-          val group = new scala.collection.mutable.ArrayBuffer[
-            (String, String, Int, Long, Array[Byte], Array[Byte])]()
-          var curShard = Long.MinValue
-          def flush(): Unit = if (group.nonEmpty) {
-            val cursors = group.iterator.flatMap { case (f, t, seg, _, blocks, blob) =>
-              st.get((f, t)).map { case (idf, avgdl) =>
-                new TermCursor(f, t, seg, idf, avgdl, k1, b,
-                  new PostingCodec.Cursor(blob, PostingCodec.decodeBlocks(blocks)))
-              }
-            }.toArray.sortBy(c => (c.field, c.term, c.seg))
-            if (cursors.nonEmpty) WandExecutor.runWand(cursors, tomb, heap)
-            group.clear()
-          }
-          rows.foreach { r =>
-            if (r._4 != curShard) { flush(); curShard = r._4 }
-            group += r
-          }
-          flush()
-          heap.result().iterator
-        }.toDF("doc_id", "score")
-      partials.orderBy(desc("score"), asc("doc_id")).limit(k)
-    }
-  }
-}
-
 private[search] object WandExecutor {
 
-  /** Block-max WAND main loop over one shard's cursors. Static so the
-    * mapPartitions closure never captures the SparkSession.
+  /** Block-max WAND main loop over one shard group's cursors. Static so
+    * the fused job's closure never captures the SparkSession.
     *
     * Round-6 shape (results identical — pruning only ever skips docs whose
     * block-bounded score is STRICTLY below θ, and every evaluated doc sums
@@ -165,7 +44,7 @@ private[search] object WandExecutor {
     *    pivotDoc+1, so a cold block is skipped once, not re-proven per doc;
     *  - `tomb.isEmpty` is hoisted out of the evaluation loop (the common
     *    case boxed a Long per evaluated doc in `Map.get`). */
-  def runWand(cursors: Array[TermCursor], tomb: Map[Long, Int],
+  def runWand(cursors: Array[TermCursor], tomb: collection.Map[Long, Int],
               heap: BoundedHitHeap): Unit = {
     cursors.foreach(_.init())
     val order: Array[TermCursor] = cursors.filter(!_.exhausted)
@@ -288,7 +167,7 @@ private[search] object WandExecutor {
     * scores are the identical per-posting contributions, so the top-k (with
     * the (score desc, docId asc) tie rule) matches the generic loop
     * exactly. */
-  private def runWandSingle(c: TermCursor, tomb: Map[Long, Int],
+  private def runWandSingle(c: TermCursor, tomb: collection.Map[Long, Int],
                             heap: BoundedHitHeap): Unit = {
     val noTomb = tomb.isEmpty
     while (!c.exhausted) {
@@ -313,7 +192,7 @@ private[search] object WandExecutor {
 
 /** One query term's posting cursor with BM25 bounds. */
 private[search] final class TermCursor(
-    val field: String, val term: String, val seg: Int,
+    val seg: Int,
     idf: Double, avgdl: Double, k1: Double, b: Double,
     val cursor: PostingCodec.Cursor) {
 
@@ -380,14 +259,8 @@ private[search] final class TermCursor(
   }
 }
 
-/** Bounded top-k collector under the order (score desc, doc_id asc) — a
-  * primitive-array binary min-heap whose root is the WORST kept hit.
-  * Replaces the tuple-boxing PriorityQueue: `offer` is the innermost call
-  * of every WAND/exhaustive scoring loop (one call per surviving posting),
-  * and the old path allocated a tuple per offer plus two tuples per
-  * comparison inside `Ordering.by`. */
 /** Monotone pruning floor SHARED by the heaps of concurrently-scored shard
-  * groups (see [[WandExecutor.search]]'s driver branch): each group's heap
+  * groups on the driver pool (see [[SearchEngine]]): each group's heap
   * publishes its local k-th-best score once full, and every group prunes
   * against the max published so far. Safe because a subset's k-th best
   * never exceeds the union's k-th best, and pruning is strict-<θ — so a
@@ -407,23 +280,57 @@ private[search] final class SharedTheta {
   }
 }
 
-/** Shared daemon pools for driver fast-path scoring, keyed by size. The
-  * size is always derived from the session's `defaultParallelism` (the
-  * `local[N]` core count), never hard-coded, so the bench's 2-core rep
-  * scores with 2 driver threads and the 32-core rep with 32 — driver
-  * parallelism scales exactly like executor parallelism. */
-private[search] object DriverPool {
-  private val pools =
-    scala.collection.concurrent.TrieMap.empty[Int, java.util.concurrent.ExecutorService]
-  def apply(n: Int): java.util.concurrent.ExecutorService =
-    pools.getOrElseUpdate(n, java.util.concurrent.Executors.newFixedThreadPool(n,
-      (r: Runnable) => {
-        val t = new Thread(r, s"graft-driver-score-$n")
-        t.setDaemon(true)
-        t
-      }))
+/** The one shared daemon pool for driver-side scoring, created on first
+  * use and grown to the largest parallelism asked for. Callers pass the
+  * session's `defaultParallelism` (the `local[N]` core count), never a
+  * hard-coded count, so driver scoring scales like executor parallelism;
+  * idle threads time out, so the pool costs nothing between queries. */
+private[graft] object DriverPool {
+  import java.util.concurrent._
+
+  private var pool: ThreadPoolExecutor = _
+
+  private def executor(par: Int): ThreadPoolExecutor = synchronized {
+    if (pool == null) {
+      pool = new ThreadPoolExecutor(par, par, 30, TimeUnit.SECONDS,
+        new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+          val t = new Thread(r, "graft-driver-score")
+          t.setDaemon(true)
+          t
+        })
+      pool.allowCoreThreadTimeOut(true)
+    } else if (par > pool.getMaximumPoolSize) {
+      pool.setMaximumPoolSize(par)
+      pool.setCorePoolSize(par)
+    }
+    pool
+  }
+
+  /** Runs `unit(0) … unit(n - 1)` on up to `par` threads and returns their
+    * results in unit order; one unit, or `par` ≤ 1, runs inline. The first
+    * unit to fail cancels the rest, and its exception reaches the caller
+    * as thrown (not wrapped in an `ExecutionException`). */
+  def run[T: scala.reflect.ClassTag](n: Int, par: Int)(unit: Int => T): Array[T] = {
+    if (n <= 1 || par <= 1) return Array.tabulate(n)(unit)
+    val done = new ExecutorCompletionService[(Int, T)](executor(par))
+    val futs = (0 until n).map(u => done.submit(() => (u, unit(u))))
+    val out = new Array[T](n)
+    try (0 until n).foreach { _ =>
+      val (u, r) =
+        try done.take().get()
+        catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
+      out(u) = r
+    } finally futs.foreach(_.cancel(true)) // no-op for finished units
+    out
+  }
 }
 
+/** Bounded top-k collector under the order (score desc, doc_id asc) — a
+  * primitive-array binary min-heap whose root is the WORST kept hit.
+  * Replaces the tuple-boxing PriorityQueue: `offer` is the innermost call
+  * of every WAND/exhaustive scoring loop (one call per surviving posting),
+  * and the old path allocated a tuple per offer plus two tuples per
+  * comparison inside `Ordering.by`. */
 private[search] final class BoundedHitHeap(k: Int, shared: SharedTheta = null) {
   private val cap = math.max(k, 0)
   private val ids = new Array[Long](math.max(cap, 1))

@@ -436,6 +436,23 @@ class EdgeSpec extends AnyFunSuite {
     assert(!third.map(_._1).contains(first.head._1), "cache must invalidate on delete")
   }
 
+  test("driver pool: a failing unit surfaces its own exception type and cancels the rest") {
+    import graft.search.DriverPool
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[java.io.IOException] {
+      DriverPool.run(64, 2) { u =>
+        started.incrementAndGet()
+        if (u == 0) throw new java.io.IOException("unit 0 failed")
+        Thread.sleep(50)
+        u
+      }
+    }
+    assert(e.getMessage == "unit 0 failed")
+    Thread.sleep(400) // uncancelled, ≥ 2 threads would start ≥ 16 more units meanwhile
+    assert(started.get < 12, s"the remaining units must be cancelled; ${started.get} started")
+    assert(DriverPool.run(8, 2)(_ * 2).toSeq == (0 until 8).map(_ * 2), "the pool must stay usable")
+  }
+
   test("commit-field exact lookup (40-hex unique terms)") {
     val docs = CorpusGen.generate(spark, 50, seed = 12).collect().toSeq
     val store = new IndexStore(spark, TestSpark.tempDir("commit"), IndexConfig(shardSpan = 64))

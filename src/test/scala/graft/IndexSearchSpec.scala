@@ -83,20 +83,90 @@ class IndexSearchSpec extends AnyFunSuite {
     assertMatchesOracle("import class def val", Seq("content"), mode = SearchMode.And)
   }
 
+  /** Asserts `eng` returns exactly the oracle's top-k over `docs`: same
+    * ranks and bit-identical scores. */
+  private def assertExact(eng: SearchEngine, docs: Seq[CorpusDoc], q: String, fields: Seq[String],
+                          beginsWith: Boolean, mode: SearchMode, k: Int = 10): Unit = {
+    val oracle =
+      if (mode == SearchMode.And && beginsWith) {
+        // AND under expansion: every query term needs >= 1 matched expansion
+        // (the oracle's AND counts matched index terms instead)
+        val expansions = graft.analysis.Analyzer.tokenize(q).distinct.map(p => eng.expandPrefix(p, fields).toSet)
+        val ok = docs.filter(d => expansions.forall(_.exists { case (f, t) =>
+          graft.analysis.Analyzer.tokenize(CorpusDoc.fieldValue(d, f)).contains(t) })).map(_.doc_id).toSet
+        OracleScorer.search(docs, q, fields, beginsWith, docs.size, params = cfg.bm25)
+          .filter(h => ok(h.doc_id)).take(k)
+      } else OracleScorer.search(docs, q, fields, beginsWith, k,
+        andSemantics = mode == SearchMode.And, cfg.bm25)
+    val got = eng.search(q, fields, beginsWith, k, mode)
+      .collect().map(r => Hit(r.getLong(0), r.getDouble(1))).toSeq
+    assert(got == oracle, s"[$q] $mode bw=$beginsWith fields=$fields\n got=$got\n exp=$oracle")
+  }
+
+  private val distQueries = Seq(
+    ("import", Seq("content"), false), ("import class scala", Seq("content"), false),
+    ("the license apache def", Seq("content"), false), ("imp cla", Seq("content"), true),
+    ("import scala org-001/repo-010", CorpusDoc.Fields, false), ("sc im", CorpusDoc.Fields, true))
+
   test("distributed paths (fast path disabled) rank-identical to oracle") {
     val distStore = new graft.index.IndexStore(spark,
       TestSpark.tempDir("dist"), cfg.copy(driverWandMaxBytes = 0))
     distStore.createSegment(corpusDS)
     val distEngine = new SearchEngine(distStore)
     Seq(SearchMode.Wand, SearchMode.Or, SearchMode.And).foreach { mode =>
-      Seq("import", "import class scala", "the license apache def").foreach { q =>
-        val oracle = OracleScorer.search(corpusLocal, q, Seq("content"), k = 10,
-          andSemantics = mode == SearchMode.And)
-        val got = distEngine.search(q, Seq("content"), k = 10, mode = mode)
-          .collect().map(r => Hit(r.getLong(0), r.getDouble(1))).toSeq
-        assert(got.map(_.doc_id) == oracle.map(_.doc_id), s"dist rank for [$q] $mode")
-        got.zip(oracle).foreach { case (g, o) => assert(math.abs(g.score - o.score) <= 1e-5) }
+      distQueries.foreach { case (q, fields, bw) =>
+        assertExact(distEngine, corpusLocal, q, fields, bw, mode)
       }
+    }
+  }
+
+  test("two segments with deletes: both paths, both sides of the tombstone bound, exact to oracle") {
+    val dir = TestSpark.tempDir("dist-del")
+    val seed = new IndexStore(spark, dir, cfg)
+    seed.createSegment(spark.createDataset(corpusLocal.take(200)))
+    seed.add(spark.createDataset(corpusLocal.drop(200)))
+    val victims = corpusLocal.map(_.doc_id).filter(d => d % 7 == 3)
+    seed.delete(victims)
+    val live = corpusLocal.filterNot(d => victims.contains(d.doc_id))
+    Seq(cfg, cfg.copy(driverWandMaxBytes = 0), cfg.copy(maxDriverTombstones = 0),
+        cfg.copy(driverWandMaxBytes = 0, maxDriverTombstones = 0)).foreach { c =>
+      val eng = new SearchEngine(new IndexStore(spark, dir, c))
+      assert(eng.store.segments.size == 2)
+      assert(eng.tombstonesSmall == (c.maxDriverTombstones > 0))
+      Seq(SearchMode.Wand, SearchMode.Or, SearchMode.And).foreach { mode =>
+        distQueries.foreach { case (q, fields, bw) => assertExact(eng, live, q, fields, bw, mode) }
+      }
+    }
+  }
+
+  test("AND with 64, 65 and 72 terms (and 65 prefixes) on the driver and in the fused job") {
+    // doc i < 80 lacks term i; docs 80..99 hold all 80 terms; tfs vary
+    val terms = (0 until 80).map(i => f"wt$i%02d")
+    val docs = (0 until 100).map { i =>
+      val body = terms.zipWithIndex.collect {
+        case (t, j) if j != i => Seq.fill(1 + (i + j) % 3)(t).mkString(" ")
+      }
+      CorpusDoc(i.toLong, "r", s"p$i", "c" * 40, "en", body.mkString(" "))
+    }
+    val dir = TestSpark.tempDir("wideand")
+    val base = IndexConfig(shardSpan = 16, fields = Seq("content"))
+    new IndexStore(spark, dir, base).createSegment(spark.createDataset(docs))
+    Seq(base, base.copy(driverWandMaxBytes = 0)).foreach { c =>
+      val eng = new SearchEngine(new IndexStore(spark, dir, c))
+      Seq(64, 65, 72).foreach { n =>
+        val q = terms.take(n).mkString(" ")
+        val oracle = OracleScorer.search(docs, q, Seq("content"), k = 100, andSemantics = true)
+        assert(oracle.map(_.doc_id).sorted == (n.toLong until 100L)) // docs lacking a query term drop
+        assertExact(eng, docs, q, Seq("content"), beginsWith = false, SearchMode.And, k = 100)
+      }
+      // 65 prefix terms: "wt0" expands to wt00..wt09, the rest to themselves;
+      // AND needs every query term matched, so docs 0..63 drop
+      val q = ("wt0" +: terms.take(64)).mkString(" ")
+      val expected = OracleScorer.search(docs, q, Seq("content"), beginsWith = true, k = 100)
+        .filter(_.doc_id >= 64)
+      val got = eng.search(q, Seq("content"), beginsWith = true, k = 100, mode = SearchMode.And)
+        .collect().map(r => Hit(r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == expected, s"65-prefix AND\n got=$got\n exp=$expected")
     }
   }
 

@@ -1,0 +1,46 @@
+package graft
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+/** Counts the Spark jobs a block of driver code runs, and the stages of
+  * those jobs that ran tasks (stages skipped for reused shuffle output do
+  * not count). The block runs under a fresh job group; afterwards a one-task
+  * fence job is submitted, and since the listener bus delivers events in
+  * order, seeing the fence start means every event of the block arrived. */
+object JobCounter {
+
+  final case class Counts(jobs: Int, stages: Int)
+
+  def apply[T](spark: SparkSession)(body: => T): (T, Counts) = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val ran = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull, e.stageIds))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        ran.add(e.stageInfo.stageId); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.asScala.exists(_._1 == group + "-fence")) {
+        assert(System.currentTimeMillis() < deadline, "listener bus did not deliver the fence job")
+        Thread.sleep(10)
+      }
+      val mine = jobs.asScala.filter(_._1 == group).toSeq
+      val stages = mine.flatMap(_._2).toSet
+      (r, Counts(mine.size, ran.asScala.count(stages.contains)))
+    } finally sc.removeSparkListener(listener)
+  }
+}

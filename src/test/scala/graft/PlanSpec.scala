@@ -6,10 +6,11 @@ import graft.index.IndexStore
 import graft.search.{SearchEngine, SearchMode}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Physical-plan audits: the scale story only holds if the plans are what we
-  * think they are. Checks parquet filter pushdown on the term dictionary,
-  * broadcast of the tiny stats relation, and top-k via
-  * TakeOrderedAndProject (no global sort). */
+/** Plan audits: the scale story only holds if the plans are what we think
+  * they are. Checks parquet filter pushdown on the postings and the term
+  * dictionary, and — with a Spark listener, not plan strings — that a
+  * distributed read is ONE job of two stages and a warm driver read runs
+  * none. */
 class PlanSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -26,7 +27,8 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
 
   test("exact-term search pushes term equality into the parquet scan") {
-    val plan = physicalPlan(engine.search("import", Seq("content"), k = 10))
+    // the scan the fused job (and a driver LRU miss) reads
+    val plan = physicalPlan(engine.shardScan(Seq(("content", "import"))))
     assert(plan.contains("PushedFilters"), plan.take(2000))
     assert(plan.contains("In(term") || plan.contains("EqualTo(term") ||
       plan.contains("IsNotNull(term"), "term filter must reach the scan:\n" + plan.take(3000))
@@ -45,49 +47,44 @@ class PlanSpec extends AnyFunSuite {
       "range predicate must be pushed:\n" + plan.take(3000))
   }
 
-  test("scoring uses a broadcast join for term stats and TakeOrderedAndProject for top-k") {
-    val df = engine.search("import class", Seq("content"), k = 10)
-    val plan = physicalPlan(df)
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      "stats join must broadcast:\n" + plan.take(3000))
-    assert(plan.contains("TakeOrderedAndProject"),
-      "top-k must not materialize a global sort:\n" + plan.take(3000))
-    assert(!plan.contains("SortExec") || !plan.contains("GlobalLimit"),
-      "no global sort expected")
+  private val shapes = Seq(("import class", SearchMode.Or, false), ("import class", SearchMode.And, false),
+    ("import the", SearchMode.Wand, false), ("im cla", SearchMode.Or, true))
+
+  /** Jobs and stages of a repeat of each query shape (the first run fills
+    * the df and prefix-expansion caches). */
+  private def repeatCounts(eng: SearchEngine): Seq[JobCounter.Counts] = shapes.map { case (q, mode, bw) =>
+    val first = eng.search(q, Seq("content"), bw, 10, mode).collect().toSeq
+    assert(first.nonEmpty, s"[$q] $mode must hit")
+    val (again, counts) = JobCounter(spark)(eng.search(q, Seq("content"), bw, 10, mode).collect().toSeq)
+    assert(again == first)
+    counts
   }
 
-  test("distributed WAND exchanges on shard and sorts within partitions (streaming group-walk)") {
-    val df = engine.search("import the", Seq("content"), k = 10, mode = SearchMode.Wand)
-    val plan = physicalPlan(df)
-    assert(plan.contains("hashpartitioning(shard"),
-      "WAND stage must exchange on shard:\n" + plan.take(3000))
-    assert(plan.matches("(?s).*Sort \\[shard#\\d+L? ASC NULLS FIRST\\], false.*"),
-      "WAND stage must sort WITHIN partitions on shard (streamed group-walk):\n" + plan.take(3000))
+  test("distributed Or/And/Wand/prefix search is ONE Spark job of two stages") {
+    repeatCounts(engine).zip(shapes).foreach { case (c, shape) =>
+      assert(c == JobCounter.Counts(1, 2), s"$shape ran $c")
+    }
   }
 
-  test("OR-mode exhaustive aggregation carries no per-doc set aggregate") {
-    val df = engine.search("import class", Seq("content"), k = 10, mode = SearchMode.Or)
-    val plan = physicalPlan(df)
-    assert(!plan.contains("collect_set"),
-      "OR mode must not aggregate a term set per doc:\n" + plan.take(3000))
+  test("past the tombstone bound, deletes ride the same shuffle: still one job of two stages") {
+    val store = new IndexStore(spark, TestSpark.tempDir("plan-tomb"),
+      IndexConfig(shardSpan = 64, fields = Seq("content"), maxDriverTombstones = 0))
+    store.createSegment(CorpusGen.generate(spark, 120, seed = 31))
+    store.delete(Seq(3L, 70L))
+    val eng = new SearchEngine(store)
+    assert(!eng.tombstonesSmall)
+    repeatCounts(eng).zip(shapes).foreach { case (c, shape) =>
+      assert(c == JobCounter.Counts(1, 2), s"$shape ran $c")
+    }
   }
 
-  test("AND-mode aggregation is a single shuffle (bit_or mask, no distinct rewrite)") {
-    val df = engine.search("import class", Seq("content"), k = 10, mode = SearchMode.And)
-    val plan = physicalPlan(df)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1,
-      s"AND plan must shuffle exactly once (got $exchanges):\n" + plan.take(3000))
-    assert(!plan.contains("count(distinct"), "AND must not use a distinct aggregate")
-  }
-
-  test("whole-stage codegen covers the BM25 scoring expression (final AQE plan)") {
-    val df = engine.search("import the", Seq("content"), k = 10)
-    df.collect() // AQE finalizes the plan on execution
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("isFinalPlan=true"), plan.take(500))
-    // in the final-plan rendering codegen stages print as "*(n) Operator"
-    assert(plan.contains("WholeStageCodegen") || plan.contains("*("), plan.take(3000))
+  test("warm driver-path repeat of Or/And/Wand/prefix runs zero Spark jobs") {
+    val store = new IndexStore(spark, TestSpark.tempDir("plan-driver"),
+      IndexConfig(shardSpan = 64, fields = Seq("content")))
+    store.createSegment(CorpusGen.generate(spark, 120, seed = 31))
+    repeatCounts(new SearchEngine(store)).zip(shapes).foreach { case (c, shape) =>
+      assert(c == JobCounter.Counts(0, 0), s"$shape ran $c")
+    }
   }
 
   test("fused curate is ONE parquet scan, zero shuffles, inside codegen") {

@@ -149,25 +149,29 @@ class QuerySetSpec extends AnyFunSuite {
 
   test("DriverScoreMap == reference HashMap under random collisions and growth") {
     val rnd = new scala.util.Random(4242)
-    (0 until 5).foreach { _ =>
-      val m = new graft.search.DriverScoreMap(16) // tiny: force many growths
-      val ref = scala.collection.mutable.HashMap.empty[Long, (Double, Long)]
+    (0 until 5).foreach { round =>
+      // 0..3 mask words: no mask (OR), one word, and wide AND masks
+      val words = round % 4
+      val m = new graft.search.DriverScoreMap(16, words) // tiny: force many growths
+      val ref = scala.collection.mutable.HashMap.empty[Long, (Double, Set[Int])]
       (0 until 20000).foreach { _ =>
         // adversarial keys: sequential ranges + sparse larges
         val key = if (rnd.nextBoolean()) rnd.nextInt(3000).toLong
                   else rnd.nextLong().abs
         val delta = rnd.nextDouble()
-        val bit = 1L << rnd.nextInt(64)
-        m.add(key, delta, bit)
-        val (s0, b0) = ref.getOrElse(key, (0.0, 0L))
-        ref(key) = (s0 + delta, b0 | bit)
+        val mask = new Array[Long](words)
+        val bit = if (words == 0) -1 else rnd.nextInt(64 * words)
+        if (bit >= 0) mask(bit >> 6) |= 1L << (bit & 63)
+        m.add(key, delta, mask)
+        val (s0, b0) = ref.getOrElse(key, (0.0, Set.empty[Int]))
+        ref(key) = (s0 + delta, if (bit >= 0) b0 + bit else b0)
       }
       assert(m.size == ref.size)
       var seen = 0
-      m.foreach { (k, s, b) =>
+      m.foreach { (k, s, bits) =>
         seen += 1
         val (rs, rb) = ref(k)
-        assert(s == rs && b == rb, s"entry mismatch at $k")
+        assert(s == rs && bits == rb.size, s"entry mismatch at $k")
       }
       assert(seen == ref.size)
     }

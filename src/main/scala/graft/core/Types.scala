@@ -116,9 +116,10 @@ final case class IndexConfig(
       * data) set false and pay one re-tokenization in the sampler. */
     cacheBuild: Boolean = true,
     /** Tombstone-row bound above which the driver-side tombstone map is
-      * never collected: query paths switch to a distributed anti-join
-      * against the tombstone table, so a bulk delete of 10^9 ids cannot OOM
-      * the driver. 4M entries ≈ tens of MB on the driver — safe headroom. */
+      * never collected: queries run distributed, against tombstones held
+      * on the executors beside the postings, so a bulk delete of 10^9 ids
+      * cannot OOM the driver. 4M entries ≈ tens of MB on the driver — safe
+      * headroom. */
     maxDriverTombstones: Long = 4L << 20,
     /** LRU budget (bytes) for the driver-side posting-blob cache serving the
       * driver fast paths — the bounded analogue of the reference's

@@ -317,9 +317,10 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       // sampler's extra full pass over the input — is dropped outright
       // (guide §2.4/§8: never shuffle the heavy payload to recompute an
       // order it already has). The disjointness probe is one doc_id-only
-      // job (columns pruned at the source). Unclustered inputs keep the
-      // range shuffle.
-      val storedCorpus = rawParquetInput(corpus) match {
+      // job (columns pruned at the source). A bare-parquet input whose
+      // files' footers show disjoint ranges is stored by file copy instead
+      // (no job at all). Unclustered inputs keep the range shuffle.
+      val storedCorpus = rawParquetInput(corpus).filter(footerDocIdRangesDisjoint) match {
         case Some(files) => copyFilesStage(segId, "corpus", files, resume)
         case None => runStage(segId, "corpus", Seq("input"), resume) {
           if (docIdRangesDisjoint(corpus))
@@ -363,6 +364,35 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
         }
       }.collect().sortBy(_._1)
     (1 until ranges.length).forall(i => ranges(i - 1)._2 < ranges(i)._1)
+  }
+
+  /** True when the parquet `files` hold pairwise-disjoint doc_id ranges —
+    * the condition for storing them by file copy, which must not lose the
+    * doc store's range clustering. Reads each file's range from its
+    * footer's row-group min/max statistics on the driver, fanned out like
+    * [[parquetFileMetrics]]: no Spark job. A non-empty file without doc_id
+    * statistics counts as overlapping. */
+  private def footerDocIdRangesDisjoint(files: Seq[String]): Boolean = {
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration.Duration
+    import scala.jdk.CollectionConverters._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    // per file: its row groups' (min, max), None for a group without stats
+    val futures = files.map { f => Future {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), hconf)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { block =>
+        block.getColumns.asScala.find(_.getPath.toDotString == "doc_id")
+          .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
+          .map(st => (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+            st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
+      } finally reader.close()
+    }}
+    val groups = Await.result(Future.sequence(futures), Duration.Inf).filter(_.nonEmpty)
+    groups.forall(_.forall(_.isDefined)) && {
+      val ranges = groups.map(g => (g.flatten.map(_._1).min, g.flatten.map(_._2).max)).sortBy(_._1)
+      (1 until ranges.length).forall(i => ranges(i - 1)._2 < ranges(i)._1)
+    }
   }
 
   /** Merges every committed segment with ≤ `maxDocs` docs into ONE new
@@ -451,6 +481,25 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
         .withColumn("seg", lit(s.id))
     }.reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataset[PostingShard].toDF().withColumn("seg", lit(0)))
+
+  /** One segment's posting shards `(field, term, shard, blocks, blob)`,
+    * read with an explicit schema (no schema-inference job). */
+  private[graft] def segmentPostings(segId: Int): DataFrame = {
+    val cols = Seq("field", "term", "shard", "blocks", "blob")
+    val schema = org.apache.spark.sql.Encoders.product[PostingShard].schema
+    spark.read.schema(org.apache.spark.sql.types.StructType(cols.map(schema(_))))
+      .parquet(p(s"seg-$segId", "postings").toString)
+  }
+
+  /** Each committed segment's id with the modification time of its
+    * postings done-marker — an identity that survives [[compact]], which
+    * rewrites the store with a fresh `seg-0`. Driver-side FS metadata only. */
+  private[graft] def postingsStamps(): Seq[(Int, Long)] =
+    segments.map { s =>
+      val marker = p(s"seg-${s.id}", "_checkpoints", "postings.json")
+      val stamped = if (fs.exists(marker)) marker else p(s"seg-${s.id}", "postings")
+      s.id -> fs.getFileStatus(stamped).getModificationTime
+    }
 
   /** Stored corpus rows across segments (with `seg`). */
   def corpus(): DataFrame =
@@ -544,8 +593,8 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       .toDF("t_doc_id", "t_max_seg")
 
   /** Raw tombstone rows (doc_id, max_seg), one per delete, never
-    * aggregated — what the search layer shuffles beside the postings past
-    * the driver bound. */
+    * aggregated — what the search layer partitions by shard and holds
+    * beside the resident postings past the driver bound. */
   def tombstonesDF(): DataFrame = {
     val tp = p("tombstones")
     if (!fs.exists(tp)) spark.emptyDataset[Tombstone].toDF()

@@ -2,9 +2,11 @@ package graft.search
 
 import graft.core.Bm25Params
 import graft.index.PostingCodec
-import org.apache.spark.HashPartitioner
+import org.apache.spark.Partitioner
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
@@ -12,8 +14,8 @@ import scala.collection.mutable
   * of the query terms it expands from (⌈terms/64⌉ longs; empty otherwise). */
 private[search] final case class PairStat(idf: Double, avgdl: Double, mask: Array[Long])
 
-/** Everything the kernel needs of one query. Plain data: the fused job
-  * ships it to executors inside its closure. */
+/** Everything the kernel needs of one query. Plain data: the distributed
+  * read ships it to executors inside its closure. */
 private[search] final case class KernelQuery(stats: Map[(String, String), PairStat],
                                              mode: SearchMode, terms: Int, k: Int,
                                              bm25: Bm25Params) {
@@ -39,7 +41,8 @@ private[search] object KernelQuery {
   * against the heap's pruning floor.
   *
   * The kernel runs on the driver pool for small candidate sets
-  * ([[SearchEngine]]) and inside [[fused]] on executors otherwise. */
+  * ([[SearchEngine]]) and otherwise on executors, over postings held
+  * resident there ([[residentPostings]], [[distributedTopK]]). */
 private[search] object ScoringKernel {
 
   /** One posting shard row: (field, term, seg, shard, blocks, blob). */
@@ -100,56 +103,134 @@ private[search] object ScoringKernel {
     }
   }
 
-  /** Distributed top-k as ONE Spark job of two stages. The map stage scans
-    * the pruned postings `scan` (field, term, seg, shard, blocks, blob),
-    * drops rows of unmatched pairs (prefix expansions are not a field ×
-    * term cross product) and keys the rest by shard. With `tombRows`
-    * (doc_id, max_seg) — the tombstone set past the driver bound — the raw
-    * tombstone rows ride the same shuffle, keyed by their doc's shard, so
-    * each group sees exactly its own range's deletes; otherwise the driver
-    * map `tomb` is broadcast. The reduce side sorts on shard and streams one
-    * shard group at a time through [[score]] into one heap per partition;
-    * the driver merges the ≤ k × partitions survivors. */
-  def fused(scan: DataFrame, tombRows: Option[DataFrame], tomb: Map[Long, Int],
-            q: KernelQuery, shardSpan: Long, partitions: Int): Seq[(Long, Double)] = {
-    type Keyed = (Long, Either[(Long, Int), ShardRow])
-    val sc = scan.sparkSession.sparkContext
-    val posts: RDD[Keyed] = scan.rdd.flatMap { r =>
-      val key = (r.getString(0), r.getString(1))
-      if (!q.stats.contains(key)) None
-      else Some(r.getLong(3) -> Right((key._1, key._2, r.getInt(2), r.getLong(3),
-        r.getAs[Array[Byte]](4), r.getAs[Array[Byte]](5))))
+  /** Deleted docId → newest segment it is deleted from. */
+  type TombMap = collection.Map[Long, Int]
+
+  /** A store version's tombstones as a distributed read ships them: a
+    * broadcast map under the driver bound, resident maps past it, or none. */
+  type Tombs = (Option[Broadcast[TombMap]], Option[RDD[TombMap]])
+
+  /** One segment's postings `(field, term, shard, blocks, blob)` keyed by
+    * shard, hash-partitioned by `partitioner` and turned into one
+    * [[ResidentPart]] per partition, persisted MEMORY_AND_DISK and
+    * materialized: one job, run once per segment. */
+  def residentPostings(postings: DataFrame, seg: Int, partitioner: Partitioner,
+                       name: String): RDD[ResidentPart] = {
+    // Catalyst's binary rows cross the shuffle: no external Row conversion
+    // before it, and each row serializes as one byte array
+    val rdd = postings.select("field", "term", "shard", "blocks", "blob").queryExecution.toRdd
+      .map(r => r.getLong(2) -> r.copy())
+      .partitionBy(partitioner)
+      .mapPartitions(it => Iterator(ResidentPart(seg, it.map { case (shard, r) =>
+        (r.getUTF8String(0).toString, r.getUTF8String(1).toString, shard, r.getBinary(3), r.getBinary(4))
+      })), preservesPartitioning = true)
+    materialize(rdd, name)
+  }
+
+  /** Tombstone rows `(doc_id, max_seg)` keyed by their doc's shard under
+    * `partitioner` and reduced to each doc's newest segment: one [[TombMap]]
+    * per partition, beside the resident postings of the same shards. */
+  def residentTombstones(rows: DataFrame, shardSpan: Long, partitioner: Partitioner,
+                         name: String): RDD[TombMap] = {
+    val rdd = rows.select("doc_id", "max_seg").rdd
+      .map { r => val d = r.getLong(0); Math.floorDiv(d, shardSpan) -> (d -> r.getInt(1)) }
+      .partitionBy(partitioner)
+      .mapPartitions({ it =>
+        val m = mutable.HashMap.empty[Long, Int]
+        it.foreach { case (_, (d, s)) => m(d) = math.max(s, m.getOrElse(d, s)) }
+        Iterator(m: TombMap)
+      }, preservesPartitioning = true)
+    materialize(rdd, name)
+  }
+
+  private def materialize[T](rdd: RDD[T], name: String): RDD[T] = {
+    rdd.setName(name).persist(StorageLevel.MEMORY_AND_DISK).count()
+    rdd
+  }
+
+  /** Distributed top-k over resident postings: ONE job of ONE stage, one
+    * task per partition. The segments' RDDs share one partitioner, so their
+    * union is narrow, and so is the zip with resident tombstones `large`
+    * (else the broadcast map `small`, if any). Each task looks up the
+    * query's pairs, streams its shard groups in ascending shard order
+    * through [[score]] into one heap, and the driver merges the ≤ k ×
+    * partitions survivors. */
+  def distributedTopK(parts: Seq[RDD[ResidentPart]], tombs: Tombs,
+                      q: KernelQuery): Seq[(Long, Double)] = {
+    if (parts.isEmpty) return Nil
+    val (small, large) = tombs
+    val union = parts.head.sparkContext.union(parts)
+    val partial = large match {
+      case Some(resident) =>
+        union.zipPartitions(resident)((ps, ts) => scorePartition(q, ps, ts.nextOption().getOrElse(Map.empty)))
+      case None =>
+        union.mapPartitions(ps => scorePartition(q, ps, small.fold[TombMap](Map.empty)(_.value)))
     }
-    val rows: RDD[Keyed] = tombRows.fold(posts) { t =>
-      posts.union(t.rdd.map { r =>
-        val d = r.getLong(0)
-        (Math.floorDiv(d, shardSpan), Left((d, r.getInt(1))))
-      })
-    }
-    val tombB = if (tomb.isEmpty) None else Some(sc.broadcast(tomb))
-    val partial = rows.repartitionAndSortWithinPartitions(new HashPartitioner(partitions))
-      .mapPartitions { it =>
-        val small = tombB.fold(Map.empty[Long, Int])(_.value)
-        val heap = new BoundedHitHeap(q.k)
-        val group = mutable.ArrayBuffer.empty[ShardRow]
-        val groupTomb = mutable.HashMap.empty[Long, Int]
-        var cur = Long.MinValue
-        def flush(): Unit = {
-          if (group.nonEmpty) score(q, group, if (groupTomb.isEmpty) small else groupTomb, heap)
-          group.clear(); groupTomb.clear()
-        }
-        it.foreach { case (shard, v) =>
-          if (shard != cur) { flush(); cur = shard }
-          v match {
-            case Right(r) => group += r
-            case Left((d, s)) => groupTomb(d) = math.max(s, groupTomb.getOrElse(d, s))
-          }
-        }
-        flush()
-        heap.result().iterator
-      }.collect()
     val top = new BoundedHitHeap(q.k)
-    partial.foreach { case (d, s) => top.offer(d, s) }
+    partial.collect().foreach { case (d, s) => top.offer(d, s) }
     top.result()
+  }
+
+  private def scorePartition(q: KernelQuery, parts: Iterator[ResidentPart],
+                             tomb: TombMap): Iterator[(Long, Double)] = {
+    val keys = q.stats.keys.toArray
+    val rows = mutable.ArrayBuffer.empty[ShardRow]
+    parts.foreach(p => keys.foreach { case (f, t) => rows ++= p.rows(f, t) })
+    val heap = new BoundedHitHeap(q.k)
+    rows.groupBy(_._4).toArray.sortBy(_._1).foreach { case (_, group) => score(q, group, tomb, heap) }
+    heap.result().iterator
+  }
+}
+
+/** One hash partition of one segment's postings, resident on an executor,
+  * in columns: each (field, term) key once, keys sorted, each key's shard
+  * rows contiguous. Field strings are held once per partition and terms
+  * once per key; a row costs its shard id and two byte-array references. */
+private[search] final class ResidentPart private (seg: Int, fields: Array[String],
+                                                  terms: Array[String], starts: Array[Int],
+                                                  shards: Array[Long], blocks: Array[Array[Byte]],
+                                                  blobs: Array[Array[Byte]]) extends Serializable {
+
+  /** The shard rows of (f, t) in this partition, by binary search. */
+  def rows(f: String, t: String): Iterator[ScoringKernel.ShardRow] = {
+    var lo = 0
+    var hi = terms.length - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val c = fields(mid).compareTo(f) match { case 0 => terms(mid).compareTo(t); case c => c }
+      if (c < 0) lo = mid + 1
+      else if (c > 0) hi = mid - 1
+      else return (starts(mid) until starts(mid + 1)).iterator
+        .map(i => (fields(mid), terms(mid), seg, shards(i), blocks(i), blobs(i)))
+    }
+    Iterator.empty
+  }
+}
+
+private[search] object ResidentPart {
+  private type Row = (String, String, Long, Array[Byte], Array[Byte])
+
+  /** (field, term, shard) order, without a key tuple per comparison. */
+  private val byKey: Ordering[Row] = (a: Row, b: Row) => a._1.compareTo(b._1) match {
+    case 0 => a._2.compareTo(b._2) match { case 0 => java.lang.Long.compare(a._3, b._3); case c => c }
+    case c => c
+  }
+
+  /** Columns of `seg`'s posting rows `(field, term, shard, blocks, blob)`. */
+  def apply(seg: Int, it: Iterator[Row]): ResidentPart = {
+    val rows = it.toArray
+    rows.sortInPlace()(byKey)
+    val field = mutable.HashMap.empty[String, String]
+    val fields = mutable.ArrayBuilder.make[String]
+    val terms = mutable.ArrayBuilder.make[String]
+    val starts = mutable.ArrayBuilder.make[Int]
+    for (i <- rows.indices if i == 0 || rows(i)._1 != rows(i - 1)._1 || rows(i)._2 != rows(i - 1)._2) {
+      fields += field.getOrElseUpdate(rows(i)._1, rows(i)._1)
+      terms += rows(i)._2
+      starts += i
+    }
+    starts += rows.length
+    new ResidentPart(seg, fields.result(), terms.result(), starts.result(),
+      rows.map(_._3), rows.map(_._4), rows.map(_._5))
   }
 }

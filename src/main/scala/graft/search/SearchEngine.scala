@@ -3,6 +3,8 @@ package graft.search
 import graft.analysis.Analyzer
 import graft.core._
 import graft.index.IndexStore
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -35,13 +37,15 @@ object SearchMode {
   *    the driver map): shard rows come from the driver LRU (one pruned scan
   *    on a miss, no Spark job when warm), and the groups score concurrently
   *    on [[DriverPool]] against a shared θ floor.
-  *  - Fused distributed job ([[ScoringKernel.fused]]), otherwise: ONE
-  *    Spark job of two stages. Map stage: postings scan with the field/term
-  *    IN filters pushed into parquet, exact-pair filter in the closure, rows
-  *    keyed by shard (large tombstone sets ride the same shuffle, keyed by
-  *    their doc's shard). Reduce stage: sort on shard, stream one shard
-  *    group at a time through the kernel into one heap per partition. The
-  *    driver merges the ≤ k × partitions survivors.
+  *  - Distributed path, otherwise: each segment's postings are held
+  *    resident on the executors, hash-partitioned by shard under
+  *    `spark.sql.shuffle.partitions` partitions and built once, by the first
+  *    distributed read that needs the segment; tombstones past the driver
+  *    bound are held beside them under the same partitioner. A read is ONE
+  *    job of ONE stage, one task per partition, with no parquet scan and no
+  *    shuffle: each task looks up the query's pairs, streams its shard groups
+  *    through the kernel into one heap, and the driver merges the ≤ k ×
+  *    partitions survivors ([[ScoringKernel.distributedTopK]]).
   *
   * Either way `search` returns a local frame of ≤ k rows: the work is done
   * by the time it returns, and collecting the result runs no job.
@@ -100,12 +104,21 @@ class SearchEngine(val store: IndexStore) {
     val k = key.toLowerCase
     if (k.isEmpty) return Seq.empty
     cachedExpansion("f", k, fields, cap) {
-      val lo = k.substring(0, 1)
-      val hi = (k.charAt(0) + 1).toChar.toString
-      val containsAll = k.distinct.map(c => $"term".contains(c.toString))
-        .reduce(_ && _)
+      // by code point: a supplementary first character is two UTF-16 units,
+      // and a lone surrogate half becomes '?' in UTF-8
+      val first = k.codePointAt(0)
+      val lo = new String(Character.toChars(first))
+      // the successor bounds every lo-led term in UTF-8 (code point) order;
+      // where there is none (a surrogate, or past U+10FFFF), startswith
+      val next = first + 1
+      val range =
+        if (next <= Character.MAX_CODE_POINT && (next < 0xD800 || next > 0xDFFF))
+          $"term" >= lo && $"term" < new String(Character.toChars(next))
+        else $"term".startsWith(lo)
+      val containsAll = k.codePoints().distinct().toArray
+        .map(c => $"term".contains(new String(Character.toChars(c)))).reduce(_ && _)
       cachedTermDf()
-        .filter($"field".isInCollection(fields) && $"term" >= lo && $"term" < hi)
+        .filter($"field".isInCollection(fields) && range)
         .filter(containsAll)
         .select($"field", $"term")
         .orderBy($"term", $"field").limit(cap)
@@ -190,7 +203,6 @@ class SearchEngine(val store: IndexStore) {
   private var fieldStatsC: Map[String, (Long, Long)] = Map.empty
   private var tombstoneC: Map[Long, Int] = Map.empty
   private var tombSmallC: Boolean = true
-  private var tombRowsC: Option[DataFrame] = None
   private var shardSpanC: Long = store.cfg.shardSpan
   private var postingsC: DataFrame = _
   private var termDfC: DataFrame = _
@@ -200,12 +212,11 @@ class SearchEngine(val store: IndexStore) {
     if (t != cacheToken) {
       fieldStatsC = store.fieldStats()
       // size-guard the driver tombstone map: past the configured bound the
-      // map is never collected — the raw tombstone rows join the fused
-      // job's shard shuffle instead (a bulk delete of 10^9 ids must not OOM
-      // the driver)
+      // map is never collected — the distributed read holds the tombstones
+      // resident beside the postings instead (a bulk delete of 10^9 ids
+      // must not OOM the driver)
       tombSmallC = store.tombstoneCount() <= store.cfg.maxDriverTombstones
       tombstoneC = if (tombSmallC) store.tombstoneMap() else Map.empty
-      tombRowsC = if (tombSmallC) None else Some(store.tombstonesDF())
       // tombstones must be keyed by the span the postings were built with
       shardSpanC = store.persistedLayout().fold(store.cfg.shardSpan)(_._1)
       postingsC = store.postings()
@@ -214,8 +225,47 @@ class SearchEngine(val store: IndexStore) {
       blobCacheSize = 0L
       dfCache.clear()
       expandCache.clear()
+      refreshResident()
       cacheToken = t
     }
+  }
+
+  // ---------- executor-resident postings (distributed path) ----------
+  // Each committed segment's postings live on the executors, hash-
+  // partitioned by shard under ONE partitioner — the distributed analogue of
+  // the reference's all-in-RAM index (indexing.go:130-139). A segment's RDD
+  // is built by the first distributed read that needs it and kept across
+  // versions for as long as the manifest lists the segment; the tombstones
+  // are per version. An engine that is dropped leaves its RDDs to Spark's
+  // ContextCleaner, as does a build that finishes after its version was
+  // replaced.
+
+  private val partitioner =
+    new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  /** (segment id, postings marker mtime) — id alone is reused by compact(). */
+  private type SegKey = (Int, Long)
+  private val residentC = scala.collection.mutable.HashMap.empty[SegKey, Resident[RDD[ResidentPart]]]
+  private var segKeysC: Seq[SegKey] = Nil
+  private var tombsC: Resident[ScoringKernel.Tombs] = _
+
+  private def refreshResident(): Unit = {
+    segKeysC = store.postingsStamps()
+    residentC.keySet.diff(segKeysC.toSet).foreach(k => residentC.remove(k).foreach(_.drop()))
+    segKeysC.foreach { case key @ (id, _) =>
+      residentC.getOrElseUpdate(key, new Resident(
+        () => ScoringKernel.residentPostings(store.segmentPostings(id), id, partitioner,
+          s"resident postings seg-$id of ${store.baseDir}"),
+        (rdd: RDD[ResidentPart]) => { rdd.unpersist(blocking = false); () }))
+    }
+    if (tombsC != null) tombsC.drop()
+    val (small, tomb, span) = (tombSmallC, tombstoneC, shardSpanC)
+    tombsC = new Resident(
+      () =>
+        if (!small) (None, Some(ScoringKernel.residentTombstones(store.tombstonesDF(), span,
+          partitioner, s"resident tombstones of ${store.baseDir}")))
+        else if (tomb.isEmpty) (None, None)
+        else (Some(spark.sparkContext.broadcast[ScoringKernel.TombMap](tomb)), None),
+      { case (b, r) => b.foreach(_.unpersist()); r.foreach(_.unpersist(blocking = false)) })
   }
 
   // ---------- driver posting-blob cache ----------
@@ -300,7 +350,7 @@ class SearchEngine(val store: IndexStore) {
 
   private[search] def cachedTermDf(): DataFrame = { refreshIfStale(); termDfC }
   /** Whether the tombstone set fits the driver-map bound; when false, every
-    * query runs the fused distributed job with co-shuffled tombstones. */
+    * query runs distributed, against tombstones held beside the postings. */
   def tombstonesSmall: Boolean = { refreshIfStale(); tombSmallC }
 
   // ---------- scoring ----------
@@ -376,8 +426,8 @@ class SearchEngine(val store: IndexStore) {
       $"term".isInCollection(matched.map(_._2).distinct))
   }
 
-  /** The scan the kernel reads, on the driver and in the fused job: the
-    * bounded postings as [[ScoringKernel.ShardRow]] columns. */
+  /** The scan the driver kernel reads on an LRU miss: the bounded
+    * postings as [[ScoringKernel.ShardRow]] columns. */
   private[graft] def shardScan(matched: Seq[(String, String)]): DataFrame =
     bounded(matched).select($"field", $"term", $"seg", $"shard", $"blocks", $"blob")
 
@@ -392,12 +442,20 @@ class SearchEngine(val store: IndexStore) {
   }
 
   /** Scores `matched` — (field, index term, query term it expands from) —
-    * through the kernel and returns the top-k as a local frame. */
+    * through the kernel and returns the top-k as a local frame. A
+    * distributed read uses stats, resident postings and tombstones of one
+    * store version: if the version moves between the stats and the
+    * snapshot, the read restarts from the new one — at most twice, the first
+    * time when the read itself finds the store changed (bounded, as in
+    * [[fetchShardRows]]). */
   private def topK(qTerms: Seq[String], matched: Seq[(String, String, String)], k: Int,
                    mode: SearchMode, boosts: Map[String, Double] = Map.empty): DataFrame = {
     val pairs = matched.map { case (f, t, _) => (f, t) }.distinct
-    val stats = if (pairs.isEmpty || k <= 0) Nil else termStats(pairs, boosts)
-    val hits =
+    def attempt(retriesLeft: Int): Seq[(Long, Double)] = {
+      // termStats refreshes the caches; a version it moves to past `tok`
+      // sends a distributed read round again
+      val tok = synchronized(cacheToken)
+      val stats = if (pairs.isEmpty || k <= 0) Nil else termStats(pairs, boosts)
       if (stats.isEmpty) Nil
       else {
         val words = KernelQuery.maskWords(mode, qTerms.size)
@@ -414,11 +472,13 @@ class SearchEngine(val store: IndexStore) {
         if (stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes && tombstonesSmall)
           driverTopK(q, pairs)
         else {
-          val (tombRows, tomb, span) = synchronized((tombRowsC, tombstoneC, shardSpanC))
-          ScoringKernel.fused(shardScan(pairs), tombRows, tomb, q, span,
-            spark.conf.get("spark.sql.shuffle.partitions").toInt)
+          val (t, segs, tombs) = synchronized((cacheToken, segKeysC.map(residentC), tombsC))
+          if (t != tok && retriesLeft > 0) attempt(retriesLeft - 1)
+          else ScoringKernel.distributedTopK(segs.map(_.get), tombs.get, q)
         }
       }
+    }
+    val hits = attempt(2)
     // rows under a fixed schema: no encoder to generate code for and no
     // renaming projection to analyze on every read
     spark.createDataFrame(hits.map { case (d, s) => Row(d, s) }.asJava, SearchEngine.HitSchema)
@@ -447,4 +507,15 @@ class SearchEngine(val store: IndexStore) {
 
 private object SearchEngine {
   val HitSchema: StructType = Encoders.product[Hit].schema
+}
+
+/** A value built on first use, once however many threads ask together, and
+  * released by `drop` if it was built. */
+private final class Resident[T](build: () => T, release: T => Unit) {
+  @volatile private var value: Option[T] = None
+  def get: T = value.getOrElse(synchronized {
+    if (value.isEmpty) value = Some(build())
+    value.get
+  })
+  def drop(): Unit = value.foreach(release)
 }

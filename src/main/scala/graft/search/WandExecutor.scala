@@ -12,9 +12,9 @@ import graft.index.PostingCodec
   * Ding/Suel block-max bounds) on its own:
   *  - on the driver pool (small candidate sets), one heap per group, every
   *    heap pruning against the monotone [[SharedTheta]] floor;
-  *  - inside the fused distributed job ([[ScoringKernel.fused]]), where the
-  *    reduce side streams a partition's groups through ONE heap, whose θ
-  *    only tightens as the task progresses.
+  *  - inside the distributed read ([[ScoringKernel.distributedTopK]]),
+  *    where each task streams its partition's groups through ONE heap,
+  *    whose θ only tightens as the task progresses.
   * Either way the merged per-group top-ks equal the global top-k, and the
   * driver merge of ≤ k × groups entries is trivially small.
   *
@@ -26,7 +26,7 @@ import graft.index.PostingCodec
 private[search] object WandExecutor {
 
   /** Block-max WAND main loop over one shard group's cursors. Static so
-    * the fused job's closure never captures the SparkSession.
+    * the distributed read's closure never captures the SparkSession.
     *
     * Round-6 shape (results identical — pruning only ever skips docs whose
     * block-bounded score is STRICTLY below θ, and every evaluated doc sums

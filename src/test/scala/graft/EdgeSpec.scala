@@ -124,6 +124,22 @@ class EdgeSpec extends AnyFunSuite {
     assert(expanded.head._2 == "qa000")
   }
 
+  test("fuzzy expansion of an emoji-led key matches by code point, exact to oracle") {
+    val docs = Seq(
+      CorpusDoc(1L, "r", "p/1", "a" * 40, "en", "😀park 😀park plain"),
+      CorpusDoc(2L, "r", "p/2", "b" * 40, "en", "😀pork 😀xyz"),
+      CorpusDoc(3L, "r", "p/3", "c" * 40, "en", "😁pk park"))
+    val store = new IndexStore(spark, TestSpark.tempDir("fuzzastral"),
+      IndexConfig(shardSpan = 64, fields = Seq("content")))
+    store.createSegment(spark.createDataset(docs))
+    val eng = new SearchEngine(store)
+    assert(eng.expandFuzzy("😀pk", Seq("content")).map(_._2) == Seq("😀park", "😀pork"))
+    val got = eng.searchFuzzy("😀pk", Seq("content"), k = 10)
+      .collect().map(r => Hit(r.getLong(0), r.getDouble(1))).toSeq
+    assert(got.nonEmpty)
+    assert(got == OracleScorer.search(docs, "😀park 😀pork", Seq("content"), k = 10))
+  }
+
   test("resume after one committed segment targets the NEXT id, not the committed one") {
     val store = new IndexStore(spark, TestSpark.tempDir("resume-next"),
       IndexConfig(shardSpan = 64, fields = Seq("content")))

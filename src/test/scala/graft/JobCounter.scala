@@ -1,30 +1,32 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** Counts the Spark jobs a block of driver code runs, and the stages of
-  * those jobs that ran tasks (stages skipped for reused shuffle output do
-  * not count). The block runs under a fresh job group; afterwards a one-task
-  * fence job is submitted, and since the listener bus delivers events in
-  * order, seeing the fence start means every event of the block arrived. */
+  * those jobs that ran tasks (stages skipped because their shuffle output
+  * already exists do not count), with their tasks and shuffle bytes. The
+  * block runs under a fresh job group; afterwards a one-task fence job is
+  * submitted, and since the listener bus delivers events in order, seeing
+  * the fence start means every event of the block arrived. */
 object JobCounter {
 
-  final case class Counts(jobs: Int, stages: Int)
+  final case class Counts(jobs: Int, stages: Int, tasks: Int = 0,
+                          shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L)
 
   def apply[T](spark: SparkSession)(body: => T): (T, Counts) = {
     val sc = spark.sparkContext
     val group = s"jobcount-${java.util.UUID.randomUUID()}"
     val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
-    val ran = new ConcurrentLinkedQueue[Int]()
+    val ran = new ConcurrentLinkedQueue[StageInfo]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull, e.stageIds))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        ran.add(e.stageInfo.stageId); ()
+        ran.add(e.stageInfo); ()
       }
     }
     sc.addSparkListener(listener)
@@ -39,8 +41,12 @@ object JobCounter {
         Thread.sleep(10)
       }
       val mine = jobs.asScala.filter(_._1 == group).toSeq
-      val stages = mine.flatMap(_._2).toSet
-      (r, Counts(mine.size, ran.asScala.count(stages.contains)))
+      val stageIds = mine.flatMap(_._2).toSet
+      val stages = ran.asScala.filter(s => stageIds.contains(s.stageId)).toSeq
+      val metrics = stages.map(_.taskMetrics)
+      (r, Counts(mine.size, stages.size, stages.map(_.numTasks).sum,
+        metrics.map(_.shuffleReadMetrics.totalBytesRead).sum,
+        metrics.map(_.shuffleWriteMetrics.bytesWritten).sum))
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan audits: the scale story only holds if the plans are what we think
   * they are. Checks parquet filter pushdown on the postings and the term
-  * dictionary, and — with a Spark listener, not plan strings — that a
-  * distributed read is ONE job of two stages and a warm driver read runs
-  * none. */
+  * dictionary, and — with a Spark listener, not plan strings — that a warm
+  * distributed read is ONE job of one shuffle-free stage and a warm driver
+  * read runs none. */
 class PlanSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -27,7 +27,7 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
 
   test("exact-term search pushes term equality into the parquet scan") {
-    // the scan the fused job (and a driver LRU miss) reads
+    // the scan a driver LRU miss reads
     val plan = physicalPlan(engine.shardScan(Seq(("content", "import"))))
     assert(plan.contains("PushedFilters"), plan.take(2000))
     assert(plan.contains("In(term") || plan.contains("EqualTo(term") ||
@@ -60,13 +60,17 @@ class PlanSpec extends AnyFunSuite {
     counts
   }
 
-  test("distributed Or/And/Wand/prefix search is ONE Spark job of two stages") {
+  /** A warm distributed read: one job, one stage, one task per partition,
+    * no shuffle. */
+  private lazy val oneStage = JobCounter.Counts(1, 1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+
+  test("warm distributed Or/And/Wand/prefix read: one job, one stage, no shuffle") {
     repeatCounts(engine).zip(shapes).foreach { case (c, shape) =>
-      assert(c == JobCounter.Counts(1, 2), s"$shape ran $c")
+      assert(c == oneStage, s"$shape ran $c")
     }
   }
 
-  test("past the tombstone bound, deletes ride the same shuffle: still one job of two stages") {
+  test("past the tombstone bound, a warm distributed read is still one shuffle-free stage") {
     val store = new IndexStore(spark, TestSpark.tempDir("plan-tomb"),
       IndexConfig(shardSpan = 64, fields = Seq("content"), maxDriverTombstones = 0))
     store.createSegment(CorpusGen.generate(spark, 120, seed = 31))
@@ -74,7 +78,7 @@ class PlanSpec extends AnyFunSuite {
     val eng = new SearchEngine(store)
     assert(!eng.tombstonesSmall)
     repeatCounts(eng).zip(shapes).foreach { case (c, shape) =>
-      assert(c == JobCounter.Counts(1, 2), s"$shape ran $c")
+      assert(c == oneStage, s"$shape ran $c")
     }
   }
 

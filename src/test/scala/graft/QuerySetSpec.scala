@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The seeded reference query set (FIXTURES.md §4; north-rule acceptance):
   * 20 single exact terms across df deciles, 20 multi-term (OR + AND + WAND),
   * 10 prefixes, 5 field-scoped, 5 guaranteed misses — every one required
-  * rank-identical to the single-node oracle with |Δscore| ≤ 1e-5. */
+  * rank-identical to the single-node oracle with bit-identical scores:
+  * every path sums each doc in the oracle's (field, term, seg) order. */
 class QuerySetSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -42,8 +43,7 @@ class QuerySetSpec extends AnyFunSuite {
     assert(got.map(_.doc_id) == oracle.map(_.doc_id),
       s"rank mismatch [$query] mode=$mode bw=$beginsWith:\n got=${got.map(_.doc_id)}\n exp=${oracle.map(_.doc_id)}")
     got.zip(oracle).foreach { case (g, o) =>
-      assert(math.abs(g.score - o.score) <= 1e-5,
-        s"score drift [$query] doc=${g.doc_id}: ${g.score} vs ${o.score}")
+      assert(g.score == o.score, s"score differs [$query] doc=${g.doc_id}: ${g.score} vs ${o.score}")
     }
   }
 

@@ -207,4 +207,32 @@ class StoreSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
     assert(after == before, "compaction must not change results")
   }
+
+  test("bare-parquet input with interleaved doc_id files is range-written, not copied") {
+    val docs = corpus(120, seed = 29).collect().toSeq
+    val input = TestSpark.tempDir("interleaved") + "/in"
+    // two files: even ids, then odd ids — each spans the whole id range
+    spark.createDataset(docs.filter(_.doc_id % 2 == 0)).coalesce(1).write.parquet(input)
+    spark.createDataset(docs.filter(_.doc_id % 2 == 1)).coalesce(1).write.mode("append").parquet(input)
+    val inDS = spark.read.parquet(input).as[CorpusDoc]
+    assert(inDS.inputFiles.length == 2)
+    val dir = TestSpark.tempDir("interleaved-store")
+    val store = new IndexStore(spark, dir, cfg)
+    store.createSegment(inDS)
+    val files = new java.io.File(s"$dir/seg-0/corpus").listFiles().map(_.getPath).filter(_.endsWith(".parquet"))
+    val ranges = files.map { f =>
+      val r = spark.read.parquet(f).agg(min($"doc_id"), max($"doc_id")).head()
+      (r.getLong(0), r.getLong(1))
+    }.sortBy(_._1)
+    assert((1 until ranges.length).forall(i => ranges(i - 1)._2 < ranges(i)._1),
+      s"stored corpus files overlap: ${ranges.toSeq}")
+    val engine = new SearchEngine(store)
+    val expected = OracleScorer.search(docs, "import class", k = 10)
+    val got = engine.search("import class", k = 10).collect().map(r => Hit(r.getLong(0), r.getDouble(1))).toSeq
+    assert(got == expected)
+    val hydrated = engine.searchDocs("import class", k = 10).collect()
+    assert(hydrated.map(r => Hit(r.getAs[Long]("doc_id"), r.getAs[Double]("score"))).toSeq == expected)
+    val byId = docs.map(d => d.doc_id -> d.content).toMap
+    hydrated.foreach(r => assert(r.getAs[String]("content") == byId(r.getAs[Long]("doc_id"))))
+  }
 }

@@ -63,7 +63,8 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   import spark.implicits._
 
   private val hconf = spark.sparkContext.hadoopConfiguration
-  private def fs: FileSystem = new Path(baseDir).getFileSystem(hconf)
+  // resolved once: each resolution is a UGI + FileSystem-cache lookup
+  @transient private lazy val fs: FileSystem = new Path(baseDir).getFileSystem(hconf)
   private def p(parts: String*): Path = new Path((baseDir +: parts).mkString("/"))
 
   // ---------- manifest ----------
@@ -629,10 +630,10 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     * layers cache stats/plans and invalidate correctly after CRUD. */
   def versionToken(): String = {
     def m(path: Path): String =
-      if (fs.exists(path)) {
+      try {
         val st = fs.getFileStatus(path)
         s"${st.getModificationTime}:${if (st.isDirectory) fs.listStatus(path).length else st.getLen}"
-      } else "-"
+      } catch { case _: java.io.FileNotFoundException => "-" }
     Seq(p("manifest.json"), p("tombstones"), p("dfdelta"), p("tombstats"))
       .map(m).mkString("|")
   }

@@ -2,7 +2,7 @@ package graft.search
 
 import graft.core.Bm25Params
 import graft.index.PostingCodec
-import org.apache.spark.Partitioner
+import org.apache.spark.{OneToOneDependency, Partition, Partitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -15,7 +15,7 @@ import scala.collection.mutable
 private[search] final case class PairStat(idf: Double, avgdl: Double, mask: Array[Long])
 
 /** Everything the kernel needs of one query. Plain data: the distributed
-  * read ships it to executors inside its closure. */
+  * read ships it to executors inside its [[ScoreTask]]. */
 private[search] final case class KernelQuery(stats: Map[(String, String), PairStat],
                                              mode: SearchMode, terms: Int, k: Int,
                                              bm25: Bm25Params) {
@@ -42,7 +42,8 @@ private[search] object KernelQuery {
   *
   * The kernel runs on the driver pool for small candidate sets
   * ([[SearchEngine]]) and otherwise on executors, over postings held
-  * resident there ([[residentPostings]], [[distributedTopK]]). */
+  * resident there ([[residentPostings]]), as one [[ScoreTask]] per
+  * partition of one [[ResidentRead]] ([[distributedTopK]]). */
 private[search] object ScoringKernel {
 
   /** One posting shard row: (field, term, seg, shard, blocks, blob). */
@@ -149,30 +150,31 @@ private[search] object ScoringKernel {
   }
 
   /** Distributed top-k over resident postings: ONE job of ONE stage, one
-    * task per partition. The segments' RDDs share one partitioner, so their
-    * union is narrow, and so is the zip with resident tombstones `large`
-    * (else the broadcast map `small`, if any). Each task looks up the
-    * query's pairs, streams its shard groups in ascending shard order
-    * through [[score]] into one heap, and the driver merges the ≤ k ×
-    * partitions survivors. */
+    * task per partition. [[ResidentRead]] hands each task its partition of
+    * every segment plus, past the driver bound, its resident tombstones;
+    * [[ScoreTask]] looks up the query's pairs, streams the shard groups in
+    * ascending shard order through [[score]] into one heap, and the driver
+    * merges the ≤ k × partitions survivors in partition order.
+    *
+    * Neither the RDD nor the task function is a Scala closure, so Spark's
+    * closure cleaner returns at once instead of re-reading class files on
+    * every read, as `union`, `mapPartitions`, `zipPartitions` and
+    * `collect()` would. */
   def distributedTopK(parts: Seq[RDD[ResidentPart]], tombs: Tombs,
                       q: KernelQuery): Seq[(Long, Double)] = {
     if (parts.isEmpty) return Nil
     val (small, large) = tombs
-    val union = parts.head.sparkContext.union(parts)
-    val partial = large match {
-      case Some(resident) =>
-        union.zipPartitions(resident)((ps, ts) => scorePartition(q, ps, ts.nextOption().getOrElse(Map.empty)))
-      case None =>
-        union.mapPartitions(ps => scorePartition(q, ps, small.fold[TombMap](Map.empty)(_.value)))
-    }
+    val read = new ResidentRead(parts, large)
+    val out = new Array[Array[(Long, Double)]](read.partitions.length)
+    read.sparkContext.runJob(read, new ScoreTask(q, small), out.indices,
+      (i: Int, hits: Array[(Long, Double)]) => out(i) = hits)
     val top = new BoundedHitHeap(q.k)
-    partial.collect().foreach { case (d, s) => top.offer(d, s) }
+    out.foreach(_.foreach { case (d, s) => top.offer(d, s) })
     top.result()
   }
 
-  private def scorePartition(q: KernelQuery, parts: Iterator[ResidentPart],
-                             tomb: TombMap): Iterator[(Long, Double)] = {
+  private[search] def scorePartition(q: KernelQuery, parts: Iterator[ResidentPart],
+                                     tomb: TombMap): Iterator[(Long, Double)] = {
     val keys = q.stats.keys.toArray
     val rows = mutable.ArrayBuffer.empty[ShardRow]
     parts.foreach(p => keys.foreach { case (f, t) => rows ++= p.rows(f, t) })
@@ -181,6 +183,53 @@ private[search] object ScoringKernel {
     heap.result().iterator
   }
 }
+
+/** The distributed read's task function: scores one [[ResidentRead]]
+  * partition against the broadcast tombstones `small`, or else against the
+  * partition's resident ones. A named class, not a lambda, so that Spark's
+  * closure cleaner skips it. */
+private[search] final class ScoreTask(q: KernelQuery, small: Option[Broadcast[ScoringKernel.TombMap]])
+    extends ((TaskContext, Iterator[ResidentRead.Part]) => Array[(Long, Double)]) with Serializable {
+  def apply(ctx: TaskContext, it: Iterator[ResidentRead.Part]): Array[(Long, Double)] =
+    it.flatMap { case (parts, resident) =>
+      ScoringKernel.scorePartition(q, parts.iterator, small.fold(resident)(_.value))
+    }.toArray
+}
+
+/** The one RDD a distributed read runs: partition i holds partition i of
+  * every segment's resident postings and, if given, of the resident
+  * tombstones, all under one partitioner. Its dependencies are one-to-one,
+  * so the read is one stage with no shuffle. It names no preferred
+  * locations: the scheduler takes them from its parents, cached blocks
+  * first. */
+private[search] final class ResidentRead(segs: Seq[RDD[ResidentPart]],
+                                         tombs: Option[RDD[ScoringKernel.TombMap]])
+    extends RDD[ResidentRead.Part](segs.head.sparkContext,
+      segs.map(new OneToOneDependency(_)) ++ tombs.map(new OneToOneDependency(_))) {
+
+  override val partitioner: Option[Partitioner] = segs.head.partitioner
+
+  override protected def getPartitions: Array[Partition] =
+    Array.tabulate[Partition](segs.head.partitions.length) { i =>
+      new ReadPartition(i, segs.map(_.partitions(i)), tombs.map(_.partitions(i)))
+    }
+
+  override def compute(split: Partition, ctx: TaskContext): Iterator[ResidentRead.Part] = {
+    val p = split.asInstanceOf[ReadPartition]
+    val parts = segs.zip(p.segs).flatMap { case (r, s) => r.iterator(s, ctx) }
+    val tomb = tombs.zip(p.tombs).flatMap { case (r, t) => r.iterator(t, ctx).nextOption() }
+    Iterator(parts -> tomb.getOrElse(Map.empty))
+  }
+}
+
+private[search] object ResidentRead {
+  /** One partition's resident parts, one per segment, and its tombstones. */
+  type Part = (Seq[ResidentPart], ScoringKernel.TombMap)
+}
+
+/** Partition `index` of a [[ResidentRead]] and its parents' partitions. */
+private final class ReadPartition(val index: Int, val segs: Seq[Partition],
+                                  val tombs: Option[Partition]) extends Partition
 
 /** One hash partition of one segment's postings, resident on an executor,
   * in columns: each (field, term) key once, keys sorted, each key's shard

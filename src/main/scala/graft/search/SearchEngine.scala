@@ -5,11 +5,9 @@ import graft.core._
 import graft.index.IndexStore
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-
-import scala.jdk.CollectionConverters._
 
 /** Query modes. The reference's multi-term search is disjunctive
   * accumulation (OR, indexing.go:385-493); AND is the intersection variant
@@ -43,12 +41,16 @@ object SearchMode {
   *    distributed read that needs the segment; tombstones past the driver
   *    bound are held beside them under the same partitioner. A read is ONE
   *    job of ONE stage, one task per partition, with no parquet scan and no
-  *    shuffle: each task looks up the query's pairs, streams its shard groups
-  *    through the kernel into one heap, and the driver merges the ≤ k ×
-  *    partitions survivors ([[ScoringKernel.distributedTopK]]).
+  *    shuffle: one RDD with one-to-one dependencies on the resident RDDs hands
+  *    each task its partitions, a named task function (no closure for Spark
+  *    to clean) streams its shard groups through the kernel into one heap,
+  *    and the driver merges the ≤ k × partitions survivors
+  *    ([[ScoringKernel.distributedTopK]]).
   *
-  * Either way `search` returns a local frame of ≤ k rows: the work is done
-  * by the time it returns, and collecting the result runs no job.
+  * Either way `search` returns a local frame of ≤ k rows, already
+  * analyzed: the work is done by the time it returns, and collecting the
+  * result runs no job. Each public entry point polls the store's version
+  * token once; a read then runs on the caches of that version.
   */
 class SearchEngine(val store: IndexStore) {
   import store.spark.implicits._
@@ -68,10 +70,15 @@ class SearchEngine(val store: IndexStore) {
     * on the term-sorted df table — the analogue of the reference's radix
     * `WalkPrefix` with its 100-subtree cap (indexing.go:773-785). */
   def expandPrefix(prefix: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
+    refreshIfStale()
+    prefixTerms(prefix, fields, cap)
+  }
+
+  private def prefixTerms(prefix: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
     // an empty prefix would "match" cap arbitrary terms — reject loudly
     // (search() never passes one; tokenization drops empty terms)
     require(prefix.nonEmpty, "prefix must be non-empty")
-    cachedExpansion("p", prefix, fields, cap) {
+    cachedExpansion("p", prefix, fields, cap) { termDf =>
       val lo = prefix.toLowerCase
       // Range pruning needs a successor string upper-bounding every
       // lo-prefixed term in UTF-8 (code point) order. Incrementing the
@@ -85,7 +92,7 @@ class SearchEngine(val store: IndexStore) {
           val hi = lo.init + (lo.last + 1).toChar
           $"term" >= lo && $"term" < hi
         } else $"term".startsWith(lo)
-      cachedTermDf()
+      termDf
         .filter($"field".isInCollection(fields) && pred)
         .select($"field", $"term").orderBy($"term", $"field").limit(cap)
         .collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -101,9 +108,14 @@ class SearchEngine(val store: IndexStore) {
     * corpus-scale dictionary never collects an unbounded term list to the
     * driver. */
   def expandFuzzy(key: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
+    refreshIfStale()
+    fuzzyTerms(key, fields, cap)
+  }
+
+  private def fuzzyTerms(key: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
     val k = key.toLowerCase
     if (k.isEmpty) return Seq.empty
-    cachedExpansion("f", k, fields, cap) {
+    cachedExpansion("f", k, fields, cap) { termDf =>
       // by code point: a supplementary first character is two UTF-16 units,
       // and a lone surrogate half becomes '?' in UTF-8
       val first = k.codePointAt(0)
@@ -117,7 +129,7 @@ class SearchEngine(val store: IndexStore) {
         else $"term".startsWith(lo)
       val containsAll = k.codePoints().distinct().toArray
         .map(c => $"term".contains(new String(Character.toChars(c)))).reduce(_ && _)
-      cachedTermDf()
+      termDf
         .filter($"field".isInCollection(fields) && range)
         .filter(containsAll)
         .select($"field", $"term")
@@ -136,13 +148,12 @@ class SearchEngine(val store: IndexStore) {
     }
 
   private def cachedExpansion(kind: String, key: String, fields: Seq[String], cap: Int)(
-      compute: => Seq[(String, String)]): Seq[(String, String)] = {
-    refreshIfStale()
+      compute: DataFrame => Seq[(String, String)]): Seq[(String, String)] = {
     val ck = (kind, key, fields, cap)
-    val (tok, cached) = synchronized { (cacheToken, expandCache.get(ck)) }
+    val (tok, termDf, cached) = synchronized { (cacheToken, termDfC, expandCache.get(ck)) }
     if (cached != null) cached
     else {
-      val v = compute // dictionary scan outside the monitor
+      val v = compute(termDf) // dictionary scan outside the monitor
       synchronized {
         if (cacheToken == tok && expandCache.get(ck) == null) expandCache.put(ck, v)
       }
@@ -154,8 +165,9 @@ class SearchEngine(val store: IndexStore) {
     * the matched terms with the standard BM25 accumulation. */
   def searchFuzzy(query: String, fields: Seq[String] = CorpusDoc.Fields,
                   k: Int = 100): DataFrame = {
+    refreshIfStale()
     val qTerms = Analyzer.tokenize(query).distinct.sorted.toSeq
-    topK(qTerms, qTerms.flatMap(t => expandFuzzy(t, fields).map { case (f, mt) => (f, mt, t) }),
+    topK(qTerms, qTerms.flatMap(t => fuzzyTerms(t, fields).map { case (f, mt) => (f, mt, t) }),
       k, SearchMode.Or)
   }
 
@@ -172,12 +184,13 @@ class SearchEngine(val store: IndexStore) {
     // a negative boost would flip idf's sign and invert WAND's upper bounds
     // into lower bounds, silently breaking pruning
     require(boosts.values.forall(_ >= 0.0), s"boosts must be >= 0: $boosts")
+    refreshIfStale()
     // each matched (field, term) pair keeps the query term it expands from,
     // so AND stays "every query term has ≥ 1 matched expansion" under
     // prefix expansion
     val matched: Seq[(String, String, String)] =
       if (beginsWith)
-        qTerms.flatMap(t => expandPrefix(t, fields).map { case (f, mt) => (f, mt, t) })
+        qTerms.flatMap(t => prefixTerms(t, fields).map { case (f, mt) => (f, mt, t) })
       else fields.flatMap(f => qTerms.map(t => (f, t, t)))
     topK(qTerms, matched, k, mode, boosts)
   }
@@ -198,6 +211,8 @@ class SearchEngine(val store: IndexStore) {
   // the store's version token changes (any segment commit or tombstone).
   // This removes 3-4 driver-side jobs + file listings from EVERY query —
   // the reference pays none of these because its index lives in RAM.
+  // Each public entry point polls the token once; the private helpers a
+  // read runs use the caches as that poll left them.
 
   private var cacheToken: String = null
   private var fieldStatsC: Map[String, (Long, Long)] = Map.empty
@@ -285,7 +300,7 @@ class SearchEngine(val store: IndexStore) {
   /** The pairs' shard rows plus, for prefix expansions, rows of other
     * pairs inside the same field × term bounds; callers pick by key. */
   private def collectRows(pairs: Seq[(String, String)]): Array[ShardRow] =
-    shardScan(pairs).as[ShardRow].collect()
+    rowScan(pairs).as[ShardRow].collect()
 
   /** Shard rows for the matched pairs, served from the LRU where possible.
     * Rows fetched by this call are returned even if eviction (or a version
@@ -305,7 +320,6 @@ class SearchEngine(val store: IndexStore) {
   private[search] def fetchShardRows(matched0: Seq[(String, String)]): Array[ShardRow] = {
     // dedupe: a duplicated pair would double-score its term
     val matched = matched0.distinct
-    refreshIfStale()
     if (store.cfg.driverBlobCacheBytes <= 0) return collectRows(matched)
     def attempt(retriesLeft: Int): Array[ShardRow] = {
       val (tok, hits, missKeys) = synchronized {
@@ -348,7 +362,6 @@ class SearchEngine(val store: IndexStore) {
     attempt(1)
   }
 
-  private[search] def cachedTermDf(): DataFrame = { refreshIfStale(); termDfC }
   /** Whether the tombstone set fits the driver-map bound; when false, every
     * query runs distributed, against tombstones held beside the postings. */
   def tombstonesSmall: Boolean = { refreshIfStale(); tombSmallC }
@@ -366,8 +379,12 @@ class SearchEngine(val store: IndexStore) {
   private[search] def termStats(matched0: Seq[(String, String)],
                                 boosts: Map[String, Double] = Map.empty): Seq[TermStat] = {
     refreshIfStale()
+    statsFor(matched0, boosts)
+  }
+
+  private def statsFor(matched0: Seq[(String, String)], boosts: Map[String, Double]): Seq[TermStat] = {
     val matched = matched0.distinct // one stat row per pair, always
-    val fstats = fieldStatsC
+    val fstats = synchronized(fieldStatsC)
     val dfMap = fetchDfs(matched)
     matched.flatMap { case (f, t) =>
       dfMap.get((f, t)).filter(_ > 0).flatMap { df =>
@@ -391,21 +408,21 @@ class SearchEngine(val store: IndexStore) {
   }
 
   private def fetchDfs(matched: Seq[(String, String)]): Map[(String, String), Long] = {
-    val (tok, hits, missKeys) = synchronized {
+    val (tok, termDf, hits, missKeys) = synchronized {
       val h = Map.newBuilder[(String, String), Long]
       val m = Seq.newBuilder[(String, String)]
       matched.distinct.foreach { key =>
         val c = dfCache.get(key)
         if (c != null) h += key -> c.longValue else m += key
       }
-      (cacheToken, h.result(), m.result())
+      (cacheToken, termDfC, h.result(), m.result())
     }
     if (missKeys.isEmpty) hits
     else {
       // dictionary scan outside the monitor (see fetchShardRows)
       val fieldsTouched = missKeys.map(_._1).distinct
       val terms = missKeys.map(_._2).distinct
-      val fetched = cachedTermDf()
+      val fetched = termDf
         .filter($"field".isInCollection(fieldsTouched) && $"term".isInCollection(terms))
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       synchronized {
@@ -420,20 +437,24 @@ class SearchEngine(val store: IndexStore) {
   /** The postings bounded by two parquet-pushable IN filters, on the
     * fields and on the terms of `matched`: exact for a field × term cross
     * product (every non-prefix query), a superset for prefix expansions. */
-  private def bounded(matched: Seq[(String, String)]): DataFrame = {
-    refreshIfStale()
-    postingsC.filter($"field".isInCollection(matched.map(_._1).distinct) &&
+  private def bounded(matched: Seq[(String, String)]): DataFrame =
+    synchronized(postingsC).filter($"field".isInCollection(matched.map(_._1).distinct) &&
       $"term".isInCollection(matched.map(_._2).distinct))
-  }
 
   /** The scan the driver kernel reads on an LRU miss: the bounded
     * postings as [[ScoringKernel.ShardRow]] columns. */
-  private[graft] def shardScan(matched: Seq[(String, String)]): DataFrame =
+  private[graft] def shardScan(matched: Seq[(String, String)]): DataFrame = {
+    refreshIfStale()
+    rowScan(matched)
+  }
+
+  private def rowScan(matched: Seq[(String, String)]): DataFrame =
     bounded(matched).select($"field", $"term", $"seg", $"shard", $"blocks", $"blob")
 
   /** Selects only the shards of the matched terms — equality pushdown on the
     * (field, term)-sorted postings table. */
   def matchedShards(matched0: Seq[(String, String)]): DataFrame = {
+    refreshIfStale()
     val matched = matched0.distinct // duplicates would fool the cross-product check
     val cross = matched.map(_._1).distinct.size.toLong * matched.map(_._2).distinct.size
     // prefix expansions, whose terms differ per field, need the exact pairs
@@ -442,20 +463,18 @@ class SearchEngine(val store: IndexStore) {
   }
 
   /** Scores `matched` — (field, index term, query term it expands from) —
-    * through the kernel and returns the top-k as a local frame. A
-    * distributed read uses stats, resident postings and tombstones of one
-    * store version: if the version moves between the stats and the
-    * snapshot, the read restarts from the new one — at most twice, the first
-    * time when the read itself finds the store changed (bounded, as in
+    * through the kernel and returns the top-k as a local frame, reading the
+    * caches as the caller's version poll left them. A distributed read uses
+    * stats, resident postings and tombstones of one store version: if a
+    * concurrent poll moves the version between the stats and the snapshot,
+    * the read restarts from the new one, at most twice (bounded, as in
     * [[fetchShardRows]]). */
   private def topK(qTerms: Seq[String], matched: Seq[(String, String, String)], k: Int,
                    mode: SearchMode, boosts: Map[String, Double] = Map.empty): DataFrame = {
     val pairs = matched.map { case (f, t, _) => (f, t) }.distinct
     def attempt(retriesLeft: Int): Seq[(Long, Double)] = {
-      // termStats refreshes the caches; a version it moves to past `tok`
-      // sends a distributed read round again
-      val tok = synchronized(cacheToken)
-      val stats = if (pairs.isEmpty || k <= 0) Nil else termStats(pairs, boosts)
+      val (tok, small) = synchronized((cacheToken, tombSmallC))
+      val stats = if (pairs.isEmpty || k <= 0) Nil else statsFor(pairs, boosts)
       if (stats.isEmpty) Nil
       else {
         val words = KernelQuery.maskWords(mode, qTerms.size)
@@ -469,7 +488,7 @@ class SearchEngine(val store: IndexStore) {
           (s.field, s.term) -> PairStat(s.idf, s.avgdl, masks((s.field, s.term)))).toMap,
           mode, qTerms.size, k, bm25)
         // ~8 bytes per posting bounds the candidate volume
-        if (stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes && tombstonesSmall)
+        if (stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes && small)
           driverTopK(q, pairs)
         else {
           val (t, segs, tombs) = synchronized((cacheToken, segKeysC.map(residentC), tombsC))
@@ -479,9 +498,9 @@ class SearchEngine(val store: IndexStore) {
       }
     }
     val hits = attempt(2)
-    // rows under a fixed schema: no encoder to generate code for and no
-    // renaming projection to analyze on every read
-    spark.createDataFrame(hits.map { case (d, s) => Row(d, s) }.asJava, SearchEngine.HitSchema)
+    // rows under a fixed schema, in a relation marked analyzed: no encoder
+    // to generate code for and nothing for the analyzer to do on every read
+    GraftColumnBridge.localFrame(spark, SearchEngine.HitSchema, hits.map { case (d, s) => Row(d, s) })
   }
 
   /** The kernel on the driver: the pairs' shard rows (LRU, or one pruned

@@ -67,7 +67,7 @@ class EdgeSpec extends AnyFunSuite {
     assert(c == b)
   }
 
-  test("bulk delete past the driver-tombstone bound: identical results via anti-join") {
+  test("bulk delete past the driver-tombstone bound: identical results past the bound") {
     val docs = CorpusGen.generate(spark, 80, seed = 21).collect().toSeq
     val victims = docs.map(_.doc_id).filter(_ % 5 == 0)
     assert(victims.size > 3)

@@ -139,7 +139,26 @@ class IndexSearchSpec extends AnyFunSuite {
     }
   }
 
-  test("AND with 64, 65 and 72 terms (and 65 prefixes) on the driver and in the fused job") {
+  test("a delete, then an add, through a second store handle reach the next search on both paths") {
+    Seq(cfg, cfg.copy(driverWandMaxBytes = 0)).foreach { c =>
+      val dir = TestSpark.tempDir("two-handles")
+      new IndexStore(spark, dir, c).createSegment(spark.createDataset(corpusLocal.take(200)))
+      val eng = new SearchEngine(new IndexStore(spark, dir, c))
+      val writer = new IndexStore(spark, dir, c)
+      def check(live: Seq[CorpusDoc]): Unit = Seq(SearchMode.Wand, SearchMode.Or, SearchMode.And).foreach { mode =>
+        distQueries.foreach { case (q, fields, bw) => assertExact(eng, live, q, fields, bw, mode) }
+      }
+      check(corpusLocal.take(200))
+      val victims = corpusLocal.take(200).map(_.doc_id).filter(_ % 6 == 1)
+      writer.delete(victims)
+      check(corpusLocal.take(200).filterNot(d => victims.contains(d.doc_id)))
+      writer.add(spark.createDataset(corpusLocal.drop(200)))
+      check(corpusLocal.filterNot(d => victims.contains(d.doc_id)))
+      assert(eng.store.segments.size == 2)
+    }
+  }
+
+  test("AND with 64, 65 and 72 terms (and 65 prefixes) on the driver and on the distributed path") {
     // doc i < 80 lacks term i; docs 80..99 hold all 80 terms; tfs vary
     val terms = (0 until 80).map(i => f"wt$i%02d")
     val docs = (0 until 100).map { i =>

@@ -5,6 +5,7 @@ import graft.analysis.Analyzer
 import graft.core.{CorpusDoc, Hit, IndexConfig}
 import graft.corpus.CorpusGen
 import graft.index.IndexStore
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The executor-resident postings of the distributed path: built once per
@@ -166,6 +167,41 @@ class ResidentSpec extends AnyFunSuite {
       sc.getPersistentRDDs.size
     }
     assert(counts.forall(_ <= counts.head), s"persistent RDDs per cycle: $counts")
+  }
+
+  test("a warm read is a named task over one ResidentRead: nothing for the closure cleaner") {
+    // the closure cleaner's own tests: a `$anonfun$` class name, or a
+    // synthetic class with writeReplace (a serializable lambda)
+    Seq(classOf[ScoreTask], classOf[ResidentRead]).foreach { c =>
+      assert(!c.getName.contains("$anonfun$") && !c.isSynthetic &&
+        !c.getDeclaredMethods.exists(_.getName == "writeReplace"), c.getName)
+    }
+    // both sides of the tombstone bound: broadcast tombstones, resident ones
+    Seq(cfg, cfg.copy(maxDriverTombstones = 0)).foreach { c =>
+      val st = store(docs.grouped(120).toSeq, c)
+      val victims = docs.map(_.doc_id).filter(_ % 4 == 1)
+      st.delete(victims)
+      val eng = new SearchEngine(st)
+      assertExact(eng, docs.filterNot(d => victims.contains(d.doc_id)), "import class", SearchMode.Or, bw = false)
+      val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+      val listener = new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+          stages.add(e.stageInfo); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val (_, counts) = try JobCounter(spark)(eng.search("import class", Seq("content"), k = 10).collect())
+        finally spark.sparkContext.removeSparkListener(listener)
+      assert(counts == JobCounter.Counts(1, 1, partitions), s"maxDriverTombstones=${c.maxDriverTombstones}: $counts")
+      // the stage's last RDD is the read; its parents are the resident RDDs
+      val rdds = stages.peek().rddInfos
+      val read = rdds.maxBy(_.id)
+      val parents = rdds.filter(r => read.parentIds.contains(r.id)).map(_.name).sorted
+      val tombs = if (c.maxDriverTombstones == 0) Seq("resident tombstones") else Nil
+      assert(read.name == "ResidentRead" &&
+        parents.map(_.stripSuffix(s" of ${st.baseDir}")) == Seq("resident postings seg-0",
+          "resident postings seg-1") ++ tombs, s"${read.name} <- $parents")
+    }
   }
 
   test("two threads' concurrent first reads build each segment once") {

@@ -503,8 +503,10 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     }
 
   /** Stored corpus rows across segments (with `seg`). */
-  def corpus(): DataFrame =
-    segments.map { s =>
+  def corpus(): DataFrame = corpusOf(segments)
+
+  private def corpusOf(segs: Seq[SegmentInfo]): DataFrame =
+    segs.map { s =>
       spark.read.parquet(p(s"seg-${s.id}", "corpus").toString)
         .withColumn("seg", lit(s.id))
     }.reduceOption(_ unionByName _)
@@ -829,12 +831,13 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   }
 
   /** Corpus rows still visible (tombstone-filtered, segment-generation
-    * aware). Uses the broadcast map under the driver bound and a distributed
-    * anti-join past it. */
+    * aware), without `seg` on every branch. Uses the broadcast map under the
+    * driver bound and a distributed anti-join past it. Building the plan
+    * runs no more jobs than [[corpus]]: emptiness comes from the manifest. */
   def liveCorpus(): DataFrame = {
-    val c = corpus()
-    if (c.isEmpty) return c
-    val nTs = tombstoneCount()
+    val segs = segments
+    val c = corpusOf(segs)
+    val nTs = if (segs.isEmpty) 0L else tombstoneCount()
     if (nTs == 0L) return c.drop("seg")
     if (nTs <= cfg.maxDriverTombstones) {
       val ts = tombstoneMap()

@@ -48,9 +48,13 @@ object SearchMode {
   *    ([[ScoringKernel.distributedTopK]]).
   *
   * Either way `search` returns a local frame of ≤ k rows, already
-  * analyzed: the work is done by the time it returns, and collecting the
-  * result runs no job. Each public entry point polls the store's version
-  * token once; a read then runs on the caches of that version.
+  * analyzed: the work is done by the time it returns. Its row actions
+  * (`collect`, `collectAsList`, `toLocalIterator`, `head`/`take`/`first`/
+  * `takeAsList`, `tail`, `count`, `isEmpty`) return the rows held on the
+  * driver: no job, no SQL execution, no `QueryExecutionListener` event.
+  * Transformations over it run through Spark as usual. Each public entry
+  * point polls the store's version token once; a read then runs on the
+  * caches of that version.
   */
 class SearchEngine(val store: IndexStore) {
   import store.spark.implicits._
@@ -162,7 +166,8 @@ class SearchEngine(val store: IndexStore) {
   }
 
   /** Fuzzy search: expand each query token with [[expandFuzzy]], then score
-    * the matched terms with the standard BM25 accumulation. */
+    * the matched terms with the standard BM25 accumulation. Returns the
+    * top-k as a frame of driver rows, as [[search]] does. */
   def searchFuzzy(query: String, fields: Seq[String] = CorpusDoc.Fields,
                   k: Int = 100): DataFrame = {
     refreshIfStale()
@@ -175,7 +180,10 @@ class SearchEngine(val store: IndexStore) {
     * (`POST /index/search` body {Query, Fields, BeginsWith},
     * indexRoutes.go:13-17): analyze the query with the same analyzer as the
     * index (indexing.go:384), match terms exactly or by prefix, score with
-    * pinned BM25, return top-k (doc_id, score). */
+    * pinned BM25, return top-k (doc_id, score). The frame's row actions
+    * (`collect`, `head`, `take`, `count`, ...) are answered from the hits
+    * on the driver and post no SQL execution or `QueryExecutionListener`
+    * event; transformations and joins over it run through Spark. */
   def search(query: String, fields: Seq[String] = CorpusDoc.Fields,
              beginsWith: Boolean = false, k: Int = 100,
              mode: SearchMode = SearchMode.Or,

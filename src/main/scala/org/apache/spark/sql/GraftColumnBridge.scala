@@ -1,26 +1,66 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Bridge to private[sql] APIs of Spark 4: the Column <-> Expression
   * converters (Column is ColumnNode-backed in 4.x; `classic.ExpressionUtils`
-  * holds the conversions) and `Dataset.ofRows` over a prepared plan. Lives
-  * in the org.apache.spark.sql package solely to satisfy the access
-  * modifier — the standard extension pattern (cf. SNIPPETS.md [3], a public
-  * DatasetFactory doing the same for Dataset). */
+  * holds the conversions) and a Dataset over a prepared plan. Lives in the
+  * org.apache.spark.sql package solely to satisfy the access modifier — the
+  * standard extension pattern (cf. SNIPPETS.md [3], a public DatasetFactory
+  * doing the same for Dataset). */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** A local frame of `rows` under `schema`, as `createDataFrame` builds
     * it but with the `LocalRelation` marked analyzed: its attributes are
-    * resolved by construction, so the analyzer skips it. */
+    * resolved by construction, so the analyzer skips it. The frame is a
+    * [[LocalRowsFrame]]: the actions that only read its rows are answered
+    * from the driver, with no Spark execution. */
   def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
     val plan = LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(schema), rows)
     plan.setAnalyzed()
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+    // the rows as Spark's deserializer returns them: each a
+    // GenericRowWithSchema under `schema`, holding the external values
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    val external = plan.data.map(r => toRow(r).asInstanceOf[Row]).toArray
+    session.withActive {
+      val qe = session.sessionState.executePlan(plan)
+      qe.assertAnalyzed()
+      new LocalRowsFrame(qe, schema, external)
+    }
   }
+}
+
+/** A DataFrame over rows already on the driver, on an analyzed
+  * `LocalRelation` plan. The actions that only read those rows — `collect`,
+  * `collectAsList`, `toLocalIterator`, `head(n)` (and through it `take`,
+  * `first`, `head()` and `takeAsList`), `tail(n)`, `count` and `isEmpty` —
+  * return them directly, in order, in fresh collections: no optimizer or
+  * planner pass, no job, no SQL execution and no `QueryExecutionListener`
+  * event. They return what the same action returns on
+  * `Dataset.ofRows(spark, queryExecution.logical)`. Every other action and
+  * every transformation runs through Spark on the same plan: `withPlan`
+  * builds a plain Dataset, so joins, filters, `.as[T]` and `show` are
+  * unchanged. */
+private[sql] final class LocalRowsFrame(qe: QueryExecution, schema: StructType, rows: Array[Row])
+    extends classic.Dataset[Row](qe, () => ExpressionEncoder(schema)) {
+
+  override def collect(): Array[Row] = rows.clone()
+  override def collectAsList(): java.util.List[Row] = new java.util.ArrayList(rows.toSeq.asJava)
+  override def toLocalIterator(): java.util.Iterator[Row] = rows.iterator.asJava
+  // a negative n is Spark's to reject
+  override def head(n: Int): Array[Row] = if (n < 0) super.head(n) else rows.take(n)
+  override def tail(n: Int): Array[Row] = if (n < 0) super.tail(n) else rows.takeRight(n)
+  override def count(): Long = rows.length.toLong
+  override def isEmpty: Boolean = rows.isEmpty
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
@@ -11,22 +12,30 @@ import scala.jdk.CollectionConverters._
   * already exists do not count), with their tasks and shuffle bytes. The
   * block runs under a fresh job group; afterwards a one-task fence job is
   * submitted, and since the listener bus delivers events in order, seeing
-  * the fence start means every event of the block arrived. */
+  * the fence start means every event of the block arrived. SQL executions
+  * started under the block's job group (each Dataset action Spark runs
+  * posts one, even when it runs no job) are counted the same way. */
 object JobCounter {
 
   final case class Counts(jobs: Int, stages: Int, tasks: Int = 0,
-                          shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L)
+                          shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L,
+                          sqlExecutions: Int = 0)
 
   def apply[T](spark: SparkSession)(body: => T): (T, Counts) = {
     val sc = spark.sparkContext
     val group = s"jobcount-${java.util.UUID.randomUUID()}"
     val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
     val ran = new ConcurrentLinkedQueue[StageInfo]()
+    val sqlGroups = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull, e.stageIds))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         ran.add(e.stageInfo); ()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sqlGroups.add(s.jobGroupId.orNull); ()
+        case _ =>
       }
     }
     sc.addSparkListener(listener)
@@ -46,7 +55,8 @@ object JobCounter {
       val metrics = stages.map(_.taskMetrics)
       (r, Counts(mine.size, stages.size, stages.map(_.numTasks).sum,
         metrics.map(_.shuffleReadMetrics.totalBytesRead).sum,
-        metrics.map(_.shuffleWriteMetrics.bytesWritten).sum))
+        metrics.map(_.shuffleWriteMetrics.bytesWritten).sum,
+        sqlGroups.asScala.count(_ == group)))
     } finally sc.removeSparkListener(listener)
   }
 }

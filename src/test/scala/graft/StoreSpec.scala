@@ -235,4 +235,24 @@ class StoreSpec extends AnyFunSuite {
     val byId = docs.map(d => d.doc_id -> d.content).toMap
     hydrated.foreach(r => assert(r.getAs[String]("content") == byId(r.getAs[Long]("doc_id"))))
   }
+
+  test("liveCorpus: an empty store has a one-segment store's columns, decided without a job") {
+    val c = IndexConfig(shardSpan = 32, fields = Seq("content"))
+    val empty = new IndexStore(spark, TestSpark.tempDir("live-empty"), c)
+    val one = new IndexStore(spark, TestSpark.tempDir("live-one"), c)
+    one.createSegment(corpus(40))
+    assert(empty.liveCorpus().columns.toSeq == one.liveCorpus().columns.toSeq)
+    assert(!one.liveCorpus().columns.contains("seg"))
+    assert(empty.liveCorpus().count() == 0L)
+    val hydrated = (s: IndexStore) => new SearchEngine(s).searchDocs("import class", Seq("content"), k = 10)
+    assert(hydrated(empty).columns.toSeq == hydrated(one).columns.toSeq)
+    assert(hydrated(empty).collect().isEmpty)
+    // without tombstones, building the plan costs what the corpus plan costs
+    Seq(empty, one).foreach { s =>
+      val (_, corpusJobs) = JobCounter(spark)(s.corpus())
+      val (_, liveJobs) = JobCounter(spark)(s.liveCorpus())
+      assert(liveJobs.jobs <= corpusJobs.jobs && liveJobs.sqlExecutions <= corpusJobs.sqlExecutions,
+        s"liveCorpus ran $liveJobs, corpus $corpusJobs")
+    }
+  }
 }

@@ -305,7 +305,7 @@ object PipelineQueries {
     * path a growing vector corpus exercises. The recall gate then queries
     * the grown index against brute force over the FULL corpus, bounding
     * frozen-quantizer drift with a red row (measured: recall 0.90 / 1.00 /
-    * 0.875 at sf0.001/0.01/0.1, `graft.tools.RecallProbe` ivf-add80). */
+    * 0.875 at sf0.001/0.01/0.1, 80% train / 20% add split). */
   private val ivfAddCache = new Memo[IvfIndex]
   private def ivfAddIndexFor(s: SparkSession, dir: String): IvfIndex =
     ivfAddCache(dir) {
@@ -588,7 +588,7 @@ object PipelineQueries {
     // flips the row red in CORRECTNESS. Per-pair agreement is additionally
     // asserted in PipelineSpec.
     // nProbe=8 of 16 cells: measured recall@5 = 0.825/0.90/0.925 at
-    // sf0.001/0.01/0.1 (graft.tools.RecallProbe) — ≥ 0.8 with margin at the
+    // sf0.001/0.01/0.1 — ≥ 0.8 with margin at the
     // gated sfs; nProbe=4 sat at 0.62-0.67 and failed the gate honestly.
     // The gate runs against the PERSISTED quantizer + cell tables
     // (IvfIndex.build → open), same k-means params as the probe measured.

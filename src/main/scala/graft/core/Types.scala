@@ -31,27 +31,21 @@ object CorpusDoc {
   }
 }
 
-/** One (field, term, doc) occurrence with its in-document frequency and the
-  * field's token length for that doc. Carrying `dl` inside the posting
-  * mirrors the reference, which stores document length as the posting value
-  * (reference: indexing.go:130-132, 743, 753) — it lets query-time BM25 run
-  * without joining a per-document stats table (critical at 10^12 docs: that
-  * join would be a second full shuffle per query).
-  */
-final case class Posting(field: String, term: String, doc_id: Long, tf: Int, dl: Int)
-
 /** A compressed, shard-local posting list for one (field, term).
   *
   * `shard` = doc_id / shardSpan. Sharding the posting list by docId *range*
   * (not hash) is the structural answer to hot-term skew (SURVEY.md §7.4):
   * a term present in half of 10^12 docs never lands on a single reducer —
-  * `groupBy(field, term, shard)` bounds every group to ≤ shardSpan postings,
+  * grouping by (field, term, shard) bounds every group to ≤ shardSpan postings,
   * and query-time merge is a shard-ascending concatenation because ranges
   * are disjoint and internally docId-sorted.
   *
   * `blob` is the delta+varint encoded stream of (docId, tf, dl) triplets
-  * (PostingCodec). `blocks` carries block-max metadata (first/last docId,
-  * max tf, min dl per 128-posting block) enabling Block-Max WAND pruning.
+  * (PostingCodec). Carrying `dl` in each posting mirrors the reference,
+  * which stores document length as the posting value (indexing.go:130-132,
+  * 743, 753): query-time BM25 joins no per-document stats table.
+  * `blocks` carries block-max metadata (first/last docId, max tf, min dl
+  * per 128-posting block) enabling Block-Max WAND pruning.
   */
 final case class PostingShard(
     field: String,

@@ -7,103 +7,38 @@ import org.apache.spark.sql.functions._
 
 /** Batch inverted-index construction (SURVEY.md §7.1-7.2).
   *
-  * Shuffle budget: exactly ONE wide dependency for the whole index build —
-  * the `groupBy(field, term, shard)` that assembles posting lists. Term
-  * frequencies are counted *inside each corpus row* (single-pass flatMap),
-  * so no (doc, term) pre-aggregation shuffle is needed; the shuffle input is
+  * Shuffle budget: exactly ONE wide dependency for the posting build — the
+  * range shuffle on (term, field, shard) in [[encodeShardsNarrow]], whose
+  * sorted runs are group-walked into posting lists. Term frequencies are
+  * counted *inside each corpus row* (single-pass flatMap), so no
+  * (doc, term) pre-aggregation shuffle is needed; the shuffle input is
   * already one row per distinct (field, term, doc).
   *
   * Hot-term skew (SURVEY.md §7.4): `shard = doc_id / shardSpan` bounds every
   * reduce group to ≤ shardSpan postings structurally — a term occurring in
   * half of 10^12 docs becomes ~10^6 independent groups instead of one
-  * 5·10^11-row reducer. No sampling pass, no AQE dependency, and query-time
-  * shard merge is free (disjoint, ascending docId ranges).
+  * 5·10^11-row reducer. No aggregation hash map, no AQE dependency, and
+  * query-time shard merge is free (disjoint, ascending docId ranges).
   */
 object IndexBuilder {
 
-  /** corpus → one Posting row per distinct (field, term, doc).
+  /** corpus → one row per distinct (field, term, doc): the only tokenize
+    * walk of the index (segment build and delete corrections alike).
     *
     * A typed flatMap is used deliberately (SURVEY.md §7.3 decision table):
     * the per-row "tokenize + count" is genuine imperative per-record logic;
     * doing it relationally (explode + groupBy(doc, term)) would add a full
-    * extra shuffle over ~200 tokens/doc just to compute tf.
+    * extra shuffle over ~200 tokens/doc just to compute tf. tf is counted
+    * by sorting the token array in place and walking runs — zero
+    * allocation beyond the tokens themselves.
     *
-    * tf is counted by sorting the token array in place and walking runs —
-    * zero allocation beyond the tokens themselves. The earlier
-    * HashMap[String, Int] variant boxed a fresh Integer + map entry per
-    * distinct term; at build scale that garbage was a measurable share of
-    * the memory-bandwidth wall this VM hits above ~8 threads. Emission
-    * order changes (sorted vs hash order) but the downstream range
-    * repartition + sort makes the build output byte-identical either way.
-    */
-  def postings(corpus: Dataset[CorpusDoc],
-               fields: Seq[String] = CorpusDoc.Fields): Dataset[Posting] = {
-    import corpus.sparkSession.implicits._
-    val fieldsB = fields.toArray
-    corpus.flatMap { doc =>
-      fieldsB.iterator.flatMap { f =>
-        val toks = Analyzer.tokenize(CorpusDoc.fieldValue(doc, f))
-        val dl = toks.length
-        if (dl == 0) Iterator.empty
-        else {
-          java.util.Arrays.sort(toks.asInstanceOf[Array[AnyRef]])
-          new Iterator[Posting] {
-            private var i = 0
-            def hasNext: Boolean = i < dl
-            def next(): Posting = {
-              val t = toks(i)
-              var j = i + 1
-              while (j < dl && toks(j) == t) j += 1
-              val tf = j - i
-              i = j
-              Posting(f, t, doc.doc_id, tf, dl)
-            }
-          }
-        }
-      }
-    }
-  }
-
-  /** Posting rows → compressed shard blobs. The single index-build shuffle,
-    * sort-based (the classic bulk inverted-index build):
-    *
-    *   range shuffle on (field, term, shard)   — raw UnsafeRows, one pass
-    *   → Tungsten partition-local sort (+ doc_id) — off-heap radix sort
-    *   → streaming group-walk encode (mapPartitions, reused buffers)
-    *
-    * Rationale vs groupBy+Aggregator: an object-hash aggregation buffers
-    * every group as a JVM ArrayBuffer serialized through Kryo — measured
-    * GC-bound above ~8 concurrent tasks on this box. The sorted stream walk
-    * allocates one reusable buffer per task and emits blobs whose postings
-    * are docId-sorted by construction (deterministic bytes at any
-    * parallelism). RangePartitioning also leaves the output laid out in
-    * term order, so the subsequent parquet write gets min/max file pruning
-    * for exact and prefix term scans with no extra exchange. */
-  def encodeShards(postings: Dataset[Posting], shardSpan: Long): DataFrame = {
-    import postings.sparkSession.implicits._
-    postings
-      .withColumn("shard", floor(col("doc_id") / lit(shardSpan)).cast("long"))
-      .repartitionByRange(col("field"), col("term"), col("shard"))
-      .sortWithinPartitions("field", "term", "shard", "doc_id")
-      .select(col("field"), col("term"), col("shard"),
-        col("doc_id"), col("tf"), col("dl"))
-      .as[(String, String, Long, Long, Int, Int)]
-      .mapPartitions(ShardEncoder.encodeSortedRun)
-      .toDF()
-  }
-
-  /** NARROW twin of [[postings]]→[[encodeShards]], used by the segment
-    * build: the build shuffle carries ~10² rows per document, so row width
-    * IS shuffle/sort/cache bytes (guide §2.3 "narrower types"). The field
-    * name is replaced by its rank in the SORTED field list — a one-byte,
-    * order-preserving surrogate restored at encode time — and (tf, dl)
-    * share one long, cutting each UnsafeRow by ~2 slots + the field
-    * string's var-len bytes (~25% at the bench shape); the shard key is
-    * NOT stored (derivable, projected back in [[encodeShardsNarrow]]), so
-    * the cached form is one slot narrower still. Same emission semantics
-    * as [[postings]] (per-field token run walk); the surrogate keys sort
-    * exactly like the names did, so the encoded shard table is
-    * row-identical. */
+    * The rows are NARROW: the build shuffle carries ~10² rows per document,
+    * so row width IS shuffle/sort/cache bytes (guide §2.3 "narrower
+    * types"). The field name is replaced by its rank `fidx` in the SORTED
+    * field list — a one-byte, order-preserving surrogate restored at
+    * encode time — and (tf, dl) share one long `tfdl = tf << 32 | dl`. The
+    * shard key is not stored (derivable, projected in
+    * [[encodeShardsNarrow]]). Row shape: (fidx, term, doc_id, tfdl). */
   def postingsNarrow(corpus: Dataset[CorpusDoc],
                      fields: Seq[String]): Dataset[(Byte, String, Long, Long)] = {
     import corpus.sparkSession.implicits._
@@ -133,7 +68,14 @@ object IndexBuilder {
     }
   }
 
-  /** Encode pipeline over the narrow rows (see [[postingsNarrow]]);
+  /** Narrow rows (see [[postingsNarrow]]) → compressed shard blobs; the
+    * index-build shuffle, sort-based (the classic bulk inverted-index
+    * build): range shuffle → Tungsten partition-local sort (+ doc_id) →
+    * streaming group-walk encode ([[ShardEncoder.encodeSortedRunNarrow]],
+    * reused buffers). The walk emits blobs whose postings are docId-sorted
+    * by construction (deterministic bytes at any parallelism). A
+    * groupBy + Aggregator instead buffers every group as a Kryo-serialized
+    * JVM collection — measured GC-bound above ~8 concurrent tasks.
     * `sortedFields` maps the surrogate byte back to the field name.
     *
     * Keys are TERM-MAJOR ((term, fidx, shard), not (field, term, shard)):
@@ -161,16 +103,6 @@ object IndexBuilder {
       .mapPartitions(rows => ShardEncoder.encodeSortedRunNarrow(rows, sortedFields))
       .toDF()
   }
-
-  /** Per-(field, term) document frequency. Posting rows are one per
-    * distinct (field, term, doc), so df is a row count. Carries sum_tf so
-    * fieldStats derives from THIS vocabulary-sized table. (The segment
-    * build derives df from the ENCODED shard table instead — see
-    * [[termDfFromShards]]; this posting-row form remains for callers that
-    * have no shard table, e.g. the oracle twins and tests.) */
-  def termDf(postings: Dataset[Posting]): DataFrame =
-    postings.groupBy(col("field"), col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("sum_tf"))
 
   /** The segment's df TABLE re-derived from the encoded shard table: each
     * shard row already carries `count` (# postings = # distinct docs of
@@ -230,7 +162,7 @@ object IndexBuilder {
 
   /** Column-only tokenization of the corpus — the relational twin of the
     * flatMap path, used by SQL-oracle-facing queries (DuckDB parity) and
-    * cross-checked against `postings` in tests. */
+    * cross-checked against [[postingsNarrow]] in tests. */
   def tokensDF(corpus: DataFrame, textCol: String = "content"): DataFrame =
     corpus.select(col("doc_id"),
       explode(Analyzer.tokens(col(textCol))).as("term"))

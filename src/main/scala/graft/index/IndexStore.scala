@@ -274,7 +274,8 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     // its own pass — the extreme-scale mode (cache << data); graft.Cli
     // auto-selects it from input size vs heap. The NARROW row form (field
     // rank byte + packed tf|dl, see IndexBuilder.postingsNarrow) keeps the
-    // cached and shuffled bytes ~25% smaller than Posting rows.
+    // cached and shuffled bytes ~25% smaller than rows carrying the field
+    // name and separate tf, dl columns.
     val tfRows = IndexBuilder.postingsNarrow(corpus, cfg.fields)
     if (cfg.cacheBuild)
       tfRows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -753,18 +754,25 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   private def deleteVictims(victims: Dataset[CorpusDoc]): Unit = {
     val maxSeg = segments.map(_.id).reduceOption(_ max _).getOrElse(-1)
     victims.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // ONE tokenize walk feeds both corrections: one row per distinct
+    // (field, term) of each victim doc, fidx mapped back through the SORTED
+    // field list (the surrogate's meaning) and dl unpacked from tfdl
+    val rows = IndexBuilder.postingsNarrow(victims, cfg.fields)
+      .toDF("fidx", "term", "doc_id", "tfdl")
+      .select(element_at(typedLit(cfg.fields.sorted), col("fidx").cast("int") + 1).as("field"),
+        col("term"), col("doc_id"), col("tfdl").bitwiseAND(0xffffffffL).as("dl"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nVictims = victims.count()
       if (nVictims == 0) return
-      // df corrections: one row per distinct (field, term) of each victim doc
-      val deltas = IndexBuilder.postings(victims, cfg.fields)
-        .groupBy(col("field"), col("term")).agg(count(lit(1)).as("ddf"))
+      // df corrections: each row is one doc of its (field, term)
+      val deltas = rows.groupBy(col("field"), col("term")).agg(count(lit(1)).as("ddf"))
       deltas.write.mode(SaveMode.Append).parquet(p("dfdelta").toString)
       // stats corrections. n was set to numDocs for EVERY field at build, so
       // dn must be the victim-doc count for every field too — even a field
       // that tokenizes to zero tokens for a victim (no posting rows) had that
       // doc counted in its n. dsum_dl still comes from the tokenized lengths.
-      val dsum = IndexBuilder.postings(victims, cfg.fields)
+      val dsum = rows
         .groupBy(col("field"), col("doc_id")).agg(first(col("dl")).as("dl"))
         .groupBy(col("field")).agg(sum(col("dl")).as("dsum_dl"))
       val stats = cfg.fields.toDF("field")
@@ -776,7 +784,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       victims.select(col("doc_id")).distinct()
         .withColumn("max_seg", lit(maxSeg))
         .write.mode(SaveMode.Append).parquet(p("tombstones").toString)
-    } finally { victims.unpersist(); () }
+    } finally { rows.unpersist(); victims.unpersist(); () }
   }
 
   /** Update = delete + re-add under a newer segment (reference

@@ -3,16 +3,15 @@ package graft.index
 import graft.core.PostingShard
 import scala.collection.mutable.ArrayBuffer
 
-/** Streaming group-walk over a (field, term, shard, doc_id)-sorted posting
+/** Streaming group-walk over a (term, fidx, shard, doc_id)-sorted posting
   * run: emits one encoded [[PostingShard]] per key group with a single
   * reusable triplet buffer per task — no per-group collection objects, no
-  * aggregation hash map, no Kryo (see IndexBuilder.encodeShards). */
+  * aggregation hash map, no Kryo (see [[IndexBuilder.encodeShardsNarrow]]). */
 object ShardEncoder {
 
-  /** Narrow-row twin of [[encodeSortedRun]] (see
-    * [[IndexBuilder.postingsNarrow]]): group key is (fidx, term, shard)
-    * with `fidx` mapped back through `fields` (the sorted field list) and
-    * (tf, dl) unpacked from one long. Emits byte-identical shards. */
+  /** Walks narrow rows (see [[IndexBuilder.postingsNarrow]]): group key is
+    * (fidx, term, shard) with `fidx` mapped back through `fields` (the
+    * sorted field list) and (tf, dl) unpacked from one long. */
   def encodeSortedRunNarrow(rows: Iterator[(Byte, String, Long, Long, Long)],
                             fields: Array[String]): Iterator[PostingShard] =
     new Iterator[PostingShard] {
@@ -48,41 +47,6 @@ object ShardEncoder {
         val (blocks, blob) = PostingCodec.encode(buf.toArray)
         PostingShard(fields(fidx), term, shard, buf.length.toLong, sumTf, maxTf,
           blocks, blob)
-      }
-    }
-
-  def encodeSortedRun(
-      rows: Iterator[(String, String, Long, Long, Int, Int)]): Iterator[PostingShard] =
-    new Iterator[PostingShard] {
-      private val buf = new ArrayBuffer[(Long, Int, Int)](256)
-      private var pending: (String, String, Long, Long, Int, Int) = _
-      private var hasPending = false
-
-      override def hasNext: Boolean = hasPending || rows.hasNext
-
-      override def next(): PostingShard = {
-        val first = if (hasPending) pending else rows.next()
-        hasPending = false
-        val (field, term, shard) = (first._1, first._2, first._3)
-        buf.clear()
-        buf += ((first._4, first._5, first._6))
-        var sumTf = first._5.toLong
-        var maxTf = first._5
-        var done = false
-        while (!done && rows.hasNext) {
-          val r = rows.next()
-          if (r._1 == field && r._2 == term && r._3 == shard) {
-            buf += ((r._4, r._5, r._6))
-            sumTf += r._5
-            if (r._5 > maxTf) maxTf = r._5
-          } else {
-            pending = r
-            hasPending = true
-            done = true
-          }
-        }
-        val (blocks, blob) = PostingCodec.encode(buf.toArray)
-        PostingShard(field, term, shard, buf.length.toLong, sumTf, maxTf, blocks, blob)
       }
     }
 }

@@ -57,8 +57,13 @@ class IndexSearchSpec extends AnyFunSuite {
   }
 
   test("flatMap postings path equals relational explode path (content field)") {
-    val viaFlatMap = IndexBuilder.postings(corpusDS, Seq("content"))
-      .select($"term", $"doc_id", $"tf", $"dl")
+    val fields = Seq("content")
+    val walked = IndexBuilder.postingsNarrow(corpusDS, fields)
+      .map { case (fidx, term, docId, tfdl) =>
+        (fields.sorted.apply(fidx), term, docId, (tfdl >>> 32).toInt, tfdl.toInt) }
+      .toDF("field", "term", "doc_id", "tf", "dl")
+    assert(walked.select($"field").distinct().as[String].collect().toSeq == fields)
+    val viaFlatMap = walked.select($"term", $"doc_id", $"tf", $"dl")
     val viaExplode = IndexBuilder.termFrequenciesDF(corpusDS.toDF(), "content")
       .select($"term", $"doc_id", $"tf".cast("int").as("tf"), $"dl".cast("int").as("dl"))
     assert(viaFlatMap.exceptAll(viaExplode).isEmpty &&

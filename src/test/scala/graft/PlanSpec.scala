@@ -4,13 +4,15 @@ import graft.core.IndexConfig
 import graft.corpus.CorpusGen
 import graft.index.IndexStore
 import graft.search.{SearchEngine, SearchMode}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan audits: the scale story only holds if the plans are what we think
   * they are. Checks parquet filter pushdown on the postings and the term
   * dictionary, and — with a Spark listener, not plan strings — that a warm
   * distributed read is ONE job of one shuffle-free stage and a warm driver
-  * read runs none. */
+  * read runs none; the pipeline plans stay within their Exchange budgets. */
 class PlanSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -121,6 +123,25 @@ class PlanSpec extends AnyFunSuite {
         "curation op must not shuffle:\n" + plan.take(2000))
       assert(plan.contains("WholeStageCodegen") || plan.contains("*("),
         "curation op must stay inside codegen:\n" + plan.take(2000))
+    }
+  }
+
+  /** Exchange nodes (shuffle + broadcast) of each pipeline plan at sf0.001,
+    * as measured when these budgets were set; a plan change may lower one,
+    * never raise it. */
+  private val exchangeBudgets = Seq("q_dedup_minhash_lsh" -> 46, "q_dedup_simhash" -> 10,
+    "q_dedup_sweep" -> 2, "q_decontaminate" -> 19, "q_merge_segments" -> 1)
+
+  private object AqePlan extends AdaptiveSparkPlanHelper
+
+  test("pipeline plans stay within their Exchange-node budgets") {
+    exchangeBudgets.foreach { case (name, budget) =>
+      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      // the AQE initial plan, subqueries included; planning runs no action
+      val n = AqePlan.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: Exchange => e
+      }.size
+      assert(n <= budget, s"$name plans $n Exchange nodes, budget $budget")
     }
   }
 }

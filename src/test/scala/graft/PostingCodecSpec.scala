@@ -1,6 +1,7 @@
 package graft
 
-import graft.index.PostingCodec
+import graft.analysis.Analyzer
+import graft.index.{IndexBuilder, PostingCodec}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
@@ -69,34 +70,34 @@ class PostingCodecSpec extends AnyFunSuite {
     assert(cur.blockFor(3L * 1000 + 5).isEmpty) // beyond last
   }
 
-  test("Aggregator (hash-agg) path produces blobs identical to the sort-based encoder") {
-    // PostingBlobAggregator is the groupBy/udaf alternative to the
-    // sort-based ShardEncoder (kept for incremental small-batch merges; the
-    // bulk build uses the sorted walk — see IndexBuilder.encodeShards docs).
+  test("encodeShardsNarrow: every (field, term, shard) row equals a driver-side PostingCodec.encode") {
     val spark = TestSpark.spark
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val postings = graft.corpus.CorpusGen.generate(spark, 60, seed = 41)
-      .flatMap { d =>
-        graft.analysis.Analyzer.termFrequencies(d.content).map { case (t, tf) =>
-          graft.core.Posting("content", t, d.doc_id,
-            tf, graft.analysis.Analyzer.tokenize(d.content).length)
-        }
-      }
-    val viaSort = graft.index.IndexBuilder.encodeShards(postings, 16)
-      .select($"term", $"shard", hex($"blob").as("b"), hex($"blocks").as("bl"),
-        $"count", $"sum_tf", $"max_tf")
-      .collect().map(_.toString).sorted.toSeq
-    val blobAgg = udaf(graft.index.PostingBlobAggregator,
-      org.apache.spark.sql.Encoders.product[graft.index.PostingIn])
-    val viaAgg = postings.toDF()
-      .withColumn("shard", floor($"doc_id" / 16).cast("long"))
-      .groupBy($"field", $"term", $"shard")
-      .agg(blobAgg($"doc_id", $"tf", $"dl").as("enc"))
-      .select($"term", $"shard", hex($"enc.blob").as("b"), hex($"enc.blocks").as("bl"),
-        $"enc.count".as("count"), $"enc.sum_tf".as("sum_tf"), $"enc.max_tf".as("max_tf"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(viaSort == viaAgg)
+    val fields = Seq("path", "content", "repo") // out of sorted order: exercises fidx -> name
+    val span = 16L
+    val corpus = graft.corpus.CorpusGen.generate(spark, 60, seed = 41)
+    def key(r: (String, String, Long, Long, Long, Int, Seq[Byte], Seq[Byte])) = (r._1, r._2, r._3)
+    val got = IndexBuilder.encodeShardsNarrow(IndexBuilder.postingsNarrow(corpus, fields), span,
+        fields.sorted.toArray)
+      .collect().map(r => (r.getAs[String]("field"), r.getAs[String]("term"),
+        r.getAs[Long]("shard"), r.getAs[Long]("count"), r.getAs[Long]("sum_tf"),
+        r.getAs[Int]("max_tf"), r.getAs[Array[Byte]]("blocks").toSeq,
+        r.getAs[Array[Byte]]("blob").toSeq)).sortBy(key).toSeq
+    val expected = (for {
+      d <- corpus.collect().toSeq
+      f <- fields
+      text = graft.core.CorpusDoc.fieldValue(d, f)
+      dl = Analyzer.tokenize(text).length
+      (t, tf) <- Analyzer.termFrequencies(text)
+    } yield ((f, t, d.doc_id / span), (d.doc_id, tf, dl)))
+      .groupMap(_._1)(_._2).toSeq.map { case ((f, t, shard), ps) =>
+        val sorted = ps.sortBy(_._1).toArray
+        val (blocks, blob) = PostingCodec.encode(sorted)
+        (f, t, shard, sorted.length.toLong, sorted.map(_._2.toLong).sum, sorted.map(_._2).max,
+          blocks.toSeq, blob.toSeq)
+      }.sortBy(key)
+    assert(got.map(_._1).distinct.sorted == fields.sorted)
+    assert(got.size == expected.size)
+    got.zip(expected).foreach { case (g, e) => assert(g == e, s"shard row ${key(g)}") }
   }
 
   test("varint round-trips boundary values") {

@@ -136,6 +136,27 @@ class StoreSpec extends AnyFunSuite {
     }
   }
 
+  test("multi-field delete: live df table and field stats equal a fresh build of the survivors") {
+    // all five fields, configured in UNSORTED order: the delete corrections
+    // must map each narrow row's field rank through the sorted list
+    val mcfg = IndexConfig(shardSpan = 32, fields = Seq("path", "content", "repo", "lang", "commit"))
+    val docs = corpus(60, seed = 29).collect().toSeq
+    val zeroTok = docs.head.copy(doc_id = 1000L, content = " \t ") // content: ZERO tokens
+    val all = docs :+ zeroTok
+    val victims = zeroTok.doc_id +: docs.slice(5, 10).map(_.doc_id)
+    val store = new IndexStore(spark, TestSpark.tempDir("mfdel"), mcfg)
+    store.createSegment(spark.createDataset(all))
+    store.delete(victims)
+    val fresh = new IndexStore(spark, TestSpark.tempDir("mfdel-fresh"), mcfg)
+    fresh.createSegment(spark.createDataset(all.filterNot(d => victims.contains(d.doc_id))))
+    def dfTable(s: IndexStore): Seq[String] = s.termDf().filter($"df" > 0)
+      .select($"field", $"term", $"df").collect().map(_.toString).sorted.toSeq
+    val got = dfTable(store)
+    assert(got.map(_.takeWhile(_ != ',')).distinct.size == 5, "every field must carry terms")
+    assert(got == dfTable(fresh), "df after delete must equal a fresh build of the survivors")
+    assert(store.fieldStats() == fresh.fieldStats())
+  }
+
   test("IndexStore.open adopts the persisted storage layout (shardSpan, fields)") {
     val dir = TestSpark.tempDir("layout")
     val built = new IndexStore(spark, dir,

@@ -65,21 +65,10 @@ final case class TermDf(field: String, term: String, df: Long)
   * required by `input_hint`. */
 final case class DocStat(doc_id: Long, content_sha: String)
 
-/** Per-(doc, field) token length (needed to maintain avgdl under deletes). */
-final case class DocFieldStat(doc_id: Long, field: String, dl: Int)
-
-/** Per-field corpus statistics: doc count and total token count
-  * (avgdl = sum_dl / n). The reference tracks TotalDocuments per field index
-  * (indexing.go:37). */
-final case class FieldStat(field: String, n: Long, sum_dl: Long)
-
 /** Tombstone: `doc_id` is deleted from all segments with id <= max_seg.
   * The segment bound makes delete+re-add (update, reference
   * indexing.go:669-687) safe: the re-added doc lives in a newer segment. */
 final case class Tombstone(doc_id: Long, max_seg: Int)
-
-/** Document-frequency correction appended on delete (ddf is subtracted). */
-final case class DfDelta(field: String, term: String, ddf: Long)
 
 /** A scored search hit. Mirrors the reference's DocumentObject
   * (indexing.go:56-60) minus the raw JSON payload (hydration joins back to

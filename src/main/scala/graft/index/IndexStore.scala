@@ -83,10 +83,11 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     }
   }
 
-  private def manifestNode(): com.fasterxml.jackson.databind.JsonNode = {
-    val in = fs.open(p("manifest.json"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+  private def manifestNode(): com.fasterxml.jackson.databind.JsonNode = readJson(p("manifest.json"))
+
+  private def readJson(path: Path): com.fasterxml.jackson.databind.JsonNode = {
+    val in = fs.open(path)
+    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in) finally in.close()
   }
 
   /** (shardSpan, fields) persisted in the manifest, if present. */
@@ -212,6 +213,10 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   def stageDone(segId: Int, stage: String): Boolean =
     fs.exists(p(s"seg-$segId", "_checkpoints", s"$stage.json"))
 
+  /** Rows a completed stage wrote, from its done-marker. */
+  private def stageRows(segId: Int, stage: String): Long =
+    readJson(p(s"seg-$segId", "_checkpoints", s"$stage.json")).get("rows").asLong()
+
   /** (fileName, rows, bytes) per parquet part file — per-partition metrics.
     * Footer reads fan out on a thread pool: doing them serially on the
     * driver added seconds of all-cores-idle time per stage. */
@@ -322,7 +327,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       // job (columns pruned at the source). A bare-parquet input whose
       // files' footers show disjoint ranges is stored by file copy instead
       // (no job at all). Unclustered inputs keep the range shuffle.
-      val storedCorpus = rawParquetInput(corpus).filter(footerDocIdRangesDisjoint) match {
+      rawParquetInput(corpus).filter(footerDocIdRangesDisjoint) match {
         case Some(files) => copyFilesStage(segId, "corpus", files, resume)
         case None => runStage(segId, "corpus", Seq("input"), resume) {
           if (docIdRangesDisjoint(corpus))
@@ -331,10 +336,11 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
             corpus.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id").toDF()
         }
       }
-      val numDocs = storedCorpus.count()
-      val shards = Await.result(postingsF, Duration.Inf)
+      // the marker's rows are the stored files' footer record counts: the
+      // doc count without a count job over the corpus
+      val numDocs = stageRows(segId, "corpus")
+      Await.result(postingsF, Duration.Inf)
       val dfTable = Await.result(dfF, Duration.Inf)
-      val _ = shards
 
       // Stage 5 reads only the (vocabulary-sized) df table.
       runStage(segId, "fieldstats", Seq(s"seg-$segId/df"), resume) {
@@ -628,18 +634,23 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       .agg(count(lit(1)).as("n_killed"))
   }
 
+  /** The paths [[versionToken]] polls, qualified once per store. */
+  @transient private lazy val versionPaths: Array[Path] =
+    Array("manifest.json", "tombstones", "dfdelta", "tombstats").map(n => fs.makeQualified(p(n)))
+
   /** Cheap store-version token (driver-side FS metadata only): changes when
     * any segment commits or any tombstone/df correction lands. Lets query
-    * layers cache stats/plans and invalidate correctly after CRUD. */
-  def versionToken(): String = {
-    def m(path: Path): String =
+    * layers cache stats/plans and invalidate correctly after CRUD. Every
+    * call stats the manifest and the three correction directories afresh,
+    * so a write through another handle or JVM shows at the next poll; only
+    * the paths themselves are built once. */
+  def versionToken(): String =
+    versionPaths.map { path =>
       try {
         val st = fs.getFileStatus(path)
         s"${st.getModificationTime}:${if (st.isDirectory) fs.listStatus(path).length else st.getLen}"
       } catch { case _: java.io.FileNotFoundException => "-" }
-    Seq(p("manifest.json"), p("tombstones"), p("dfdelta"), p("tombstats"))
-      .map(m).mkString("|")
-  }
+    }.mkString("|")
 
   /** Field catalog: per-field live doc count and distinct term count — the
     * reference's listIndexes (field name + TotalDocuments,

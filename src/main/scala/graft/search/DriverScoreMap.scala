@@ -13,10 +13,16 @@ package graft.search
 private[graft] final class DriverScoreMap(initialCapacity: Int = 1 << 12,
                                           maskWords: Int = 1) {
   private var cap = Integer.highestOneBit(math.max(initialCapacity, 16) * 2 - 1)
-  private var keys = Array.fill[Long](cap)(-1L)
+  private var keys = emptyKeys(cap)
   private var scores = new Array[Double](cap)
   private var masks = new Array[Long](cap * maskWords)
   private var n = 0
+
+  private def emptyKeys(c: Int): Array[Long] = {
+    val a = new Array[Long](c)
+    java.util.Arrays.fill(a, -1L)
+    a
+  }
 
   @inline private def idx(key: Long, c: Int): Int =
     // Stafford mix13 finalizer — docIds are often sequential, spread them
@@ -46,7 +52,7 @@ private[graft] final class DriverScoreMap(initialCapacity: Int = 1 << 12,
   private def grow(): Unit = {
     val oldKeys = keys; val oldScores = scores; val oldMasks = masks
     cap <<= 1
-    keys = Array.fill[Long](cap)(-1L)
+    keys = emptyKeys(cap)
     scores = new Array[Double](cap)
     masks = new Array[Long](cap * maskWords)
     var i = 0
@@ -64,15 +70,16 @@ private[graft] final class DriverScoreMap(initialCapacity: Int = 1 << 12,
 
   def size: Int = n
 
-  /** Visits every live entry with its number of set term bits. */
-  def foreach(f: (Long, Double, Int) => Unit): Unit = {
+  /** Offers every live entry whose term bits number `terms` to `heap` —
+    * every entry when the map tracks no mask. */
+  def offerMatches(heap: BoundedHitHeap, terms: Int): Unit = {
     var i = 0
     while (i < cap) {
       if (keys(i) != -1L) {
         var bits = 0
         var w = 0
         while (w < maskWords) { bits += java.lang.Long.bitCount(masks(i * maskWords + w)); w += 1 }
-        f(keys(i), scores(i), bits)
+        if (maskWords == 0 || bits == terms) heap.offer(keys(i), scores(i))
       }
       i += 1
     }

@@ -98,9 +98,7 @@ private[search] object ScoringKernel {
           }
         }
       }
-      acc.foreach { (d, s, bits) =>
-        if (q.maskWords == 0 || bits == q.terms) heap.offer(d, s)
-      }
+      acc.offerMatches(heap, q.terms)
     }
   }
 

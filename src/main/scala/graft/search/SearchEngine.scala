@@ -5,7 +5,7 @@ import graft.core._
 import graft.index.IndexStore
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -508,7 +508,7 @@ class SearchEngine(val store: IndexStore) {
     val hits = attempt(2)
     // rows under a fixed schema, in a relation marked analyzed: no encoder
     // to generate code for and nothing for the analyzer to do on every read
-    GraftColumnBridge.localFrame(spark, SearchEngine.HitSchema, hits.map { case (d, s) => Row(d, s) })
+    GraftColumnBridge.localFrame(spark, SearchEngine.HitSchema, hits)
   }
 
   /** The kernel on the driver: the pairs' shard rows (LRU, or one pruned

@@ -307,20 +307,37 @@ private[graft] object DriverPool {
   }
 
   /** Runs `unit(0) … unit(n - 1)` on up to `par` threads and returns their
-    * results in unit order; one unit, or `par` ≤ 1, runs inline. The first
-    * unit to fail cancels the rest, and its exception reaches the caller
-    * as thrown (not wrapped in an `ExecutionException`). */
+    * results in unit order; one unit, or `par` ≤ 1, runs inline. The
+    * calling thread takes part: it and at most `min(n, par) - 1` pool
+    * tasks claim units from one counter, so a small call finishes before a
+    * helper is scheduled, and the caller waits only for units already
+    * claimed, never for a queued task (a unit may itself call `run`). After
+    * the first failure no unit is claimed; the units in flight finish, then
+    * that failure reaches the caller as thrown. */
   def run[T: scala.reflect.ClassTag](n: Int, par: Int)(unit: Int => T): Array[T] = {
     if (n <= 1 || par <= 1) return Array.tabulate(n)(unit)
-    val done = new ExecutorCompletionService[(Int, T)](executor(par))
-    val futs = (0 until n).map(u => done.submit(() => (u, unit(u))))
     val out = new Array[T](n)
-    try (0 until n).foreach { _ =>
-      val (u, r) =
-        try done.take().get()
-        catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
-      out(u) = r
-    } finally futs.foreach(_.cancel(true)) // no-op for finished units
+    val next = new atomic.AtomicInteger()
+    val failure = new atomic.AtomicReference[Throwable]()
+    val finished = new CountDownLatch(n)
+    val claim: Runnable = () => {
+      var u = next.getAndIncrement()
+      while (u < n) {
+        if (failure.get == null)
+          try out(u) = unit(u)
+          catch { case e: Throwable => failure.compareAndSet(null, e) }
+        finished.countDown()
+        u = next.getAndIncrement()
+      }
+    }
+    val helpers = executor(par)
+    (1 until math.min(n, par)).foreach(_ => helpers.execute(claim))
+    claim.run()
+    // an interrupted caller stops the helpers claiming further units
+    try finished.await()
+    catch { case e: InterruptedException => failure.compareAndSet(null, e); throw e }
+    val e = failure.get
+    if (e != null) throw e
     out
   }
 }
@@ -331,7 +348,7 @@ private[graft] object DriverPool {
   * of every WAND/exhaustive scoring loop (one call per surviving posting),
   * and the old path allocated a tuple per offer plus two tuples per
   * comparison inside `Ordering.by`. */
-private[search] final class BoundedHitHeap(k: Int, shared: SharedTheta = null) {
+private[graft] final class BoundedHitHeap(k: Int, shared: SharedTheta = null) {
   private val cap = math.max(k, 0)
   private val ids = new Array[Long](math.max(cap, 1))
   private val scs = new Array[Double](math.max(cap, 1))

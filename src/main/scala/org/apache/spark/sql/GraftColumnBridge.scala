@@ -1,13 +1,14 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, GenericRowWithSchema}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types.StructType
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 /** Bridge to private[sql] APIs of Spark 4: the Column <-> Expression
@@ -20,23 +21,30 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** A local frame of `rows` under `schema`, as `createDataFrame` builds
-    * it but with the `LocalRelation` marked analyzed: its attributes are
-    * resolved by construction, so the analyzer skips it. The frame is a
-    * [[LocalRowsFrame]]: the actions that only read its rows are answered
+  /** A local frame of the `(doc_id, score)` pairs `hits` under `schema`
+    * (a long and a double column), as `createDataFrame` builds it but with
+    * the `LocalRelation` marked analyzed: its attributes are resolved by
+    * construction, so the analyzer skips it. One pass builds each hit's
+    * relation row and the row the frame returns, a `GenericRowWithSchema`
+    * as Spark's deserializer would give it; no converter runs. The frame is
+    * a [[LocalRowsFrame]]: the actions that only read its rows are answered
     * from the driver, with no Spark execution. */
-  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame = {
+  def localFrame(spark: SparkSession, schema: StructType, hits: Seq[(Long, Double)]): DataFrame = {
     val session = spark.asInstanceOf[classic.SparkSession]
-    val plan = LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(schema), rows)
+    val data = new Array[InternalRow](hits.length)
+    val rows = new Array[Row](hits.length)
+    var i = 0
+    hits.foreach { case (d, s) =>
+      data(i) = new GenericInternalRow(Array[Any](d, s))
+      rows(i) = new GenericRowWithSchema(Array[Any](d, s), schema)
+      i += 1
+    }
+    val plan = LocalRelation(DataTypeUtils.toAttributes(schema), ArraySeq.unsafeWrapArray(data))
     plan.setAnalyzed()
-    // the rows as Spark's deserializer returns them: each a
-    // GenericRowWithSchema under `schema`, holding the external values
-    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    val external = plan.data.map(r => toRow(r).asInstanceOf[Row]).toArray
     session.withActive {
       val qe = session.sessionState.executePlan(plan)
       qe.assertAnalyzed()
-      new LocalRowsFrame(qe, schema, external)
+      new LocalRowsFrame(qe, schema, rows)
     }
   }
 }

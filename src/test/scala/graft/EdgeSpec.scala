@@ -469,6 +469,34 @@ class EdgeSpec extends AnyFunSuite {
     assert(DriverPool.run(8, 2)(_ * 2).toSeq == (0 until 8).map(_ * 2), "the pool must stay usable")
   }
 
+  test("driver pool: the calling thread runs units itself") {
+    import graft.search.DriverPool
+    val caller = Thread.currentThread()
+    val threads = DriverPool.run(4, 4) { _ => Thread.sleep(50); Thread.currentThread() }
+    assert(threads.contains(caller), s"the caller ran none of the units: ${threads.map(_.getName).toSeq}")
+  }
+
+  test("driver pool: units that call run themselves do not deadlock") {
+    import graft.search.DriverPool
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    // more outer units than threads, each running a nested call on the same
+    // shared pool: a caller that waited for queued tasks would hang here
+    val nested = Future(DriverPool.run(8, 2) { u =>
+      DriverPool.run(4, 2) { v => Thread.sleep(5); u * 10 + v }.sum
+    })(scala.concurrent.ExecutionContext.global)
+    val sums = Await.result(nested, 30.seconds)
+    assert(sums.toSeq == (0 until 8).map(u => (0 until 4).map(u * 10 + _).sum))
+  }
+
+  test("driver pool: results come back in unit order") {
+    import graft.search.DriverPool
+    val rnd = new scala.util.Random(7)
+    val delays = Array.fill(64)(rnd.nextInt(3))
+    val out = DriverPool.run(64, 3) { u => Thread.sleep(delays(u)); s"unit-$u" }
+    assert(out.toSeq == (0 until 64).map(u => s"unit-$u"))
+  }
+
   test("commit-field exact lookup (40-hex unique terms)") {
     val docs = CorpusGen.generate(spark, 50, seed = 12).collect().toSeq
     val store = new IndexStore(spark, TestSpark.tempDir("commit"), IndexConfig(shardSpan = 64))

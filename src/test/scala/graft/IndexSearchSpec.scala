@@ -158,8 +158,17 @@ class IndexSearchSpec extends AnyFunSuite {
       writer.delete(victims)
       check(corpusLocal.take(200).filterNot(d => victims.contains(d.doc_id)))
       writer.add(spark.createDataset(corpusLocal.drop(200)))
-      check(corpusLocal.filterNot(d => victims.contains(d.doc_id)))
+      val live = corpusLocal.filterNot(d => victims.contains(d.doc_id))
+      check(live)
       assert(eng.store.segments.size == 2)
+      // compact renumbers the segments and removes the tombstone, dfdelta
+      // and tombstats directories the reader's caches were built against
+      writer.compact()
+      assert(eng.store.segments.map(_.id) == Seq(0))
+      Seq("tombstones", "dfdelta", "tombstats").foreach { d =>
+        assert(!new java.io.File(s"$dir/$d").exists(), s"$d must be gone after compact")
+      }
+      check(live)
     }
   }
 

@@ -167,13 +167,17 @@ class QuerySetSpec extends AnyFunSuite {
         ref(key) = (s0 + delta, if (bit >= 0) b0 + bit else b0)
       }
       assert(m.size == ref.size)
-      var seen = 0
-      m.foreach { (k, s, bits) =>
-        seen += 1
-        val (rs, rb) = ref(k)
-        assert(s == rs && bits == rb.size, s"entry mismatch at $k")
+      // a heap that holds every entry returns exactly the offered set; OR
+      // offers every entry, AND only those with one bit per query term
+      val termCounts = if (words == 0) Seq(3) else Seq(1, 2, 3)
+      termCounts.foreach { terms =>
+        val heap = new graft.search.BoundedHitHeap(ref.size)
+        m.offerMatches(heap, terms)
+        val got = heap.result()
+        val want = ref.collect { case (k, (s, bits)) if words == 0 || bits.size == terms => k -> s }
+        assert(got.size == want.size && got.toMap == want, s"words=$words terms=$terms")
+        if (words > 0) assert(want.nonEmpty && want.size < ref.size, s"words=$words terms=$terms")
       }
-      assert(seen == ref.size)
     }
   }
 

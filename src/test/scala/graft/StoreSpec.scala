@@ -229,6 +229,58 @@ class StoreSpec extends AnyFunSuite {
     assert(after == before, "compaction must not change results")
   }
 
+  test("versionToken: equal across handles on an unchanged store, moved by each write of another") {
+    val dir = TestSpark.tempDir("token")
+    val docs = corpus(60, seed = 37).collect().toSeq
+    val writer = new IndexStore(spark, dir, cfg)
+    writer.createSegment(spark.createDataset(docs.take(40)))
+    val reader = new IndexStore(spark, dir, cfg)
+    assert(reader.versionToken() == writer.versionToken())
+    assert(reader.versionToken() == reader.versionToken())
+    val writes = Seq[(String, () => Unit)](
+      "add" -> (() => { writer.add(spark.createDataset(docs.drop(40))); () }),
+      "delete" -> (() => writer.delete(docs.take(3).map(_.doc_id))),
+      "compact" -> (() => writer.compact()))
+    writes.foreach { case (name, write) =>
+      val before = reader.versionToken()
+      write()
+      val after = reader.versionToken()
+      assert(after != before, s"$name through another handle must move the reader's token")
+      assert(after == writer.versionToken())
+    }
+  }
+
+  test("manifest numDocs is the stored corpus's row count: file copy, rewrite and resume") {
+    val docs = corpus(90, seed = 31).collect().toSeq
+    def check(store: IndexStore, path: String): Unit = {
+      val stored = spark.read.parquet(s"${store.baseDir}/seg-0/corpus").count()
+      assert(stored == docs.size)
+      assert(store.segments.map(_.numDocs) == Seq(stored), s"$path: ${store.segments}")
+    }
+    // file copy: a bare parquet input whose files hold disjoint doc_id ranges
+    val input = TestSpark.tempDir("numdocs-in") + "/in"
+    spark.createDataset(docs).repartitionByRange(3, $"doc_id").write.parquet(input)
+    val copied = new IndexStore(spark, TestSpark.tempDir("numdocs-copy"), cfg)
+    copied.createSegment(spark.read.parquet(input).as[CorpusDoc])
+    val names = new java.io.File(s"${copied.baseDir}/seg-0/corpus").list().filter(_.endsWith(".parquet"))
+    assert(names.length == 3 && names.forall(_.matches("part-\\d{5}-part-.*")),
+      s"expected the input files copied: ${names.toSeq}")
+    check(copied, "file copy")
+    // rewrite: an input that is not a bare parquet scan
+    val dir = TestSpark.tempDir("numdocs-rewrite")
+    val rewritten = new IndexStore(spark, dir, cfg)
+    rewritten.createSegment(spark.createDataset(docs))
+    check(rewritten, "rewrite")
+    // resume: the corpus marker survives, later stages and the manifest do not
+    Seq("postings.json", "df.json", "fieldstats.json").foreach { m =>
+      assert(new java.io.File(s"$dir/seg-0/_checkpoints/$m").delete())
+    }
+    assert(new java.io.File(s"$dir/manifest.json").delete())
+    val resumed = new IndexStore(spark, dir, cfg)
+    resumed.createSegment(spark.createDataset(docs), resume = true)
+    check(resumed, "resume")
+  }
+
   test("bare-parquet input with interleaved doc_id files is range-written, not copied") {
     val docs = corpus(120, seed = 29).collect().toSeq
     val input = TestSpark.tempDir("interleaved") + "/in"

@@ -107,8 +107,9 @@ final case class IndexConfig(
     /** LRU budget (bytes) for the driver-side posting-blob cache serving the
       * driver fast paths — the bounded analogue of the reference's
       * all-in-RAM index (its radix tree holds every posting resident,
-      * indexing.go:130-139). Version-token invalidated on any CRUD. 0
-      * disables. Only lists small enough for the fast paths are ever
-      * cached, so entries are ≤ driverWandMaxBytes each. */
+      * indexing.go:130-139). One per store version, so any CRUD starts
+      * an empty one. 0 keeps nothing: every driver read scans its rows.
+      * Only lists small enough for the fast paths are ever cached, so
+      * entries are ≤ driverWandMaxBytes each. */
     driverBlobCacheBytes: Long = 64L << 20
 )

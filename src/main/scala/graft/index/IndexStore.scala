@@ -3,8 +3,9 @@ package graft.index
 import graft.analysis.Analyzer
 import graft.core._
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Segmented, resumable index storage (SURVEY.md §7.2 M5, north rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
   *                                blocks, blob) range-partitioned+sorted by
   *                                (field, term) → parquet min/max prunes both
   *                                exact-term and prefix-range scans
-  *     df/                      — (field, term, df)
+  *     df/                      — (field, term, df, sum_tf)
   *     fieldstats/              — (field, n, sum_dl)
   *     _checkpoints/<stage>.json — done-marker with rows/bytes/wallMs and
   *                                per-partition (file-level) metrics
@@ -56,10 +57,15 @@ object IndexStore {
     }
     new IndexStore(spark, baseDir, cfg)
   }
+
+  private val postingSchema = Encoders.product[PostingShard].schema
+  /** The df stage's table: (field, term, df, sum_tf). */
+  private val dfTableSchema = Encoders.product[TermDf].schema.add("sum_tf", LongType)
 }
 
 class IndexStore(val spark: SparkSession, val baseDir: String,
                  val cfg: IndexConfig = IndexConfig()) {
+  import IndexStore._
   import spark.implicits._
 
   private val hconf = spark.sparkContext.hadoopConfiguration
@@ -124,20 +130,22 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     * their persisted output is reused). The marker carries stage lineage and
     * per-partition (per-file) row/byte metrics read back from parquet
     * footers, emitted AFTER a successful write — a crash mid-write leaves no
-    * marker, so a re-run redoes the stage idempotently (overwrite mode). */
+    * marker, so a re-run redoes the stage idempotently (overwrite mode). A
+    * later stage reads the output with [[readStage]]. */
   private[index] def runStage(segId: Int, stage: String, lineage: Seq[String],
-                              resume: Boolean)(compute: => DataFrame): DataFrame = {
+                              resume: Boolean)(compute: => DataFrame): Unit = {
     val outDir = p(s"seg-$segId", stage)
     val marker = p(s"seg-$segId", "_checkpoints", s"$stage.json")
-    if (resume && fs.exists(marker)) {
-      spark.read.parquet(outDir.toString)
-    } else {
+    if (!(resume && fs.exists(marker))) {
       val t0 = System.nanoTime()
       compute.write.mode(SaveMode.Overwrite).parquet(outDir.toString)
       commitStageMarker(marker, outDir, stage, lineage, t0)
-      spark.read.parquet(outDir.toString)
     }
   }
+
+  /** One stage's output read with an explicit schema: no inference job. */
+  private def readStage(segId: Int, stage: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(p(s"seg-$segId", stage).toString)
 
   /** Emits the done-marker for a completed stage write (see [[runStage]]). */
   private def commitStageMarker(marker: Path, outDir: Path, stage: String,
@@ -174,7 +182,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
         case hfs: HadoopFsRelation
             if hfs.fileFormat.isInstanceOf[
               org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
-          val want = org.apache.spark.sql.Encoders.product[CorpusDoc].schema
+          val want = Encoders.product[CorpusDoc].schema
             .fields.map(f => (f.name, f.dataType)).toSeq
           val got = lr.schema.fields.map(f => (f.name, f.dataType)).toSeq
           if (got == want) Some(hfs.location.inputFiles.toSeq) else None
@@ -188,10 +196,10 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     * the identical done-marker as the write path, so resume/ownership
     * verification and per-partition metrics are unchanged. */
   private def copyFilesStage(segId: Int, stage: String, files: Seq[String],
-                             resume: Boolean): DataFrame = {
+                             resume: Boolean): Unit = {
     val outDir = p(s"seg-$segId", stage)
     val marker = p(s"seg-$segId", "_checkpoints", s"$stage.json")
-    if (resume && fs.exists(marker)) return spark.read.parquet(outDir.toString)
+    if (resume && fs.exists(marker)) return
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -207,7 +215,6 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     }}
     Await.result(Future.sequence(futures), Duration.Inf)
     commitStageMarker(marker, outDir, stage, Seq("input"), t0)
-    spark.read.parquet(outDir.toString)
   }
 
   def stageDone(segId: Int, stage: String): Boolean =
@@ -310,9 +317,10 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       // removing the pass beats overlapping it (guide §2.3; measured in
       // OPTIMIZATION_r06.md). Also drops the third tokenization pass in
       // cacheBuild = false mode.
-      val dfF = postingsF.map { shards =>
+      val dfF = postingsF.map { _ =>
         runStage(segId, "df", Seq(s"seg-$segId/postings"), resume) {
-          IndexBuilder.termDfTableFromShards(shards)
+          IndexBuilder.termDfTableFromShards(readStage(segId, "postings",
+            StructType(Seq("field", "term", "count", "sum_tf").map(postingSchema(_)))))
         }
       }
       // Stage 1: corpus copy (doc store). doc_id-clustered so top-k
@@ -340,11 +348,11 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       // doc count without a count job over the corpus
       val numDocs = stageRows(segId, "corpus")
       Await.result(postingsF, Duration.Inf)
-      val dfTable = Await.result(dfF, Duration.Inf)
+      Await.result(dfF, Duration.Inf)
 
       // Stage 5 reads only the (vocabulary-sized) df table.
       runStage(segId, "fieldstats", Seq(s"seg-$segId/df"), resume) {
-        IndexBuilder.fieldStats(dfTable, numDocs).coalesce(1)
+        IndexBuilder.fieldStats(readStage(segId, "df", dfTableSchema), numDocs).coalesce(1)
       }
       Await.result(docStatsF, Duration.Inf)
       numDocs
@@ -492,12 +500,9 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
 
   /** One segment's posting shards `(field, term, shard, blocks, blob)`,
     * read with an explicit schema (no schema-inference job). */
-  private[graft] def segmentPostings(segId: Int): DataFrame = {
-    val cols = Seq("field", "term", "shard", "blocks", "blob")
-    val schema = org.apache.spark.sql.Encoders.product[PostingShard].schema
-    spark.read.schema(org.apache.spark.sql.types.StructType(cols.map(schema(_))))
-      .parquet(p(s"seg-$segId", "postings").toString)
-  }
+  private[graft] def segmentPostings(segId: Int): DataFrame =
+    readStage(segId, "postings",
+      StructType(Seq("field", "term", "shard", "blocks", "blob").map(postingSchema(_))))
 
   /** Each committed segment's id with the modification time of its
     * postings done-marker — an identity that survives [[compact]], which
@@ -571,16 +576,13 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     }
   }
 
-  /** Tombstones as a driver-side map docId -> max deleted segment. Callers
-    * MUST guard with [[tombstoneCount]] vs `cfg.maxDriverTombstones` (the
-    * query layer does); past the bound use [[tombstoneAgg]] anti-joins. */
-  def tombstoneMap(): Map[Long, Int] = {
-    val tp = p("tombstones")
-    if (!fs.exists(tp)) Map.empty
-    else spark.read.parquet(tp.toString)
-      .groupBy(col("doc_id")).agg(max(col("max_seg")).as("max_seg"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-  }
+  /** Tombstones as a driver-side map docId -> max deleted segment: the
+    * collected [[tombstoneAgg]]. Callers MUST guard with [[tombstoneCount]]
+    * vs `cfg.maxDriverTombstones` (the query layer does); past the bound use
+    * [[tombstoneAgg]] anti-joins. */
+  def tombstoneMap(): Map[Long, Int] =
+    if (!fs.exists(p("tombstones"))) Map.empty
+    else tombstoneAgg().collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
 
   /** Raw tombstone row count, summed from parquet footers on the driver —
     * NO Spark job and no data read (this runs on every store-version cache
@@ -596,10 +598,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     * distributed anti-join form used when the set exceeds the driver bound.
     * Never collected or broadcast. */
   def tombstoneAgg(): DataFrame =
-    if (!fs.exists(p("tombstones")))
-      spark.emptyDataset[Tombstone].toDF("t_doc_id", "t_max_seg")
-    else tombstonesDF()
-      .groupBy(col("doc_id")).agg(max(col("max_seg")).as("max_seg"))
+    tombstonesDF().groupBy(col("doc_id")).agg(max(col("max_seg")).as("max_seg"))
       .toDF("t_doc_id", "t_max_seg")
 
   /** Raw tombstone rows (doc_id, max_seg), one per delete, never
@@ -609,7 +608,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     val tp = p("tombstones")
     if (!fs.exists(tp)) spark.emptyDataset[Tombstone].toDF()
     else spark.read
-      .schema(org.apache.spark.sql.Encoders.product[Tombstone].schema)
+      .schema(Encoders.product[Tombstone].schema)
       .parquet(tp.toString) // explicit schema: no inference job
   }
 
@@ -622,7 +621,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   def killedDocCountDF(): DataFrame = {
     // explicit schemas: a schema-inference footer job per parquet read
     // would defeat the whole single-job catalog contract
-    val docStatSchema = org.apache.spark.sql.Encoders.product[DocStat].schema
+    val docStatSchema = Encoders.product[DocStat].schema
     val ds = segments.map(s =>
         spark.read.schema(docStatSchema).parquet(p(s"seg-${s.id}", "docstats").toString)
           .select(col("doc_id")).withColumn("seg", lit(s.id)))
@@ -858,15 +857,9 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     val c = corpusOf(segs)
     val nTs = if (segs.isEmpty) 0L else tombstoneCount()
     if (nTs == 0L) return c.drop("seg")
-    if (nTs <= cfg.maxDriverTombstones) {
-      val ts = tombstoneMap()
-      val tsDF = broadcast(ts.toSeq.toDF("t_doc_id", "t_max_seg"))
-      c.join(tsDF, c("doc_id") === tsDF("t_doc_id") && c("seg") <= tsDF("t_max_seg"), "left_anti")
-        .drop("seg")
-    } else {
-      val tsDF = tombstoneAgg()
-      c.join(tsDF, c("doc_id") === tsDF("t_doc_id") && c("seg") <= tsDF("t_max_seg"), "left_anti")
-        .drop("seg")
-    }
+    val ts =
+      if (nTs <= cfg.maxDriverTombstones) broadcast(tombstoneMap().toSeq.toDF("t_doc_id", "t_max_seg"))
+      else tombstoneAgg()
+    c.join(ts, c("doc_id") === ts("t_doc_id") && c("seg") <= ts("t_max_seg"), "left_anti").drop("seg")
   }
 }

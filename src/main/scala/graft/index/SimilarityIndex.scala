@@ -421,7 +421,6 @@ class SimilarityIndex(val store: IndexStore, val textField: String = "content",
               .parquet(oldIds.map(id => store.segPath(id, stage)): _*)
               .drop("seg").withColumn("seg", lit(newId))
           }
-          ()
         }
     }
     readMeta().foreach { m =>
@@ -496,7 +495,6 @@ object SimilarityIndex {
                 transientMissing = false))
               .drop("seg").withColumn("seg", lit(0))
           }
-          ()
         }
       }
       val allSwept = oldIds.nonEmpty && oldIds.forall(m.swept)

@@ -53,8 +53,9 @@ object SearchMode {
   * `takeAsList`, `tail`, `count`, `isEmpty`) return the rows held on the
   * driver: no job, no SQL execution, no `QueryExecutionListener` event.
   * Transformations over it run through Spark as usual. Each public entry
-  * point polls the store's version token once; a read then runs on the
-  * caches of that version.
+  * point polls the store's version token once; a read then runs on one
+  * [[Version]]: the stats, tombstones, plans, resident handles and caches of
+  * that store version, loaded when a poll first saw its token.
   */
 class SearchEngine(val store: IndexStore) {
   import store.spark.implicits._
@@ -73,16 +74,15 @@ class SearchEngine(val store: IndexStore) {
   /** Expands a `beginsWith` prefix to concrete index terms via a range scan
     * on the term-sorted df table — the analogue of the reference's radix
     * `WalkPrefix` with its 100-subtree cap (indexing.go:773-785). */
-  def expandPrefix(prefix: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
-    refreshIfStale()
-    prefixTerms(prefix, fields, cap)
-  }
+  def expandPrefix(prefix: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] =
+    prefixTerms(poll(), prefix, fields, cap)
 
-  private def prefixTerms(prefix: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
+  private def prefixTerms(v: Version, prefix: String, fields: Seq[String],
+                          cap: Int = 100): Seq[(String, String)] = {
     // an empty prefix would "match" cap arbitrary terms — reject loudly
     // (search() never passes one; tokenization drops empty terms)
     require(prefix.nonEmpty, "prefix must be non-empty")
-    cachedExpansion("p", prefix, fields, cap) { termDf =>
+    cachedExpansion(v, "p", prefix, fields, cap) {
       val lo = prefix.toLowerCase
       // Range pruning needs a successor string upper-bounding every
       // lo-prefixed term in UTF-8 (code point) order. Incrementing the
@@ -96,7 +96,7 @@ class SearchEngine(val store: IndexStore) {
           val hi = lo.init + (lo.last + 1).toChar
           $"term" >= lo && $"term" < hi
         } else $"term".startsWith(lo)
-      termDf
+      v.termDf
         .filter($"field".isInCollection(fields) && pred)
         .select($"field", $"term").orderBy($"term", $"field").limit(cap)
         .collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -111,15 +111,14 @@ class SearchEngine(val store: IndexStore) {
     * bound the prefix walk applies — so a one-letter fuzzy query against a
     * corpus-scale dictionary never collects an unbounded term list to the
     * driver. */
-  def expandFuzzy(key: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
-    refreshIfStale()
-    fuzzyTerms(key, fields, cap)
-  }
+  def expandFuzzy(key: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] =
+    fuzzyTerms(poll(), key, fields, cap)
 
-  private def fuzzyTerms(key: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
+  private def fuzzyTerms(v: Version, key: String, fields: Seq[String],
+                         cap: Int = 100): Seq[(String, String)] = {
     val k = key.toLowerCase
     if (k.isEmpty) return Seq.empty
-    cachedExpansion("f", k, fields, cap) { termDf =>
+    cachedExpansion(v, "f", k, fields, cap) {
       // by code point: a supplementary first character is two UTF-16 units,
       // and a lone surrogate half becomes '?' in UTF-8
       val first = k.codePointAt(0)
@@ -133,7 +132,7 @@ class SearchEngine(val store: IndexStore) {
         else $"term".startsWith(lo)
       val containsAll = k.codePoints().distinct().toArray
         .map(c => $"term".contains(new String(Character.toChars(c)))).reduce(_ && _)
-      termDf
+      v.termDf
         .filter($"field".isInCollection(fields) && range)
         .filter(containsAll)
         .select($"field", $"term")
@@ -142,37 +141,20 @@ class SearchEngine(val store: IndexStore) {
     }
   }
 
-  /** Version-invalidated LRU for prefix/fuzzy expansions (≤ cap pairs per
-    * entry) — warm expanding queries need no dictionary-scan job. */
-  private val expandCache =
-    new java.util.LinkedHashMap[(String, String, Seq[String], Int), Seq[(String, String)]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Seq[String], Int), Seq[(String, String)]]): Boolean =
-        size() > 4096
-    }
-
-  private def cachedExpansion(kind: String, key: String, fields: Seq[String], cap: Int)(
-      compute: DataFrame => Seq[(String, String)]): Seq[(String, String)] = {
-    val ck = (kind, key, fields, cap)
-    val (tok, termDf, cached) = synchronized { (cacheToken, termDfC, expandCache.get(ck)) }
-    if (cached != null) cached
-    else {
-      val v = compute(termDf) // dictionary scan outside the monitor
-      synchronized {
-        if (cacheToken == tok && expandCache.get(ck) == null) expandCache.put(ck, v)
-      }
-      v
-    }
-  }
+  /** A prefix/fuzzy expansion from the version's LRU — warm expanding
+    * queries need no dictionary-scan job. */
+  private def cachedExpansion(v: Version, kind: String, key: String, fields: Seq[String], cap: Int)(
+      compute: => Seq[(String, String)]): Seq[(String, String)] =
+    v.expansions.getAll(Seq((kind, key, fields, cap)))(_ => Seq(compute)).head
 
   /** Fuzzy search: expand each query token with [[expandFuzzy]], then score
     * the matched terms with the standard BM25 accumulation. Returns the
     * top-k as a frame of driver rows, as [[search]] does. */
   def searchFuzzy(query: String, fields: Seq[String] = CorpusDoc.Fields,
                   k: Int = 100): DataFrame = {
-    refreshIfStale()
+    val v = poll()
     val qTerms = Analyzer.tokenize(query).distinct.sorted.toSeq
-    topK(qTerms, qTerms.flatMap(t => fuzzyTerms(t, fields).map { case (f, mt) => (f, mt, t) }),
+    topK(v, qTerms, qTerms.flatMap(t => fuzzyTerms(v, t, fields).map { case (f, mt) => (f, mt, t) }),
       k, SearchMode.Or)
   }
 
@@ -192,15 +174,15 @@ class SearchEngine(val store: IndexStore) {
     // a negative boost would flip idf's sign and invert WAND's upper bounds
     // into lower bounds, silently breaking pruning
     require(boosts.values.forall(_ >= 0.0), s"boosts must be >= 0: $boosts")
-    refreshIfStale()
+    val v = poll()
     // each matched (field, term) pair keeps the query term it expands from,
     // so AND stays "every query term has ≥ 1 matched expansion" under
     // prefix expansion
     val matched: Seq[(String, String, String)] =
       if (beginsWith)
-        qTerms.flatMap(t => prefixTerms(t, fields).map { case (f, mt) => (f, mt, t) })
+        qTerms.flatMap(t => prefixTerms(v, t, fields).map { case (f, mt) => (f, mt, t) })
       else fields.flatMap(f => qTerms.map(t => (f, t, t)))
-    topK(qTerms, matched, k, mode, boosts)
+    topK(v, qTerms, matched, k, mode, boosts)
   }
 
   /** Top-k hits hydrated with the stored documents (reference loads the ≤100
@@ -214,46 +196,15 @@ class SearchEngine(val store: IndexStore) {
       .orderBy(desc("score"), asc("doc_id"))
   }
 
-  // ---------- per-store-version caches ----------
-  // fieldStats / tombstones / the unioned table plans are re-read only when
-  // the store's version token changes (any segment commit or tombstone).
-  // This removes 3-4 driver-side jobs + file listings from EVERY query —
-  // the reference pays none of these because its index lives in RAM.
-  // Each public entry point polls the token once; the private helpers a
-  // read runs use the caches as that poll left them.
-
-  private var cacheToken: String = null
-  private var fieldStatsC: Map[String, (Long, Long)] = Map.empty
-  private var tombstoneC: Map[Long, Int] = Map.empty
-  private var tombSmallC: Boolean = true
-  private var shardSpanC: Long = store.cfg.shardSpan
-  private var postingsC: DataFrame = _
-  private var termDfC: DataFrame = _
-
-  private def refreshIfStale(): Unit = synchronized {
-    val t = store.versionToken()
-    if (t != cacheToken) {
-      fieldStatsC = store.fieldStats()
-      // size-guard the driver tombstone map: past the configured bound the
-      // map is never collected — the distributed read holds the tombstones
-      // resident beside the postings instead (a bulk delete of 10^9 ids
-      // must not OOM the driver)
-      tombSmallC = store.tombstoneCount() <= store.cfg.maxDriverTombstones
-      tombstoneC = if (tombSmallC) store.tombstoneMap() else Map.empty
-      // tombstones must be keyed by the span the postings were built with
-      shardSpanC = store.persistedLayout().fold(store.cfg.shardSpan)(_._1)
-      postingsC = store.postings()
-      termDfC = store.termDf()
-      blobCache.clear()
-      blobCacheSize = 0L
-      dfCache.clear()
-      expandCache.clear()
-      refreshResident()
-      cacheToken = t
-    }
-  }
-
-  // ---------- executor-resident postings (distributed path) ----------
+  // ---------- store versions ----------
+  // The reference answers every query from one in-RAM index
+  // (indexing.go:379-540). Here each store version is loaded once, when a
+  // poll first sees its token, into one immutable Version that the read
+  // carries: fieldStats, tombstones and the table plans are read from the
+  // store once per version instead of on every query (3-4 driver-side jobs
+  // and file listings), and the version's caches hold its shard rows, dfs
+  // and expansions. Nothing a read uses can come from another version.
+  //
   // Each committed segment's postings live on the executors, hash-
   // partitioned by shard under ONE partitioner — the distributed analogue of
   // the reference's all-in-RAM index (indexing.go:130-139). A segment's RDD
@@ -267,112 +218,59 @@ class SearchEngine(val store: IndexStore) {
     new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
   /** (segment id, postings marker mtime) — id alone is reused by compact(). */
   private type SegKey = (Int, Long)
+  /** Guarded by this engine's monitor, as is the swap of `current`. */
   private val residentC = scala.collection.mutable.HashMap.empty[SegKey, Resident[RDD[ResidentPart]]]
-  private var segKeysC: Seq[SegKey] = Nil
-  private var tombsC: Resident[ScoringKernel.Tombs] = _
+  @volatile private var current: Version = _
 
-  private def refreshResident(): Unit = {
-    segKeysC = store.postingsStamps()
-    residentC.keySet.diff(segKeysC.toSet).foreach(k => residentC.remove(k).foreach(_.drop()))
-    segKeysC.foreach { case key @ (id, _) =>
+  /** The version a read runs on: the current one while the store's token
+    * is unchanged, else the store as it is now, loaded once. */
+  private def poll(): Version = {
+    val token = store.versionToken()
+    val v = current
+    if (v != null && v.token == token) v
+    else synchronized {
+      if (current == null || current.token != token) {
+        val old = current
+        current = load(token)
+        if (old != null) old.tombs.drop()
+      }
+      current
+    }
+  }
+
+  private def load(token: String): Version = {
+    val cfg = store.cfg
+    // size-guard the driver tombstone map: past the configured bound the
+    // map is never collected — the distributed read holds the tombstones
+    // resident beside the postings instead (a bulk delete of 10^9 ids
+    // must not OOM the driver)
+    val tombstones =
+      if (store.tombstoneCount() <= cfg.maxDriverTombstones) Some(store.tombstoneMap()) else None
+    // tombstones must be keyed by the span the postings were built with
+    val span = store.persistedLayout().fold(cfg.shardSpan)(_._1)
+    val keys = store.postingsStamps()
+    residentC.keySet.diff(keys.toSet).foreach(k => residentC.remove(k).foreach(_.drop()))
+    val segs = keys.map { case key @ (id, _) =>
       residentC.getOrElseUpdate(key, new Resident(
         () => ScoringKernel.residentPostings(store.segmentPostings(id), id, partitioner,
           s"resident postings seg-$id of ${store.baseDir}"),
         (rdd: RDD[ResidentPart]) => { rdd.unpersist(blocking = false); () }))
     }
-    if (tombsC != null) tombsC.drop()
-    val (small, tomb, span) = (tombSmallC, tombstoneC, shardSpanC)
-    tombsC = new Resident(
-      () =>
-        if (!small) (None, Some(ScoringKernel.residentTombstones(store.tombstonesDF(), span,
+    val tombs = new Resident[ScoringKernel.Tombs](
+      () => tombstones match {
+        case None => (None, Some(ScoringKernel.residentTombstones(store.tombstonesDF(), span,
           partitioner, s"resident tombstones of ${store.baseDir}")))
-        else if (tomb.isEmpty) (None, None)
-        else (Some(spark.sparkContext.broadcast[ScoringKernel.TombMap](tomb)), None),
+        case Some(m) if m.isEmpty => (None, None)
+        case Some(m) => (Some(spark.sparkContext.broadcast[ScoringKernel.TombMap](m)), None)
+      },
       { case (b, r) => b.foreach(_.unpersist()); r.foreach(_.unpersist(blocking = false)) })
-  }
-
-  // ---------- driver posting-blob cache ----------
-  // Bounded LRU of collected shard rows per (field, term) — the driver fast
-  // paths' analogue of the reference's all-in-RAM radix tree (its postings
-  // are always resident, indexing.go:130-139). Only lists small enough for
-  // the fast paths ever reach here; a repeat query over cached terms runs
-  // ZERO Spark jobs. Invalidated wholesale when the store version changes.
-
-  private type ShardRow = ScoringKernel.ShardRow
-  private val blobCache =
-    new java.util.LinkedHashMap[(String, String), Array[ShardRow]](64, 0.75f, true)
-  private var blobCacheSize = 0L
-  private def rowBytes(r: ShardRow): Long =
-    (if (r._5 == null) 0 else r._5.length).toLong + r._6.length + 64
-
-  /** The pairs' shard rows plus, for prefix expansions, rows of other
-    * pairs inside the same field × term bounds; callers pick by key. */
-  private def collectRows(pairs: Seq[(String, String)]): Array[ShardRow] =
-    rowScan(pairs).as[ShardRow].collect()
-
-  /** Shard rows for the matched pairs, served from the LRU where possible.
-    * Rows fetched by this call are returned even if eviction (or a version
-    * change) keeps them out of the cache — a query never loses its own
-    * data. The Spark collect for misses runs OUTSIDE the engine monitor so
-    * one cold query cannot serialize every other query on this engine;
-    * inserts re-check the version token (never poison a newer cache).
-    *
-    * Version consistency: cache hits are captured under one version token
-    * and the miss collect runs unlocked, so a concurrent CRUD (notably a
-    * compact() that renumbers segments) landing in between would hand one
-    * query rows from TWO store versions. If the token moved while misses
-    * were fetched, the whole fetch (hits + misses) is retried once from the
-    * new version; a second concurrent bump is accepted (bounded retry —
-    * CRUD is rare relative to queries, and the tombstone filter still
-    * guards deletes either way). */
-  private[search] def fetchShardRows(matched0: Seq[(String, String)]): Array[ShardRow] = {
-    // dedupe: a duplicated pair would double-score its term
-    val matched = matched0.distinct
-    if (store.cfg.driverBlobCacheBytes <= 0) return collectRows(matched)
-    def attempt(retriesLeft: Int): Array[ShardRow] = {
-      val (tok, hits, missKeys) = synchronized {
-        val h = Map.newBuilder[(String, String), Array[ShardRow]]
-        val m = Seq.newBuilder[(String, String)]
-        matched.foreach { key =>
-          val c = blobCache.get(key)
-          if (c != null) h += key -> c else m += key
-        }
-        (cacheToken, h.result(), m.result())
-      }
-      val fetched: Map[(String, String), Array[ShardRow]] =
-        if (missKeys.isEmpty) Map.empty
-        else collectRows(missKeys).groupBy(r => (r._1, r._2))
-      if (missKeys.nonEmpty) synchronized {
-        if (cacheToken == tok) {
-          missKeys.foreach { key =>
-            if (blobCache.get(key) == null) { // racing filler may have won
-              val rows = fetched.getOrElse(key, Array.empty[ShardRow])
-              blobCache.put(key, rows)
-              blobCacheSize += rows.iterator.map(rowBytes).sum
-            }
-          }
-          val it = blobCache.entrySet().iterator()
-          while (blobCacheSize > store.cfg.driverBlobCacheBytes && it.hasNext) {
-            val e = it.next()
-            blobCacheSize -= e.getValue.iterator.map(rowBytes).sum
-            it.remove()
-          }
-        }
-      }
-      val mixedVersions = missKeys.nonEmpty && hits.nonEmpty && {
-        refreshIfStale()
-        synchronized { cacheToken != tok }
-      }
-      if (mixedVersions && retriesLeft > 0) attempt(retriesLeft - 1)
-      else matched.iterator.flatMap(k =>
-        hits.getOrElse(k, fetched.getOrElse(k, Array.empty[ShardRow]))).toArray
-    }
-    attempt(1)
+    new Version(token, store.fieldStats(), tombstones, store.postings(), store.termDf(), segs, tombs,
+      cfg.driverBlobCacheBytes)
   }
 
   /** Whether the tombstone set fits the driver-map bound; when false, every
     * query runs distributed, against tombstones held beside the postings. */
-  def tombstonesSmall: Boolean = { refreshIfStale(); tombSmallC }
+  def tombstonesSmall: Boolean = poll().tombstones.isDefined
 
   // ---------- scoring ----------
 
@@ -384,105 +282,69 @@ class SearchEngine(val store: IndexStore) {
     * global/block upper bounds and contributions) is linear in idf, so one
     * multiplication boosts them all consistently — WAND pruning stays safe
     * because bounds scale with contributions. */
-  private[search] def termStats(matched0: Seq[(String, String)],
-                                boosts: Map[String, Double] = Map.empty): Seq[TermStat] = {
-    refreshIfStale()
-    statsFor(matched0, boosts)
-  }
+  private[search] def termStats(matched: Seq[(String, String)],
+                                boosts: Map[String, Double] = Map.empty): Seq[TermStat] =
+    statsFor(poll(), matched, boosts)
 
-  private def statsFor(matched0: Seq[(String, String)], boosts: Map[String, Double]): Seq[TermStat] = {
+  private def statsFor(v: Version, matched0: Seq[(String, String)],
+                       boosts: Map[String, Double]): Seq[TermStat] = {
     val matched = matched0.distinct // one stat row per pair, always
-    val fstats = synchronized(fieldStatsC)
-    val dfMap = fetchDfs(matched)
-    matched.flatMap { case (f, t) =>
-      dfMap.get((f, t)).filter(_ > 0).flatMap { df =>
-        fstats.get(f).collect { case (n, sumDl) if n > 0 =>
-          val boost = boosts.getOrElse(f, 1.0)
-          val idf = boost * math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-          val avgdl = sumDl.toDouble / n
-          TermStat(f, t, df, idf, avgdl)
-        }
+    matched.zip(fetchDfs(v, matched)).flatMap { case ((f, t), df) =>
+      v.fieldStats.get(f).collect { case (n, sumDl) if n > 0 && df > 0 =>
+        val boost = boosts.getOrElse(f, 1.0)
+        val idf = boost * math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+        val avgdl = sumDl.toDouble / n
+        TermStat(f, t, df, idf, avgdl)
       }
     }
   }
 
-  /** Per-(field, term) dfs with a version-invalidated LRU (8-byte values —
-    * the bound is entry count). Misses fetch in one pruned scan; absent
-    * pairs are negative-cached as 0 so repeated misses cost nothing. A warm
-    * repeat query thus needs no Spark job for its statistics. */
-  private val dfCache = new java.util.LinkedHashMap[(String, String), java.lang.Long](1024, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, String), java.lang.Long]): Boolean = size() > (1 << 17)
-  }
-
-  private def fetchDfs(matched: Seq[(String, String)]): Map[(String, String), Long] = {
-    val (tok, termDf, hits, missKeys) = synchronized {
-      val h = Map.newBuilder[(String, String), Long]
-      val m = Seq.newBuilder[(String, String)]
-      matched.distinct.foreach { key =>
-        val c = dfCache.get(key)
-        if (c != null) h += key -> c.longValue else m += key
-      }
-      (cacheToken, termDfC, h.result(), m.result())
-    }
-    if (missKeys.isEmpty) hits
-    else {
-      // dictionary scan outside the monitor (see fetchShardRows)
-      val fieldsTouched = missKeys.map(_._1).distinct
-      val terms = missKeys.map(_._2).distinct
-      val fetched = termDf
-        .filter($"field".isInCollection(fieldsTouched) && $"term".isInCollection(terms))
+  /** Per-(field, term) dfs, from the version's LRU. Misses fetch in one
+    * pruned scan; absent pairs are cached as 0 so repeated misses cost
+    * nothing. A warm repeat query thus needs no Spark job for its
+    * statistics. */
+  private def fetchDfs(v: Version, matched: Seq[(String, String)]): Seq[Long] =
+    v.dfs.getAll(matched) { misses =>
+      val fetched = v.termDf
+        .filter($"field".isInCollection(misses.map(_._1).distinct) &&
+          $"term".isInCollection(misses.map(_._2).distinct))
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      synchronized {
-        if (cacheToken == tok) missKeys.foreach { key =>
-          dfCache.put(key, java.lang.Long.valueOf(fetched.getOrElse(key, 0L)))
-        }
-      }
-      hits ++ missKeys.map(key => key -> fetched.getOrElse(key, 0L))
+      misses.map(fetched.getOrElse(_, 0L))
     }
-  }
 
   /** The postings bounded by two parquet-pushable IN filters, on the
     * fields and on the terms of `matched`: exact for a field × term cross
     * product (every non-prefix query), a superset for prefix expansions. */
-  private def bounded(matched: Seq[(String, String)]): DataFrame =
-    synchronized(postingsC).filter($"field".isInCollection(matched.map(_._1).distinct) &&
+  private def bounded(v: Version, matched: Seq[(String, String)]): DataFrame =
+    v.postings.filter($"field".isInCollection(matched.map(_._1).distinct) &&
       $"term".isInCollection(matched.map(_._2).distinct))
 
   /** The scan the driver kernel reads on an LRU miss: the bounded
     * postings as [[ScoringKernel.ShardRow]] columns. */
-  private[graft] def shardScan(matched: Seq[(String, String)]): DataFrame = {
-    refreshIfStale()
-    rowScan(matched)
-  }
+  private[graft] def shardScan(matched: Seq[(String, String)]): DataFrame = rowScan(poll(), matched)
 
-  private def rowScan(matched: Seq[(String, String)]): DataFrame =
-    bounded(matched).select($"field", $"term", $"seg", $"shard", $"blocks", $"blob")
+  private def rowScan(v: Version, matched: Seq[(String, String)]): DataFrame =
+    bounded(v, matched).select($"field", $"term", $"seg", $"shard", $"blocks", $"blob")
 
   /** Selects only the shards of the matched terms — equality pushdown on the
     * (field, term)-sorted postings table. */
   def matchedShards(matched0: Seq[(String, String)]): DataFrame = {
-    refreshIfStale()
+    val v = poll()
     val matched = matched0.distinct // duplicates would fool the cross-product check
     val cross = matched.map(_._1).distinct.size.toLong * matched.map(_._2).distinct.size
     // prefix expansions, whose terms differ per field, need the exact pairs
-    if (matched.size.toLong == cross) bounded(matched)
-    else bounded(matched).join(broadcast(matched.toDF("field", "term")), Seq("field", "term"), "left_semi")
+    if (matched.size.toLong == cross) bounded(v, matched)
+    else bounded(v, matched).join(broadcast(matched.toDF("field", "term")), Seq("field", "term"), "left_semi")
   }
 
   /** Scores `matched` — (field, index term, query term it expands from) —
-    * through the kernel and returns the top-k as a local frame, reading the
-    * caches as the caller's version poll left them. A distributed read uses
-    * stats, resident postings and tombstones of one store version: if a
-    * concurrent poll moves the version between the stats and the snapshot,
-    * the read restarts from the new one, at most twice (bounded, as in
-    * [[fetchShardRows]]). */
-  private def topK(qTerms: Seq[String], matched: Seq[(String, String, String)], k: Int,
+    * through the kernel on version `v` and returns the top-k as a local
+    * frame. */
+  private def topK(v: Version, qTerms: Seq[String], matched: Seq[(String, String, String)], k: Int,
                    mode: SearchMode, boosts: Map[String, Double] = Map.empty): DataFrame = {
     val pairs = matched.map { case (f, t, _) => (f, t) }.distinct
-    def attempt(retriesLeft: Int): Seq[(Long, Double)] = {
-      val (tok, small) = synchronized((cacheToken, tombSmallC))
-      val stats = if (pairs.isEmpty || k <= 0) Nil else statsFor(pairs, boosts)
+    val stats = if (pairs.isEmpty || k <= 0) Nil else statsFor(v, pairs, boosts)
+    val hits =
       if (stats.isEmpty) Nil
       else {
         val words = KernelQuery.maskWords(mode, qTerms.size)
@@ -495,30 +357,29 @@ class SearchEngine(val store: IndexStore) {
         val q = KernelQuery(stats.map(s =>
           (s.field, s.term) -> PairStat(s.idf, s.avgdl, masks((s.field, s.term)))).toMap,
           mode, qTerms.size, k, bm25)
-        // ~8 bytes per posting bounds the candidate volume
-        if (stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes && small)
-          driverTopK(q, pairs)
-        else {
-          val (t, segs, tombs) = synchronized((cacheToken, segKeysC.map(residentC), tombsC))
-          if (t != tok && retriesLeft > 0) attempt(retriesLeft - 1)
-          else ScoringKernel.distributedTopK(segs.map(_.get), tombs.get, q)
+        v.tombstones match {
+          // ~8 bytes per posting bounds the candidate volume
+          case Some(tomb) if stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes =>
+            driverTopK(v, q, pairs, tomb)
+          case _ => ScoringKernel.distributedTopK(v.segs.map(_.get), v.tombs.get, q)
         }
       }
-    }
-    val hits = attempt(2)
     // rows under a fixed schema, in a relation marked analyzed: no encoder
     // to generate code for and nothing for the analyzer to do on every read
     GraftColumnBridge.localFrame(spark, SearchEngine.HitSchema, hits)
   }
 
-  /** The kernel on the driver: the pairs' shard rows (LRU, or one pruned
-    * scan) grouped by shard, the groups scored concurrently on the pool.
-    * Rows are read BEFORE the tombstone map: if a delete lands between the
-    * two reads, the map is the newer of the pair and the deleted doc stays
-    * filtered (the reverse order could resurface it). */
-  private def driverTopK(q: KernelQuery, pairs: Seq[(String, String)]): Seq[(Long, Double)] = {
-    val groups = fetchShardRows(pairs).groupBy(_._4).toArray.sortBy(_._1).map(_._2)
-    val tomb = synchronized(tombstoneC)
+  /** The kernel on the driver: the pairs' shard rows (the version's LRU, or
+    * one pruned scan of its postings for the misses) grouped by shard, the
+    * groups scored concurrently on the pool. Rows this read scanned are
+    * scored even when the LRU keeps none of them. */
+  private def driverTopK(v: Version, q: KernelQuery, pairs: Seq[(String, String)],
+                         tomb: Map[Long, Int]): Seq[(Long, Double)] = {
+    val rows = v.rows.getAll(pairs) { misses =>
+      val got = rowScan(v, misses).as[ShardRow].collect().groupBy(r => (r._1, r._2))
+      misses.map(got.getOrElse(_, Array.empty[ShardRow]))
+    }
+    val groups = rows.iterator.flatMap(_.iterator).toArray.groupBy(_._4).toArray.sortBy(_._1).map(_._2)
     // only WAND prunes against θ; exhaustive heaps need no shared floor
     val shared = if (q.mode == SearchMode.Wand) new SharedTheta else null
     val heaps = DriverPool.run(groups.length, spark.sparkContext.defaultParallelism) { g =>
@@ -529,6 +390,28 @@ class SearchEngine(val store: IndexStore) {
     val top = new BoundedHitHeap(q.k)
     heaps.foreach(_.result().foreach { case (d, s) => top.offer(d, s) })
     top.result()
+  }
+
+  private type ShardRow = ScoringKernel.ShardRow
+
+  /** One store version as a read sees it, never changed once loaded: the
+    * live field stats, the driver tombstone map (None past
+    * `maxDriverTombstones`), the postings and df plans, the segments'
+    * resident postings and this version's resident tombstones, and three
+    * LRUs over them — expansions (≤ cap pairs each, by count), dfs (by
+    * count) and the driver path's shard rows per (field, term), by bytes
+    * up to `driverBlobCacheBytes`. Only lists small enough for the driver
+    * path reach the row LRU, so a repeat query over cached terms runs ZERO
+    * Spark jobs. */
+  private final class Version(val token: String, val fieldStats: Map[String, (Long, Long)],
+                              val tombstones: Option[Map[Long, Int]],
+                              val postings: DataFrame, val termDf: DataFrame,
+                              val segs: Seq[Resident[RDD[ResidentPart]]],
+                              val tombs: Resident[ScoringKernel.Tombs], rowBudget: Long) {
+    val expansions = new Lru[(String, String, Seq[String], Int), Seq[(String, String)]](4096, _ => 1L)
+    val dfs = new Lru[(String, String), Long](1L << 17, _ => 1L)
+    val rows = new Lru[(String, String), Array[ShardRow]](rowBudget, rs =>
+      64L + rs.iterator.map(r => (if (r._5 == null) 0L else r._5.length.toLong) + r._6.length + 64).sum)
   }
 }
 
@@ -545,4 +428,32 @@ private final class Resident[T](build: () => T, release: T => Unit) {
     value.get
   })
   def drop(): Unit = value.foreach(release)
+}
+
+/** A least-recently-used map whose entries' total `weight` (each > 0)
+  * stays within `budget`; a budget of 0 keeps nothing. */
+private[graft] final class Lru[K, V](budget: Long, weight: V => Long) {
+  private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+  private var used = 0L
+
+  /** The values of the distinct `keys`, in order: cached ones, and the rest
+    * from ONE call of `fill` on exactly the misses (outside the lock, so a
+    * slow fill holds up no other caller), which returns them in order and
+    * are then cached as far as the budget allows. */
+  def getAll(keys: Seq[K])(fill: Seq[K] => Seq[V]): Seq[V] = {
+    val cached = synchronized(keys.map(k => Option(map.get(k))))
+    val misses = keys.zip(cached).collect { case (k, None) => k }
+    if (misses.isEmpty) return cached.map(_.get)
+    val filled = fill(misses)
+    synchronized(misses.zip(filled).foreach { case (k, v) => put(k, v) })
+    val it = filled.iterator
+    cached.map(_.getOrElse(it.next()))
+  }
+
+  private def put(k: K, v: V): Unit = {
+    val old = map.put(k, v)
+    used += weight(v) - Option(old).fold(0L)(weight)
+    val it = map.values.iterator
+    while (used > budget && it.hasNext) { used -= weight(it.next()); it.remove() }
+  }
 }

@@ -134,7 +134,8 @@ class IndexSearchSpec extends AnyFunSuite {
     seed.delete(victims)
     val live = corpusLocal.filterNot(d => victims.contains(d.doc_id))
     Seq(cfg, cfg.copy(driverWandMaxBytes = 0), cfg.copy(maxDriverTombstones = 0),
-        cfg.copy(driverWandMaxBytes = 0, maxDriverTombstones = 0)).foreach { c =>
+        cfg.copy(driverWandMaxBytes = 0, maxDriverTombstones = 0),
+        cfg.copy(driverBlobCacheBytes = 0)).foreach { c =>
       val eng = new SearchEngine(new IndexStore(spark, dir, c))
       assert(eng.store.segments.size == 2)
       assert(eng.tombstonesSmall == (c.maxDriverTombstones > 0))

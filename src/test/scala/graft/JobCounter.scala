@@ -59,4 +59,37 @@ object JobCounter {
         sqlGroups.asScala.count(_ == group)))
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Every job the application starts while `body` runs, from any thread
+    * or job group: a block whose work runs on pool threads, which do not
+    * inherit the caller's job group, is counted whole. Fence jobs before
+    * and after the block delimit it in the listener bus's order, so the
+    * count is exact when nothing else runs jobs meanwhile. */
+  def appWide[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val fence = s"appwide-${java.util.UUID.randomUUID()}"
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+        ()
+      }
+    }
+    def runFence(name: String): Unit = {
+      sc.setJobGroup(name, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains(name)) {
+        assert(System.currentTimeMillis() < deadline, "listener bus did not deliver the fence job")
+        Thread.sleep(10)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      runFence(fence + "-start")
+      val r = body
+      runFence(fence + "-end")
+      (r, groups.asScala.toSeq.dropWhile(_ != fence + "-start").tail.takeWhile(_ != fence + "-end").size)
+    } finally sc.removeSparkListener(listener)
+  }
 }

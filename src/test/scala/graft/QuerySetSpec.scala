@@ -181,6 +181,35 @@ class QuerySetSpec extends AnyFunSuite {
     }
   }
 
+  test("Lru: least-recent eviction by byte weight, re-puts counted once, one fill of the misses, budget 0") {
+    val fills = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    // the value of key "a" is "aaaa": 4 bytes
+    def get(lru: graft.search.Lru[String, String], keys: String*): Seq[String] =
+      lru.getAll(keys) { misses => fills += misses; misses.map(_ * 4) }
+    def missesOf(lru: graft.search.Lru[String, String], keys: String*): Seq[String] = {
+      fills.clear()
+      assert(get(lru, keys: _*) == keys.map(_ * 4))
+      assert(fills.size <= 1, s"fill called ${fills.size} times")
+      fills.headOption.getOrElse(Nil)
+    }
+    val lru = new graft.search.Lru[String, String](12, _.length.toLong)
+    assert(missesOf(lru, "a", "b", "c") == Seq("a", "b", "c"))
+    // a is used again, so b is the least recent: d's 4 bytes evict b alone
+    assert(missesOf(lru, "a", "d") == Seq("d"))
+    assert(missesOf(lru, "c", "a", "d") == Nil)
+    assert(missesOf(lru, "d", "b", "a") == Seq("b")) // b evicts c
+    assert(missesOf(lru, "c") == Seq("c"))
+    // two callers filling one key put it twice; it still weighs 4 bytes
+    val twice = new graft.search.Lru[String, String](12, _.length.toLong)
+    twice.getAll(Seq("x")) { m => get(twice, m: _*); m.map(_ * 4) }
+    assert(missesOf(twice, "y", "z") == Seq("y", "z"))
+    assert(missesOf(twice, "x", "y", "z") == Nil)
+    // a budget of 0 keeps nothing, yet each call returns what it filled
+    val none = new graft.search.Lru[String, String](0, _.length.toLong)
+    assert(missesOf(none, "a", "b") == Seq("a", "b"))
+    assert(missesOf(none, "b", "a") == Seq("b", "a"))
+  }
+
   test("AND + prefix: every query term needs >=1 matched expansion (both paths)") {
     import spark.implicits._
     val docs = Seq(

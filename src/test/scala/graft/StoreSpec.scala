@@ -4,6 +4,7 @@ import graft.core._
 import graft.corpus.CorpusGen
 import graft.index.IndexStore
 import graft.search.{OracleScorer, SearchEngine, SearchMode}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -279,6 +280,18 @@ class StoreSpec extends AnyFunSuite {
     val resumed = new IndexStore(spark, dir, cfg)
     resumed.createSegment(spark.createDataset(docs), resume = true)
     check(resumed, "resume")
+  }
+
+  test("createSegment's jobs on a file-copy input and on a rewrite input") {
+    val docs = corpus(90, seed = 37).collect().toSeq
+    val input = TestSpark.tempDir("jobs-in") + "/in"
+    spark.createDataset(docs).repartitionByRange(3, $"doc_id").write.parquet(input)
+    val copyInput = spark.read.parquet(input).as[CorpusDoc]
+    // the build's stages run on pool threads: count every job of the app
+    def jobs(in: Dataset[CorpusDoc]): Int =
+      JobCounter.appWide(spark)(new IndexStore(spark, TestSpark.tempDir("jobs"), cfg).createSegment(in))._2
+    val counts = (jobs(copyInput), jobs(spark.createDataset(docs)))
+    assert(counts == (10, 12), s"(file copy, rewrite) jobs: $counts")
   }
 
   test("bare-parquet input with interleaved doc_id files is range-written, not copied") {

@@ -32,12 +32,15 @@ import org.apache.spark.sql.SparkSession
   * spark-submit --class graft.Cli app.jar merge  <indexDir> [--max-docs n]
   * spark-submit --class graft.Cli app.jar compact <indexDir>
   * spark-submit --class graft.Cli app.jar fields <indexDir>
+  * spark-submit --class graft.Cli app.jar stats  <indexDir>
+  *   (per segment: each stage's rows, bytes and files from its done-marker,
+  *   index bytes per corpus byte and the posting format; runs no Spark job)
   * }}}
   */
 object Cli {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
-      "usage: gen|build|search|sql|apps|stream|delete|dedup|curate|decontaminate|merge|compact|fields ...")
+      "usage: gen|build|search|sql|apps|stream|delete|dedup|curate|decontaminate|merge|compact|fields|stats ...")
     val spark = SparkSession.builder()
       .appName(s"graft-${args(0)}")
       .master(sys.props.getOrElse("spark.master",
@@ -186,6 +189,20 @@ object Cli {
         println("[graft] compacted")
       case "fields" =>
         IndexStore.open(spark, args(1)).listFields().show(100)
+      case "stats" =>
+        val store = IndexStore.open(spark, args(1))
+        println(s"[graft] ${args(1)}: ${store.segments.size} segments")
+        store.segments.foreach { seg =>
+          val stages = store.stageStats(seg.id)
+          stages.foreach { st =>
+            println(f"seg-${seg.id} ${st.stage}%-10s rows=${st.rows}%d bytes=${st.bytes}%d files=${st.files}%d")
+          }
+          val bytes = stages.map(st => st.stage -> st.bytes).toMap.withDefaultValue(0L)
+          val index = Seq("postings", "df", "docstats", "fieldstats").map(bytes).sum
+          val format = stages.find(_.stage == "postings").flatMap(_.format)
+          println(f"seg-${seg.id} index bytes per corpus byte ${index.toDouble / math.max(bytes("corpus"), 1L)}%.3f, " +
+            s"posting format ${format.getOrElse("varint (unrecorded)")}")
+        }
       case "sql" =>
         // registers the store's tables as views and runs arbitrary SQL —
         // graft's functions (posting_explode, via GraftExtensions) included

@@ -40,7 +40,7 @@ object CorpusDoc {
   * and query-time merge is a shard-ascending concatenation because ranges
   * are disjoint and internally docId-sorted.
   *
-  * `blob` is the delta+varint encoded stream of (docId, tf, dl) triplets
+  * `blob` holds the (docId, tf, dl) triplets in bit-packed blocks of ≤ 128
   * (PostingCodec). Carrying `dl` in each posting mirrors the reference,
   * which stores document length as the posting value (indexing.go:130-132,
   * 743, 753): query-time BM25 joins no per-document stats table.

@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Generic
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
-/** Native Catalyst `Generator` that explodes a delta+varint posting blob
-  * into (doc_id, tf, dl) rows — the table-function twin of
-  * `PostingCodec.decodeAll` (SURVEY.md §4.3 "optional polish": an
-  * `Expression` for varint decode).
+/** Native Catalyst `Generator` that explodes a posting blob into
+  * (doc_id, tf, dl) rows through the codec's one reader,
+  * `PostingCodec.Cursor` (SURVEY.md §4.3 "optional polish": an
+  * `Expression` for the blob decode).
   *
   * Compared to the typed `flatMap` decode path, the generator stays inside
   * the relational plan: no Tuple encoder round-trip, `GenerateExec` consumes
@@ -37,21 +37,20 @@ case class PostingExplode(child: Expression)
     val blob = child.eval(input).asInstanceOf[Array[Byte]]
     if (blob == null) Iterator.empty
     else new Iterator[InternalRow] {
-      private val pos = Array(0)
-      private var prevDoc = 0L
+      private val cursor = new PostingCodec.Cursor(blob)
+      private var ready = cursor.next()
       // one reused row: GenerateExec projects every emitted row into an
       // UnsafeRow before the next() call, so per-posting allocation of a
       // fresh GenericInternalRow (the row AND its Array[Any]) was pure
       // garbage — the same reuse built-in CollectionGenerators do
       private val vals = new Array[Any](3)
       private val row = new GenericInternalRow(vals)
-      override def hasNext: Boolean = pos(0) < blob.length
+      override def hasNext: Boolean = ready
       override def next(): InternalRow = {
-        val d = prevDoc + PostingCodec.readVarint(blob, pos)
-        vals(0) = d
-        vals(1) = PostingCodec.readVarint(blob, pos).toInt
-        vals(2) = PostingCodec.readVarint(blob, pos).toInt
-        prevDoc = d
+        vals(0) = cursor.docId
+        vals(1) = cursor.tf
+        vals(2) = cursor.dl
+        ready = cursor.next()
         row
       }
     }

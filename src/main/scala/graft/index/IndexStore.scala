@@ -15,7 +15,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *
   * {{{
   * base/
-  *   manifest.json              — [{id, numDocs}] committed segments
+  *   manifest.json              — the commit point: layout config (shardSpan,
+  *                                fields, postingFormat), a generation that
+  *                                every commit raises, [{id, numDocs}]
+  *                                committed segments
   *   seg-<i>/
   *     corpus/                  — the indexed rows (doc store; reference kept
   *                                one file per docID, indexing.go:350-351)
@@ -27,7 +30,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *     df/                      — (field, term, df, sum_tf)
   *     fieldstats/              — (field, n, sum_dl)
   *     _checkpoints/<stage>.json — done-marker with rows/bytes/wallMs and
-  *                                per-partition (file-level) metrics
+  *                                per-partition (file-level) metrics (the
+  *                                postings marker also names its format)
   *   tombstones/                — (doc_id, max_seg) appended parquet
   *   dfdelta/                   — (field, term, ddf) df corrections
   *   tombstats/                 — (field, dn, dsum_dl) stats corrections
@@ -61,6 +65,13 @@ object IndexStore {
   private val postingSchema = Encoders.product[PostingShard].schema
   /** The df stage's table: (field, term, df, sum_tf). */
   private val dfTableSchema = Encoders.product[TermDf].schema.add("sum_tf", LongType)
+  private val corpusSchema = Encoders.product[CorpusDoc].schema
+  private val fieldStatsSchema = StructType.fromDDL("field STRING, n BIGINT, sum_dl BIGINT")
+  private val dfDeltaSchema = StructType.fromDDL("field STRING, term STRING, ddf BIGINT")
+  private val tombStatsSchema = StructType.fromDDL("field STRING, dn BIGINT, dsum_dl BIGINT")
+
+  /** One completed stage of a segment as its done-marker records it. */
+  final case class StageStat(stage: String, rows: Long, bytes: Long, files: Int, format: Option[String])
 }
 
 class IndexStore(val spark: SparkSession, val baseDir: String,
@@ -91,6 +102,28 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
 
   private def manifestNode(): com.fasterxml.jackson.databind.JsonNode = readJson(p("manifest.json"))
 
+  /** The manifest's generation: 0 before the first commit, raised by each. */
+  private def generation(): Long =
+    if (!fs.exists(p("manifest.json"))) 0L
+    else Option(manifestNode().get("generation")).fold(0L)(_.asLong())
+
+  /** The posting format of a store's committed segments: the manifest's,
+    * or None for a store written before formats were recorded. */
+  private[graft] def postingFormat(): Option[String] =
+    if (!fs.exists(p("manifest.json"))) None
+    else Option(manifestNode().get("config")).flatMap(c => Option(c.get("postingFormat"))).map(_.asText())
+
+  /** Refuses to read or extend postings this build cannot decode. A store
+    * with no committed segment has none. */
+  private def requirePostingFormat(): Unit =
+    if (segments.nonEmpty) checkFormat(postingFormat(), s"the store $baseDir")
+
+  private def checkFormat(found: Option[String], what: String): Unit =
+    if (!found.contains(PostingCodec.Format))
+      throw new IllegalStateException(s"$what holds postings in format " +
+        s"${found.getOrElse("varint (unrecorded)")}, but this build reads ${PostingCodec.Format}: " +
+        "run compact() (Cli compact <store>) to re-tokenize the stored corpus into the current format")
+
   private def readJson(path: Path): com.fasterxml.jackson.databind.JsonNode = {
     val in = fs.open(path)
     try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in) finally in.close()
@@ -108,38 +141,58 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   }
 
   /** The manifest also persists the STORAGE-LAYOUT half of the config
-    * (shardSpan, fields) so later maintenance (CLI merge/compact/delete on
-    * a store built elsewhere) reconstructs segments consistently — a merge
-    * that re-encoded with a different shardSpan would leave mixed shard
-    * geometries that double-report docs in WAND's per-shard group walk.
-    * Query-side knobs (bm25, caches, bounds) are NOT persisted. */
-  private def writeManifest(segs: Seq[SegmentInfo]): Unit = {
+    * (shardSpan, fields, posting format) so later maintenance (CLI merge/
+    * compact/delete on a store built elsewhere) reconstructs segments
+    * consistently — a merge that re-encoded with a different shardSpan
+    * would leave mixed shard geometries that double-report docs in WAND's
+    * per-shard group walk. Query-side knobs (bm25, caches, bounds) are NOT
+    * persisted. Every commit rewrites it with a higher `generation`, so a
+    * stat of this one file tells whether the store changed. */
+  private def writeManifest(segs: Seq[SegmentInfo], gen: Long = generation() + 1): Unit = {
     val fieldsJson = cfg.fields.map(f => "\"" + f + "\"").mkString("[", ",", "]")
     val json =
-      s"""{"config":{"shardSpan":${cfg.shardSpan},"fields":$fieldsJson},""" +
+      s"""{"config":{"shardSpan":${cfg.shardSpan},"fields":$fieldsJson,""" +
+      s""""postingFormat":"${PostingCodec.Format}"},"generation":$gen,""" +
       segs.map(s => s"""{"id":${s.id},"numDocs":${s.numDocs}}""")
         .mkString(""""segments":[""", ",", "]}")
-    val out = fs.create(p("manifest.json"), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    writeFile(p("manifest.json"), json)
+  }
+
+  /** Commits a change outside the segments (a delete's corrections): the
+    * manifest as it is, under the next generation. */
+  private def raiseGeneration(): Unit = {
+    val node = manifestNode().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.put("generation", generation() + 1)
+    writeFile(p("manifest.json"), node.toString)
+  }
+
+  private def writeFile(path: Path, text: String): Unit = {
+    val out = fs.create(path, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   // ---------- per-stage checkpoints ----------
 
-  /** Writes `df` to `seg-<segId>/<stage>/` unless that stage's done-marker
-    * already exists (resume path: completed stages are skipped wholesale and
-    * their persisted output is reused). The marker carries stage lineage and
-    * per-partition (per-file) row/byte metrics read back from parquet
-    * footers, emitted AFTER a successful write — a crash mid-write leaves no
-    * marker, so a re-run redoes the stage idempotently (overwrite mode). A
-    * later stage reads the output with [[readStage]]. */
-  private[index] def runStage(segId: Int, stage: String, lineage: Seq[String],
-                              resume: Boolean)(compute: => DataFrame): Unit = {
+  /** Writes `df` to `seg-<segId>/<stage>/`, parquet with zstd pages,
+    * unless that stage's done-marker already exists (resume path: completed
+    * stages are skipped wholesale and their persisted output is reused). The
+    * marker carries stage lineage, the output's `format` when it has one
+    * (a resumed stage of another format is refused), and per-partition
+    * (per-file) row/byte metrics read back from parquet footers, emitted
+    * AFTER a successful write — a crash mid-write leaves no marker, so a
+    * re-run redoes the stage idempotently (overwrite mode). A later stage
+    * reads the output with [[readStage]]. */
+  private[index] def runStage(segId: Int, stage: String, lineage: Seq[String], resume: Boolean,
+                              format: Option[String] = None)(compute: => DataFrame): Unit = {
     val outDir = p(s"seg-$segId", stage)
     val marker = p(s"seg-$segId", "_checkpoints", s"$stage.json")
-    if (!(resume && fs.exists(marker))) {
+    if (resume && fs.exists(marker)) {
+      if (format.nonEmpty)
+        checkFormat(Option(readJson(marker).get("format")).map(_.asText()), s"the resumable stage $marker")
+    } else {
       val t0 = System.nanoTime()
-      compute.write.mode(SaveMode.Overwrite).parquet(outDir.toString)
-      commitStageMarker(marker, outDir, stage, lineage, t0)
+      compute.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(outDir.toString)
+      commitStageMarker(marker, outDir, stage, lineage, t0, format)
     }
   }
 
@@ -149,7 +202,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
 
   /** Emits the done-marker for a completed stage write (see [[runStage]]). */
   private def commitStageMarker(marker: Path, outDir: Path, stage: String,
-                                lineage: Seq[String], t0: Long): Unit = {
+                                lineage: Seq[String], t0: Long, format: Option[String] = None): Unit = {
     val wallMs = (System.nanoTime() - t0) / 1000000
     val parts = parquetFileMetrics(outDir)
     val rows = parts.map(_._2).sum
@@ -160,10 +213,10 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     val json =
       s"""{"stage":"$stage","status":"done","rows":$rows,"bytes":$bytes,""" +
       s""""files":${parts.length},"wallMs":$wallMs,""" +
+      format.fold("")(f => s""""format":"$f",""") +
       s""""lineage":${lineage.map(l => "\"" + l + "\"").mkString("[", ",", "]")},""" +
       s""""partitions":$partsJson}"""
-    val out = fs.create(marker, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    writeFile(marker, json)
   }
 
   /** The input's parquet data files when `corpus` is a BARE parquet scan
@@ -220,6 +273,19 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   def stageDone(segId: Int, stage: String): Boolean =
     fs.exists(p(s"seg-$segId", "_checkpoints", s"$stage.json"))
 
+  /** Segment `segId`'s completed stages, by name, from their done-markers:
+    * driver-side file reads, no Spark job. */
+  def stageStats(segId: Int): Seq[StageStat] = {
+    val dir = p(s"seg-$segId", "_checkpoints")
+    if (!fs.exists(dir)) return Nil
+    fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.endsWith(".json")).map { m =>
+      val n = readJson(m)
+      def long(k: String) = Option(n.get(k)).fold(0L)(_.asLong())
+      StageStat(n.get("stage").asText(), long("rows"), long("bytes"), long("files").toInt,
+        Option(n.get("format")).map(_.asText()))
+    }.sortBy(_.stage)
+  }
+
   /** Rows a completed stage wrote, from its done-marker. */
   private def stageRows(segId: Int, stage: String): Long =
     readJson(p(s"seg-$segId", "_checkpoints", s"$stage.json")).get("rows").asLong()
@@ -253,6 +319,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
 
   def buildSegmentAt(segId: Int, corpus: Dataset[CorpusDoc],
                      resume: Boolean): Int = {
+    requirePostingFormat()
     val numDocs = buildSegmentStages(segId, corpus, resume)
     writeManifest(segments.filterNot(_.id == segId) :+ SegmentInfo(segId, numDocs))
     segId
@@ -302,7 +369,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       // parquet min/max stats prune exact/prefix term scans at file and
       // row-group granularity.
       val postingsF = Future {
-        runStage(segId, "postings", Seq("input"), resume) {
+        runStage(segId, "postings", Seq("input"), resume, Some(PostingCodec.Format)) {
           IndexBuilder.encodeShardsNarrow(tfRows, cfg.shardSpan,
             cfg.fields.sorted.toArray)
         }
@@ -431,12 +498,12 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   def mergeSmallSegments(maxDocs: Long): Option[Int] = {
     require(tombstoneCount() == 0L,
       "mergeSmallSegments requires a tombstone-free store; run compact() instead")
+    requirePostingFormat()
     val all = segments
     val small = all.filter(_.numDocs <= maxDocs)
     if (small.size < 2) return None
     val newId = all.map(_.id).max + 1
-    val merged = small.map(s =>
-        spark.read.parquet(p(s"seg-${s.id}", "corpus").toString))
+    val merged = small.map(s => readStage(s.id, "corpus", corpusSchema))
       .reduce(_ unionByName _).as[CorpusDoc]
     // honor the extreme-scale cache rule (see IndexConfig.cacheBuild): the
     // merged volume may far exceed any one micro-batch — re-tokenize per
@@ -485,21 +552,18 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   private[index] def segPath(segId: Int, sub: String): String =
     p(s"seg-$segId", sub).toString
 
-  private def segPaths(sub: String): Seq[String] =
-    segments.map(s => p(s"seg-${s.id}", sub).toString)
-
   /** All segments' posting shards with a `seg` provenance column.
     * Empty stores return an empty frame WITH the proper schema so query
-    * plans still resolve. */
-  def postings(): DataFrame =
-    segments.map { s =>
-      spark.read.parquet(p(s"seg-${s.id}", "postings").toString)
-        .withColumn("seg", lit(s.id))
-    }.reduceOption(_ unionByName _)
+    * plans still resolve. Like every reader below, it reads with an explicit
+    * schema: no schema-inference job. */
+  def postings(): DataFrame = {
+    requirePostingFormat()
+    segments.map(s => readStage(s.id, "postings", postingSchema).withColumn("seg", lit(s.id)))
+      .reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataset[PostingShard].toDF().withColumn("seg", lit(0)))
+  }
 
-  /** One segment's posting shards `(field, term, shard, blocks, blob)`,
-    * read with an explicit schema (no schema-inference job). */
+  /** One segment's posting shards `(field, term, shard, blocks, blob)`. */
   private[graft] def segmentPostings(segId: Int): DataFrame =
     readStage(segId, "postings",
       StructType(Seq("field", "term", "shard", "blocks", "blob").map(postingSchema(_))))
@@ -518,14 +582,12 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   def corpus(): DataFrame = corpusOf(segments)
 
   private def corpusOf(segs: Seq[SegmentInfo]): DataFrame =
-    segs.map { s =>
-      spark.read.parquet(p(s"seg-${s.id}", "corpus").toString)
-        .withColumn("seg", lit(s.id))
-    }.reduceOption(_ unionByName _)
+    segs.map(s => readStage(s.id, "corpus", corpusSchema).withColumn("seg", lit(s.id)))
+      .reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataset[CorpusDoc].toDF().withColumn("seg", lit(0)))
 
   def docStats(): DataFrame =
-    segPaths("docstats").map(spark.read.parquet(_))
+    segments.map(s => readStage(s.id, "docstats", Encoders.product[DocStat].schema))
       .reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataset[DocStat].toDF())
 
@@ -535,18 +597,17 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     * was an identity that cost every cold dictionary scan (df fetches,
     * prefix/fuzzy expansions) an exchange. */
   def termDf(): DataFrame = {
-    val paths = segPaths("df")
-    if (paths.isEmpty) return spark.emptyDataset[TermDf].toDF()
+    val segs = segments
+    if (segs.isEmpty) return spark.emptyDataset[TermDf].toDF()
+    val tables = segs.map(s => readStage(s.id, "df", dfTableSchema))
     val base =
-      if (paths.size == 1)
-        spark.read.parquet(paths.head).select(col("field"), col("term"), col("df"))
-      else
-        paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
-          .groupBy(col("field"), col("term")).agg(sum(col("df")).as("df"))
+      if (tables.size == 1) tables.head.select(col("field"), col("term"), col("df"))
+      else tables.reduce(_ unionByName _)
+        .groupBy(col("field"), col("term")).agg(sum(col("df")).as("df"))
     val deltaPath = p("dfdelta")
     if (!fs.exists(deltaPath)) base
     else {
-      val delta = spark.read.parquet(deltaPath.toString)
+      val delta = spark.read.schema(dfDeltaSchema).parquet(deltaPath.toString)
         .groupBy(col("field"), col("term")).agg(sum(col("ddf")).as("ddf"))
       base.join(delta, Seq("field", "term"), "left")
         .select(col("field"), col("term"),
@@ -558,7 +619,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   /** Live per-field (n, sum_dl, avgdl). Small: collected to the driver and
     * broadcast into scoring. */
   def fieldStats(): Map[String, (Long, Long)] = {
-    val base = segPaths("fieldstats").map(spark.read.parquet(_))
+    val base = segments.map(s => readStage(s.id, "fieldstats", fieldStatsSchema))
       .reduceOption(_ unionByName _)
       .map(_.groupBy(col("field")).agg(sum("n").as("n"), sum("sum_dl").as("sum_dl"))
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
@@ -566,7 +627,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     val tsPath = p("tombstats")
     if (!fs.exists(tsPath)) base
     else {
-      val deltas = spark.read.parquet(tsPath.toString)
+      val deltas = spark.read.schema(tombStatsSchema).parquet(tsPath.toString)
         .groupBy(col("field")).agg(sum("dn").as("dn"), sum("dsum_dl").as("dsum"))
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       base.map { case (f, (n, s)) =>
@@ -633,23 +694,21 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       .agg(count(lit(1)).as("n_killed"))
   }
 
-  /** The paths [[versionToken]] polls, qualified once per store. */
-  @transient private lazy val versionPaths: Array[Path] =
-    Array("manifest.json", "tombstones", "dfdelta", "tombstats").map(n => fs.makeQualified(p(n)))
+  /** The manifest's path, qualified once per store. */
+  @transient private lazy val manifestPath: Path = fs.makeQualified(p("manifest.json"))
 
   /** Cheap store-version token (driver-side FS metadata only): changes when
-    * any segment commits or any tombstone/df correction lands. Lets query
+    * any segment commits or any tombstone/df correction lands, since each of
+    * those ends by rewriting the manifest under a new generation. Lets query
     * layers cache stats/plans and invalidate correctly after CRUD. Every
-    * call stats the manifest and the three correction directories afresh,
-    * so a write through another handle or JVM shows at the next poll; only
-    * the paths themselves are built once. */
+    * call stats the manifest afresh — one file, however many deletes the
+    * store holds — so a write through another handle or JVM shows at the
+    * next poll. */
   def versionToken(): String =
-    versionPaths.map { path =>
-      try {
-        val st = fs.getFileStatus(path)
-        s"${st.getModificationTime}:${if (st.isDirectory) fs.listStatus(path).length else st.getLen}"
-      } catch { case _: java.io.FileNotFoundException => "-" }
-    }.mkString("|")
+    try {
+      val st = fs.getFileStatus(manifestPath)
+      s"${st.getModificationTime}:${st.getLen}"
+    } catch { case _: java.io.FileNotFoundException => "-" }
 
   /** Field catalog: per-field live doc count and distinct term count — the
     * reference's listIndexes (field name + TotalDocuments,
@@ -678,7 +737,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     * fingerprints to exactly this corpus. Callers must ensure the stage
     * exists ([[stageDone]] / manifest). */
   def stagedCorpusMatches(segId: Int, corpus: Dataset[CorpusDoc]): Boolean =
-    corpusFingerprint(spark.read.parquet(p(s"seg-$segId", "corpus").toString)) ==
+    corpusFingerprint(readStage(segId, "corpus", corpusSchema)) ==
       corpusFingerprint(corpus.toDF())
 
   /** True when committed segment `segId` indexes exactly this corpus (all
@@ -794,6 +853,8 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       victims.select(col("doc_id")).distinct()
         .withColumn("max_seg", lit(maxSeg))
         .write.mode(SaveMode.Append).parquet(p("tombstones").toString)
+      // the commit: readers see the three appends from here on
+      raiseGeneration()
     } finally { rows.unpersist(); victims.unpersist(); () }
   }
 
@@ -831,6 +892,8 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     val live = liveCorpus().as[CorpusDoc]
     val tmp = new IndexStore(spark, baseDir + ".compact", cfg)
     tmp.createSegment(live)
+    // the rebuilt store continues this one's generations
+    tmp.writeManifest(tmp.segments, generation() + 1)
     // re-home the similarity layer (signature tables of LIVE docs +
     // similarity.json) onto the rebuilt store BEFORE the swap — the swap
     // replaces baseDir wholesale, and losing the tables would put a

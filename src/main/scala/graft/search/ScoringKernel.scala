@@ -65,31 +65,19 @@ private[search] object ScoringKernel {
           new PostingCodec.Cursor(blob, PostingCodec.decodeBlocks(blocks)))
       }, tomb, heap)
     else {
-      // ≥ 3 bytes per posting ⇒ blob bytes / 3 bounds the group's docs
-      val est = math.min(rows.iterator.map(_._6.length.toLong).sum / 3 + 16, 1L << 21).toInt
+      val postings = rows.iterator.map(r => PostingCodec.postingCount(r._5)).sum
+      val est = math.min(postings + 16, 1L << 21).toInt
       val acc = new DriverScoreMap(math.max(est * 10 / 7, 1 << 10), q.maskWords)
       val noTomb = tomb.isEmpty
       rows.foreach { case (f, t, seg, _, _, blob) =>
         val st = q.stats((f, t))
         val idf = st.idf; val avgdl = st.avgdl; val mask = st.mask
-        var p = 0
-        var prevDoc = 0L
-        while (p < blob.length) {
-          // inline LEB128 × 3: docId delta, tf, dl
-          var v = 0L; var shift = 0; var by = 0
-          do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-          while ((by & 0x80) != 0)
-          val d = prevDoc + v
-          prevDoc = d
-          v = 0L; shift = 0
-          do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-          while ((by & 0x80) != 0)
-          val tf = v.toDouble
-          v = 0L; shift = 0
-          do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-          while ((by & 0x80) != 0)
-          val dl = v.toDouble
+        val c = new PostingCodec.Cursor(blob)
+        while (c.next()) {
+          val d = c.docId
           if (noTomb || !tomb.get(d).exists(seg <= _)) {
+            val tf = c.tf.toDouble
+            val dl = c.dl.toDouble
             // EXACT expression shape of OracleScorer — re-associating it
             // would break bit-identity
             val part = idf * (tf * (k1 + 1.0)) /

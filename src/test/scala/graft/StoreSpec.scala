@@ -341,4 +341,19 @@ class StoreSpec extends AnyFunSuite {
         s"liveCorpus ran $liveJobs, corpus $corpusJobs")
     }
   }
+
+  test("a version load infers no schema: jobs of the first read after an add and after a delete") {
+    val docs = corpus(80, seed = 43).collect().toSeq
+    val store = new IndexStore(spark, TestSpark.tempDir("load-jobs"), cfg)
+    store.createSegment(spark.createDataset(docs.take(40)))
+    val engine = new SearchEngine(store)
+    def read(): Unit = { engine.search("import the", Seq("content"), k = 10).collect(); () }
+    read()
+    store.add(spark.createDataset(docs.drop(40)))
+    val (_, afterAdd) = JobCounter.appWide(spark)(read())
+    store.delete(docs.take(2).map(_.doc_id))
+    val (_, afterDelete) = JobCounter.appWide(spark)(read())
+    info(s"first read after add: $afterAdd jobs, after delete: $afterDelete jobs")
+    assert((afterAdd, afterDelete) == (5, 11), s"(after add, after delete) jobs")
+  }
 }

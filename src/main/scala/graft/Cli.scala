@@ -34,7 +34,9 @@ import org.apache.spark.sql.SparkSession
   * spark-submit --class graft.Cli app.jar fields <indexDir>
   * spark-submit --class graft.Cli app.jar stats  <indexDir>
   *   (per segment: each stage's rows, bytes and files from its done-marker,
-  *   index bytes per corpus byte and the posting format; runs no Spark job)
+  *   index bytes per corpus byte and the posting format; then the delete
+  *   tables' rows, bytes and files from their parquet footers; runs no
+  *   Spark job)
   * }}}
   */
 object Cli {
@@ -202,6 +204,9 @@ object Cli {
           val format = stages.find(_.stage == "postings").flatMap(_.format)
           println(f"seg-${seg.id} index bytes per corpus byte ${index.toDouble / math.max(bytes("corpus"), 1L)}%.3f, " +
             s"posting format ${format.getOrElse("varint (unrecorded)")}")
+        }
+        store.deleteStats().foreach { st =>
+          println(f"deletes ${st.stage}%-10s rows=${st.rows}%d bytes=${st.bytes}%d files=${st.files}%d")
         }
       case "sql" =>
         // registers the store's tables as views and runs arbitrary SQL —

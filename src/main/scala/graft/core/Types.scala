@@ -87,10 +87,12 @@ final case class IndexConfig(
     shardSpan: Long = 1L << 20,
     bm25: Bm25Params = Bm25Params(),
     fields: Seq[String] = CorpusDoc.Fields,
-    /** Candidate-volume bound (bytes) under which WAND top-k runs on the
-      * driver (one pruned scan, no shuffle). 0 forces the distributed path
-      * (used by tests); hot-term queries at corpus scale exceed any sane
-      * bound and always distribute. */
+    /** Driver-read bound (bytes, ~8 per row), on both the read's candidate
+      * postings (Σ df) and the store's tombstone rows: a read scores on the
+      * driver (one pruned scan, no shuffle) only if both fit, so a bulk
+      * delete of 10^9 ids cannot OOM the driver. 0 forces the distributed
+      * path (used by tests); hot-term queries at corpus scale exceed any
+      * sane bound and always distribute. */
     driverWandMaxBytes: Long = 32L << 20,
     /** Persist the tokenized posting rows (MEMORY_AND_DISK) so the range
       * partitioner's sampling pass doesn't re-tokenize the corpus, and
@@ -98,12 +100,6 @@ final case class IndexConfig(
       * has aggregate cache ≈ posting-row volume; at extreme scale (cache ≪
       * data) set false and pay one re-tokenization in the sampler. */
     cacheBuild: Boolean = true,
-    /** Tombstone-row bound above which the driver-side tombstone map is
-      * never collected: queries run distributed, against tombstones held
-      * on the executors beside the postings, so a bulk delete of 10^9 ids
-      * cannot OOM the driver. 4M entries ≈ tens of MB on the driver — safe
-      * headroom. */
-    maxDriverTombstones: Long = 4L << 20,
     /** LRU budget (bytes) for the driver-side posting-blob cache serving the
       * driver fast paths — the bounded analogue of the reference's
       * all-in-RAM index (its radix tree holds every posting resident,

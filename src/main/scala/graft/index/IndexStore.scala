@@ -616,55 +616,47 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
     }
   }
 
-  /** Live per-field (n, sum_dl, avgdl). Small: collected to the driver and
-    * broadcast into scoring. */
+  /** Live per-field (n, sum_dl): the raw per-segment fieldstats rows and
+    * the negated raw tombstats corrections (fields × segments and fields ×
+    * deletes rows, over the same fields) in ONE collect with no shuffle,
+    * summed on the driver. */
   def fieldStats(): Map[String, (Long, Long)] = {
-    val base = segments.map(s => readStage(s.id, "fieldstats", fieldStatsSchema))
-      .reduceOption(_ unionByName _)
-      .map(_.groupBy(col("field")).agg(sum("n").as("n"), sum("sum_dl").as("sum_dl"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
-      .getOrElse(Map.empty)
     val tsPath = p("tombstats")
-    if (!fs.exists(tsPath)) base
-    else {
-      val deltas = spark.read.schema(tombStatsSchema).parquet(tsPath.toString)
-        .groupBy(col("field")).agg(sum("dn").as("dn"), sum("dsum_dl").as("dsum"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      base.map { case (f, (n, s)) =>
-        val (dn, ds) = deltas.getOrElse(f, (0L, 0L))
-        f -> (n - dn, s - ds)
-      }
-    }
+    (segments.map(s => readStage(s.id, "fieldstats", fieldStatsSchema)) ++
+      Option.when(fs.exists(tsPath))(spark.read.schema(tombStatsSchema).parquet(tsPath.toString)
+        .select(col("field"), -col("dn"), -col("dsum_dl"))))
+      .reduceOption(_ union _).fold(Map.empty[String, (Long, Long)])(_.collect()
+        .groupMapReduce(_.getString(0))(r => (r.getLong(1), r.getLong(2))) {
+          case ((n, s), (m, t)) => (n + m, s + t)
+        })
   }
-
-  /** Tombstones as a driver-side map docId -> max deleted segment: the
-    * collected [[tombstoneAgg]]. Callers MUST guard with [[tombstoneCount]]
-    * vs `cfg.maxDriverTombstones` (the query layer does); past the bound use
-    * [[tombstoneAgg]] anti-joins. */
-  def tombstoneMap(): Map[Long, Int] =
-    if (!fs.exists(p("tombstones"))) Map.empty
-    else tombstoneAgg().collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
 
   /** Raw tombstone row count, summed from parquet footers on the driver —
     * NO Spark job and no data read (this runs on every store-version cache
     * refresh and on catalog listings, so a job here would serialize every
     * query behind the scheduler). An upper bound on distinct deleted ids;
-    * used to size-guard the driver map. */
-  def tombstoneCount(): Long = {
-    val tp = p("tombstones")
-    if (!fs.exists(tp)) 0L else parquetFileMetrics(tp).map(_._2).sum
+    * the tombstone side of the search layer's driver gate. */
+  def tombstoneCount(): Long = tableStats("tombstones").rows
+
+  /** Rows, bytes and files of each delete table — tombstones, then the
+    * dfdelta and tombstats corrections — from parquet footers: no job. */
+  def deleteStats(): Seq[StageStat] = Seq("tombstones", "dfdelta", "tombstats").map(tableStats)
+
+  private def tableStats(table: String): StageStat = {
+    val m = if (fs.exists(p(table))) parquetFileMetrics(p(table)) else Nil
+    StageStat(table, m.map(_._2).sum, m.map(_._3).sum, m.size, None)
   }
 
-  /** Aggregated tombstones as a DataFrame (t_doc_id, t_max_seg) — the
-    * distributed anti-join form used when the set exceeds the driver bound.
-    * Never collected or broadcast. */
+  /** Aggregated tombstones as a DataFrame (t_doc_id, t_max_seg): the
+    * anti-join form. Never collected. */
   def tombstoneAgg(): DataFrame =
     tombstonesDF().groupBy(col("doc_id")).agg(max(col("max_seg")).as("max_seg"))
       .toDF("t_doc_id", "t_max_seg")
 
   /** Raw tombstone rows (doc_id, max_seg), one per delete, never
-    * aggregated — what the search layer partitions by shard and holds
-    * beside the resident postings past the driver bound. */
+    * aggregated — what the search layer turns into per-shard
+    * [[graft.search.TombSet]]s, on the driver and beside the resident
+    * postings. */
   def tombstonesDF(): DataFrame = {
     val tp = p("tombstones")
     if (!fs.exists(tp)) spark.emptyDataset[Tombstone].toDF()
@@ -912,17 +904,16 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   }
 
   /** Corpus rows still visible (tombstone-filtered, segment-generation
-    * aware), without `seg` on every branch. Uses the broadcast map under the
-    * driver bound and a distributed anti-join past it. Building the plan
-    * runs no more jobs than [[corpus]]: emptiness comes from the manifest. */
+    * aware), without `seg` on every branch: an anti-join against the raw
+    * tombstone rows — a row of the doc at a segment ≥ `seg` exists iff
+    * [[tombstoneAgg]]'s max does, so no aggregation is needed — whose
+    * small side is broadcast. Building the plan runs no job: emptiness
+    * comes from the manifest and the tombstone footers. */
   def liveCorpus(): DataFrame = {
     val segs = segments
     val c = corpusOf(segs)
-    val nTs = if (segs.isEmpty) 0L else tombstoneCount()
-    if (nTs == 0L) return c.drop("seg")
-    val ts =
-      if (nTs <= cfg.maxDriverTombstones) broadcast(tombstoneMap().toSeq.toDF("t_doc_id", "t_max_seg"))
-      else tombstoneAgg()
-    c.join(ts, c("doc_id") === ts("t_doc_id") && c("seg") <= ts("t_max_seg"), "left_anti").drop("seg")
+    if (segs.isEmpty || tombstoneCount() == 0L) return c.drop("seg")
+    val ts = tombstonesDF()
+    c.join(ts, c("doc_id") === ts("doc_id") && c("seg") <= ts("max_seg"), "left_anti").drop("seg")
   }
 }

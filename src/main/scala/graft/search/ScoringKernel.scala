@@ -3,7 +3,6 @@ package graft.search
 import graft.core.Bm25Params
 import graft.index.PostingCodec
 import org.apache.spark.{OneToOneDependency, Partition, Partitioner, TaskContext}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
@@ -28,11 +27,35 @@ private[search] object KernelQuery {
     if (mode == SearchMode.And) (terms + 63) / 64 else 0
 }
 
+/** One shard's deletes, the one form every scoring path reads them in (the
+  * analogue of Lucene's per-segment live-docs): the deleted doc ids,
+  * ascending, each beside the newest segment it is deleted from. A posting
+  * of `doc` in segment `seg` is dead iff `seg ≤` that segment — the rule of
+  * [[graft.index.IndexStore.tombstoneAgg]]. */
+private[search] final class TombSet private (ids: Array[Long], maxSeg: Array[Int]) extends Serializable {
+  def kills(doc: Long, seg: Int): Boolean = ids.length != 0 && {
+    val i = java.util.Arrays.binarySearch(ids, doc)
+    i >= 0 && seg <= maxSeg(i)
+  }
+}
+
+private[search] object TombSet {
+  val Empty = new TombSet(Array.emptyLongArray, Array.emptyIntArray)
+
+  /** Raw tombstone rows `(doc_id, max_seg)`, in any order and with any
+    * duplicates, as one set per shard (`floor(doc_id / span)`, the
+    * postings' shard), each id once at its highest segment. */
+  def byShard(rows: Iterable[(Long, Int)], span: Long): Map[Long, TombSet] =
+    rows.groupMapReduce(_._1)(_._2)(math.max).toArray.sortBy(_._1)
+      .groupBy { case (d, _) => Math.floorDiv(d, span) }
+      .map { case (shard, rs) => shard -> new TombSet(rs.map(_._1), rs.map(_._2)) }
+}
+
 /** The one BM25 scoring kernel: `(one shard group's rows, term stats, mode,
-  * tombstones) → bounded top-k heap`. A shard group is every matched posting
-  * row of one docId range (`shard = doc_id / shardSpan`), so groups score
-  * independently and their top-ks merge into the global top-k under the
-  * (score desc, doc_id asc) order.
+  * the shard's [[TombSet]]) → bounded top-k heap`. A shard group is every
+  * matched posting row of one docId range (`shard = doc_id / shardSpan`),
+  * so groups score independently and their top-ks merge into the global
+  * top-k under the (score desc, doc_id asc) order.
   *
   * Inside a group each doc's contributions are summed in ascending (field,
   * term, seg) order — the summation order of [[OracleScorer]] — so scores
@@ -50,9 +73,9 @@ private[search] object ScoringKernel {
   type ShardRow = (String, String, Int, Long, Array[Byte], Array[Byte])
 
   /** Scores one shard group into `heap`. Rows of pairs without stats (not
-    * matched, or df 0) are ignored; `tomb` maps a deleted docId to the
-    * newest segment it is deleted from. */
-  def score(q: KernelQuery, group: Iterable[ShardRow], tomb: collection.Map[Long, Int],
+    * matched, or df 0) are ignored; `tomb` holds the group's shard's
+    * deletes. */
+  def score(q: KernelQuery, group: Iterable[ShardRow], tomb: TombSet,
             heap: BoundedHitHeap): Unit = {
     val rows = group.iterator.filter(r => q.stats.contains((r._1, r._2))).toArray
       .sortBy(r => (r._1, r._2, r._3))
@@ -68,14 +91,13 @@ private[search] object ScoringKernel {
       val postings = rows.iterator.map(r => PostingCodec.postingCount(r._5)).sum
       val est = math.min(postings + 16, 1L << 21).toInt
       val acc = new DriverScoreMap(math.max(est * 10 / 7, 1 << 10), q.maskWords)
-      val noTomb = tomb.isEmpty
       rows.foreach { case (f, t, seg, _, _, blob) =>
         val st = q.stats((f, t))
         val idf = st.idf; val avgdl = st.avgdl; val mask = st.mask
         val c = new PostingCodec.Cursor(blob)
         while (c.next()) {
           val d = c.docId
-          if (noTomb || !tomb.get(d).exists(seg <= _)) {
+          if (!tomb.kills(d, seg)) {
             val tf = c.tf.toDouble
             val dl = c.dl.toDouble
             // EXACT expression shape of OracleScorer — re-associating it
@@ -89,13 +111,6 @@ private[search] object ScoringKernel {
       acc.offerMatches(heap, q.terms)
     }
   }
-
-  /** Deleted docId → newest segment it is deleted from. */
-  type TombMap = collection.Map[Long, Int]
-
-  /** A store version's tombstones as a distributed read ships them: a
-    * broadcast map under the driver bound, resident maps past it, or none. */
-  type Tombs = (Option[Broadcast[TombMap]], Option[RDD[TombMap]])
 
   /** One segment's postings `(field, term, shard, blocks, blob)` keyed by
     * shard, hash-partitioned by `partitioner` and turned into one
@@ -115,18 +130,15 @@ private[search] object ScoringKernel {
   }
 
   /** Tombstone rows `(doc_id, max_seg)` keyed by their doc's shard under
-    * `partitioner` and reduced to each doc's newest segment: one [[TombMap]]
-    * per partition, beside the resident postings of the same shards. */
+    * `partitioner`: per partition, a [[TombSet]] per shard with deletes,
+    * beside the resident postings of the same shards. */
   def residentTombstones(rows: DataFrame, shardSpan: Long, partitioner: Partitioner,
-                         name: String): RDD[TombMap] = {
+                         name: String): RDD[Map[Long, TombSet]] = {
     val rdd = rows.select("doc_id", "max_seg").rdd
       .map { r => val d = r.getLong(0); Math.floorDiv(d, shardSpan) -> (d -> r.getInt(1)) }
       .partitionBy(partitioner)
-      .mapPartitions({ it =>
-        val m = mutable.HashMap.empty[Long, Int]
-        it.foreach { case (_, (d, s)) => m(d) = math.max(s, m.getOrElse(d, s)) }
-        Iterator(m: TombMap)
-      }, preservesPartitioning = true)
+      .mapPartitions(it => Iterator(TombSet.byShard(it.map(_._2).toSeq, shardSpan)),
+        preservesPartitioning = true)
     materialize(rdd, name)
   }
 
@@ -137,7 +149,7 @@ private[search] object ScoringKernel {
 
   /** Distributed top-k over resident postings: ONE job of ONE stage, one
     * task per partition. [[ResidentRead]] hands each task its partition of
-    * every segment plus, past the driver bound, its resident tombstones;
+    * every segment plus, if the store has deletes, its resident tombstones;
     * [[ScoreTask]] looks up the query's pairs, streams the shard groups in
     * ascending shard order through [[score]] into one heap, and the driver
     * merges the ≤ k × partitions survivors in partition order.
@@ -146,13 +158,12 @@ private[search] object ScoringKernel {
     * closure cleaner returns at once instead of re-reading class files on
     * every read, as `union`, `mapPartitions`, `zipPartitions` and
     * `collect()` would. */
-  def distributedTopK(parts: Seq[RDD[ResidentPart]], tombs: Tombs,
+  def distributedTopK(parts: Seq[RDD[ResidentPart]], tombs: Option[RDD[Map[Long, TombSet]]],
                       q: KernelQuery): Seq[(Long, Double)] = {
     if (parts.isEmpty) return Nil
-    val (small, large) = tombs
-    val read = new ResidentRead(parts, large)
+    val read = new ResidentRead(parts, tombs)
     val out = new Array[Array[(Long, Double)]](read.partitions.length)
-    read.sparkContext.runJob(read, new ScoreTask(q, small), out.indices,
+    read.sparkContext.runJob(read, new ScoreTask(q), out.indices,
       (i: Int, hits: Array[(Long, Double)]) => out(i) = hits)
     val top = new BoundedHitHeap(q.k)
     out.foreach(_.foreach { case (d, s) => top.offer(d, s) })
@@ -160,26 +171,25 @@ private[search] object ScoringKernel {
   }
 
   private[search] def scorePartition(q: KernelQuery, parts: Iterator[ResidentPart],
-                                     tomb: TombMap): Iterator[(Long, Double)] = {
+                                     tombs: Map[Long, TombSet]): Iterator[(Long, Double)] = {
     val keys = q.stats.keys.toArray
     val rows = mutable.ArrayBuffer.empty[ShardRow]
     parts.foreach(p => keys.foreach { case (f, t) => rows ++= p.rows(f, t) })
     val heap = new BoundedHitHeap(q.k)
-    rows.groupBy(_._4).toArray.sortBy(_._1).foreach { case (_, group) => score(q, group, tomb, heap) }
+    rows.groupBy(_._4).toArray.sortBy(_._1).foreach { case (shard, group) =>
+      score(q, group, tombs.getOrElse(shard, TombSet.Empty), heap)
+    }
     heap.result().iterator
   }
 }
 
 /** The distributed read's task function: scores one [[ResidentRead]]
-  * partition against the broadcast tombstones `small`, or else against the
-  * partition's resident ones. A named class, not a lambda, so that Spark's
-  * closure cleaner skips it. */
-private[search] final class ScoreTask(q: KernelQuery, small: Option[Broadcast[ScoringKernel.TombMap]])
+  * partition against the partition's resident tombstones. A named class,
+  * not a lambda, so that Spark's closure cleaner skips it. */
+private[search] final class ScoreTask(q: KernelQuery)
     extends ((TaskContext, Iterator[ResidentRead.Part]) => Array[(Long, Double)]) with Serializable {
   def apply(ctx: TaskContext, it: Iterator[ResidentRead.Part]): Array[(Long, Double)] =
-    it.flatMap { case (parts, resident) =>
-      ScoringKernel.scorePartition(q, parts.iterator, small.fold(resident)(_.value))
-    }.toArray
+    it.flatMap { case (parts, tombs) => ScoringKernel.scorePartition(q, parts.iterator, tombs) }.toArray
 }
 
 /** The one RDD a distributed read runs: partition i holds partition i of
@@ -189,7 +199,7 @@ private[search] final class ScoreTask(q: KernelQuery, small: Option[Broadcast[Sc
   * locations: the scheduler takes them from its parents, cached blocks
   * first. */
 private[search] final class ResidentRead(segs: Seq[RDD[ResidentPart]],
-                                         tombs: Option[RDD[ScoringKernel.TombMap]])
+                                         tombs: Option[RDD[Map[Long, TombSet]]])
     extends RDD[ResidentRead.Part](segs.head.sparkContext,
       segs.map(new OneToOneDependency(_)) ++ tombs.map(new OneToOneDependency(_))) {
 
@@ -210,7 +220,7 @@ private[search] final class ResidentRead(segs: Seq[RDD[ResidentPart]],
 
 private[search] object ResidentRead {
   /** One partition's resident parts, one per segment, and its tombstones. */
-  type Part = (Seq[ResidentPart], ScoringKernel.TombMap)
+  type Part = (Seq[ResidentPart], Map[Long, TombSet])
 }
 
 /** Partition `index` of a [[ResidentRead]] and its parents' partitions. */

@@ -27,19 +27,20 @@ object SearchMode {
 /** BM25 top-k search over an [[IndexStore]] (SURVEY.md §A.4 pinned scorer).
   *
   * Every query scores through the one [[ScoringKernel]]: per docId-range
-  * shard group, `(group rows, term stats, mode, tombstones) → bounded
-  * heap`, summing each doc in (field, term, seg) order — bit-identical to
-  * [[OracleScorer]]. Where the kernel runs is a size gate:
+  * shard group, `(group rows, term stats, mode, the shard's [[TombSet]]) →
+  * bounded heap`, summing each doc in (field, term, seg) order —
+  * bit-identical to [[OracleScorer]]. Where the kernel runs is one size
+  * gate, `max(Σ df, tombstone rows) · 8 ≤ driverWandMaxBytes`:
   *
-  *  - Driver path (Σ df · 8 ≤ `driverWandMaxBytes` and the tombstones fit
-  *    the driver map): shard rows come from the driver LRU (one pruned scan
-  *    on a miss, no Spark job when warm), and the groups score concurrently
-  *    on [[DriverPool]] against a shared θ floor.
+  *  - Driver path, when it holds: shard rows come from the driver LRU (one
+  *    pruned scan on a miss, no Spark job when warm), and the groups score
+  *    concurrently on [[DriverPool]] against a shared θ floor, each against
+  *    its shard's deletes, collected once per version.
   *  - Distributed path, otherwise: each segment's postings are held
   *    resident on the executors, hash-partitioned by shard under
   *    `spark.sql.shuffle.partitions` partitions and built once, by the first
-  *    distributed read that needs the segment; tombstones past the driver
-  *    bound are held beside them under the same partitioner. A read is ONE
+  *    distributed read that needs the segment; a version's tombstones are
+  *    held beside them under the same partitioner. A read is ONE
   *    job of ONE stage, one task per partition, with no parquet scan and no
   *    shuffle: one RDD with one-to-one dependencies on the resident RDDs hands
   *    each task its partitions, a named task function (no closure for Spark
@@ -232,22 +233,28 @@ class SearchEngine(val store: IndexStore) {
       if (current == null || current.token != token) {
         val old = current
         current = load(token)
-        if (old != null) old.tombs.drop()
+        if (old != null) old.residentTombs.drop()
       }
       current
     }
   }
 
+  /** The driver gate, on a read's Σ df or a version's tombstone rows:
+    * ~8 bytes per posting or deleted id bounds what a driver read holds. */
+  private def fitsDriver(rows: Long): Boolean = rows * 8 <= store.cfg.driverWandMaxBytes
+
   private def load(token: String): Version = {
     val cfg = store.cfg
-    // size-guard the driver tombstone map: past the configured bound the
-    // map is never collected — the distributed read holds the tombstones
-    // resident beside the postings instead (a bulk delete of 10^9 ids
-    // must not OOM the driver)
-    val tombstones =
-      if (store.tombstoneCount() <= cfg.maxDriverTombstones) Some(store.tombstoneMap()) else None
     // tombstones must be keyed by the span the postings were built with
     val span = store.persistedLayout().fold(cfg.shardSpan)(_._1)
+    // rows from parquet footers, no job; the driver collects them only if
+    // driver reads are allowed at all (a bulk delete of 10^9 ids must not
+    // OOM the driver), else every read runs distributed
+    val tombRows = store.tombstoneCount()
+    val driverTombs =
+      if (!fitsDriver(tombRows)) Map.empty[Long, TombSet]
+      else TombSet.byShard(store.tombstonesDF().select("doc_id", "max_seg").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)), span)
     val keys = store.postingsStamps()
     residentC.keySet.diff(keys.toSet).foreach(k => residentC.remove(k).foreach(_.drop()))
     val segs = keys.map { case key @ (id, _) =>
@@ -256,21 +263,13 @@ class SearchEngine(val store: IndexStore) {
           s"resident postings seg-$id of ${store.baseDir}"),
         (rdd: RDD[ResidentPart]) => { rdd.unpersist(blocking = false); () }))
     }
-    val tombs = new Resident[ScoringKernel.Tombs](
-      () => tombstones match {
-        case None => (None, Some(ScoringKernel.residentTombstones(store.tombstonesDF(), span,
-          partitioner, s"resident tombstones of ${store.baseDir}")))
-        case Some(m) if m.isEmpty => (None, None)
-        case Some(m) => (Some(spark.sparkContext.broadcast[ScoringKernel.TombMap](m)), None)
-      },
-      { case (b, r) => b.foreach(_.unpersist()); r.foreach(_.unpersist(blocking = false)) })
-    new Version(token, store.fieldStats(), tombstones, store.postings(), store.termDf(), segs, tombs,
-      cfg.driverBlobCacheBytes)
+    val residentTombs = new Resident[Option[RDD[Map[Long, TombSet]]]](
+      () => Option.when(tombRows > 0)(ScoringKernel.residentTombstones(store.tombstonesDF(), span,
+        partitioner, s"resident tombstones of ${store.baseDir}")),
+      _.foreach(_.unpersist(blocking = false)))
+    new Version(token, store.fieldStats(), tombRows, driverTombs, store.postings(), store.termDf(), segs,
+      residentTombs, cfg.driverBlobCacheBytes)
   }
-
-  /** Whether the tombstone set fits the driver-map bound; when false, every
-    * query runs distributed, against tombstones held beside the postings. */
-  def tombstonesSmall: Boolean = poll().tombstones.isDefined
 
   // ---------- scoring ----------
 
@@ -357,12 +356,8 @@ class SearchEngine(val store: IndexStore) {
         val q = KernelQuery(stats.map(s =>
           (s.field, s.term) -> PairStat(s.idf, s.avgdl, masks((s.field, s.term)))).toMap,
           mode, qTerms.size, k, bm25)
-        v.tombstones match {
-          // ~8 bytes per posting bounds the candidate volume
-          case Some(tomb) if stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes =>
-            driverTopK(v, q, pairs, tomb)
-          case _ => ScoringKernel.distributedTopK(v.segs.map(_.get), v.tombs.get, q)
-        }
+        if (fitsDriver(math.max(stats.map(_.df).sum, v.tombRows))) driverTopK(v, q, pairs)
+        else ScoringKernel.distributedTopK(v.segs.map(_.get), v.residentTombs.get, q)
       }
     // rows under a fixed schema, in a relation marked analyzed: no encoder
     // to generate code for and nothing for the analyzer to do on every read
@@ -371,20 +366,21 @@ class SearchEngine(val store: IndexStore) {
 
   /** The kernel on the driver: the pairs' shard rows (the version's LRU, or
     * one pruned scan of its postings for the misses) grouped by shard, the
-    * groups scored concurrently on the pool. Rows this read scanned are
-    * scored even when the LRU keeps none of them. */
-  private def driverTopK(v: Version, q: KernelQuery, pairs: Seq[(String, String)],
-                         tomb: Map[Long, Int]): Seq[(Long, Double)] = {
+    * groups scored concurrently on the pool, each against its shard's
+    * deletes. Rows this read scanned are scored even when the LRU keeps
+    * none of them. */
+  private def driverTopK(v: Version, q: KernelQuery, pairs: Seq[(String, String)]): Seq[(Long, Double)] = {
     val rows = v.rows.getAll(pairs) { misses =>
       val got = rowScan(v, misses).as[ShardRow].collect().groupBy(r => (r._1, r._2))
       misses.map(got.getOrElse(_, Array.empty[ShardRow]))
     }
-    val groups = rows.iterator.flatMap(_.iterator).toArray.groupBy(_._4).toArray.sortBy(_._1).map(_._2)
+    val groups = rows.iterator.flatMap(_.iterator).toArray.groupBy(_._4).toArray.sortBy(_._1)
     // only WAND prunes against θ; exhaustive heaps need no shared floor
     val shared = if (q.mode == SearchMode.Wand) new SharedTheta else null
     val heaps = DriverPool.run(groups.length, spark.sparkContext.defaultParallelism) { g =>
+      val (shard, group) = groups(g)
       val h = new BoundedHitHeap(q.k, shared)
-      ScoringKernel.score(q, groups(g), tomb, h)
+      ScoringKernel.score(q, group, v.driverTombs.getOrElse(shard, TombSet.Empty), h)
       h
     }
     val top = new BoundedHitHeap(q.k)
@@ -395,19 +391,21 @@ class SearchEngine(val store: IndexStore) {
   private type ShardRow = ScoringKernel.ShardRow
 
   /** One store version as a read sees it, never changed once loaded: the
-    * live field stats, the driver tombstone map (None past
-    * `maxDriverTombstones`), the postings and df plans, the segments'
-    * resident postings and this version's resident tombstones, and three
+    * live field stats, the tombstone row count and, when the driver gate
+    * admits it, the tombstones per shard, the postings and df plans, the
+    * segments' resident postings and this version's resident tombstones
+    * (none without deletes), and three
     * LRUs over them — expansions (≤ cap pairs each, by count), dfs (by
     * count) and the driver path's shard rows per (field, term), by bytes
     * up to `driverBlobCacheBytes`. Only lists small enough for the driver
     * path reach the row LRU, so a repeat query over cached terms runs ZERO
     * Spark jobs. */
   private final class Version(val token: String, val fieldStats: Map[String, (Long, Long)],
-                              val tombstones: Option[Map[Long, Int]],
+                              val tombRows: Long, val driverTombs: Map[Long, TombSet],
                               val postings: DataFrame, val termDf: DataFrame,
                               val segs: Seq[Resident[RDD[ResidentPart]]],
-                              val tombs: Resident[ScoringKernel.Tombs], rowBudget: Long) {
+                              val residentTombs: Resident[Option[RDD[Map[Long, TombSet]]]],
+                              rowBudget: Long) {
     val expansions = new Lru[(String, String, Seq[String], Int), Seq[(String, String)]](4096, _ => 1L)
     val dfs = new Lru[(String, String), Long](1L << 17, _ => 1L)
     val rows = new Lru[(String, String), Array[ShardRow]](rowBudget, rs =>

@@ -42,15 +42,13 @@ private[search] object WandExecutor {
     *    (min over contributing cursors' block validity ends, bounded by the
     *    first cursor past the pivot — the Ding/Suel deep skip) instead of
     *    pivotDoc+1, so a cold block is skipped once, not re-proven per doc;
-    *  - `tomb.isEmpty` is hoisted out of the evaluation loop (the common
-    *    case boxed a Long per evaluated doc in `Map.get`). */
-  def runWand(cursors: Array[TermCursor], tomb: collection.Map[Long, Int],
-              heap: BoundedHitHeap): Unit = {
+    *  - a deleted posting is one binary search in the shard's [[TombSet]],
+    *    and none when the shard has no deletes. */
+  def runWand(cursors: Array[TermCursor], tomb: TombSet, heap: BoundedHitHeap): Unit = {
     cursors.foreach(_.init())
     val order: Array[TermCursor] = cursors.filter(!_.exhausted)
     if (order.isEmpty) return
     if (order.length == 1) { runWandSingle(order(0), tomb, heap); return }
-    val noTomb = tomb.isEmpty
     var continue = true
     while (continue) {
       // insertion sort by docId (exhausted cursors report Long.MaxValue and
@@ -130,8 +128,7 @@ private[search] object WandExecutor {
           while (e < cursors.length) {
             val c = cursors(e)
             if (!c.exhausted && c.docId == pivotDoc) {
-              val deleted = !noTomb && tomb.get(pivotDoc).exists(c.seg <= _)
-              if (!deleted) { score += c.contribution; anyLive = true }
+              if (!tomb.kills(pivotDoc, c.seg)) { score += c.contribution; anyLive = true }
             }
             e += 1
           }
@@ -167,9 +164,7 @@ private[search] object WandExecutor {
     * scores are the identical per-posting contributions, so the top-k (with
     * the (score desc, docId asc) tie rule) matches the generic loop
     * exactly. */
-  private def runWandSingle(c: TermCursor, tomb: collection.Map[Long, Int],
-                            heap: BoundedHitHeap): Unit = {
-    val noTomb = tomb.isEmpty
+  private def runWandSingle(c: TermCursor, tomb: TombSet, heap: BoundedHitHeap): Unit = {
     while (!c.exhausted) {
       val blockLast = c.cursor.blockLastDocId
       if (c.currentBlockUB < heap.threshold) {
@@ -179,8 +174,7 @@ private[search] object WandExecutor {
         var go = true
         while (go) {
           val d = c.docId
-          if (noTomb || !tomb.get(d).exists(c.seg <= _))
-            heap.offer(d, c.contribution)
+          if (!tomb.kills(d, c.seg)) heap.offer(d, c.contribution)
           if (d >= blockLast) go = false
           else if (!c.cursor.next()) { go = false }
         }

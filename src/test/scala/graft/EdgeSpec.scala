@@ -71,8 +71,13 @@ class EdgeSpec extends AnyFunSuite {
     val docs = CorpusGen.generate(spark, 80, seed = 21).collect().toSeq
     val victims = docs.map(_.doc_id).filter(_ % 5 == 0)
     assert(victims.size > 3)
+    // a term of at most 3 live docs: its candidates fit a bound that the
+    // tombstone rows, one per victim, miss by one byte
+    val rare = docs.filterNot(d => victims.contains(d.doc_id))
+      .flatMap(d => graft.analysis.Analyzer.tokenize(d.content).distinct)
+      .groupBy(identity).collect { case (t, ds) if ds.size <= 3 => t }.min
     val cfgSmall = IndexConfig(shardSpan = 32, fields = Seq("content"))
-    val cfgGuarded = cfgSmall.copy(maxDriverTombstones = 3) // forces the DF path
+    val cfgGuarded = cfgSmall.copy(driverWandMaxBytes = victims.size * 8L - 1)
     def build(cfg: IndexConfig, tag: String): SearchEngine = {
       val st = new IndexStore(spark, TestSpark.tempDir(tag), cfg)
       st.createSegment(spark.createDataset(docs))
@@ -81,9 +86,15 @@ class EdgeSpec extends AnyFunSuite {
     }
     val ref = build(cfgSmall, "tomb-ref")
     val guarded = build(cfgGuarded, "tomb-big")
-    assert(!guarded.tombstonesSmall && ref.tombstonesSmall)
-    Seq(("import the", SearchMode.Or), ("class def val", SearchMode.Wand),
-        ("import val", SearchMode.And)).foreach { case (q, mode) =>
+    // a warm rare-term read: on the driver (no job) under the default
+    // bound, distributed (one job) past the tombstone side of the gate
+    def warmJobs(eng: SearchEngine): Int = {
+      eng.search(rare, Seq("content"), k = 15).collect()
+      JobCounter(spark)(eng.search(rare, Seq("content"), k = 15).collect())._2.jobs
+    }
+    assert(warmJobs(ref) == 0 && warmJobs(guarded) == 1)
+    Seq((rare, SearchMode.Or), (rare, SearchMode.Wand), ("import the", SearchMode.Or),
+        ("class def val", SearchMode.Wand), ("import val", SearchMode.And)).foreach { case (q, mode) =>
       val a = ref.search(q, Seq("content"), k = 15, mode = mode)
         .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
       val b = guarded.search(q, Seq("content"), k = 15, mode = mode)
@@ -286,9 +297,9 @@ class EdgeSpec extends AnyFunSuite {
   test("distributed bulk delete (DataFrame of ids) equals the Seq path past the driver bound") {
     val docs = CorpusGen.generate(spark, 80, seed = 41).collect().toSeq
     val victims = docs.map(_.doc_id).filter(_ % 3 == 0)
-    // maxDriverTombstones = 3 << victims.size: the id set exceeds the driver
-    // bound, so both the delete AND every subsequent read run distributed
-    val cfg = IndexConfig(shardSpan = 32, fields = Seq("content"), maxDriverTombstones = 3)
+    // driverWandMaxBytes = 0: every read after the delete runs distributed,
+    // against the resident tombstones
+    val cfg = IndexConfig(shardSpan = 32, fields = Seq("content"), driverWandMaxBytes = 0)
     assert(victims.size > 3)
     def build(tag: String): IndexStore = {
       val st = new IndexStore(spark, TestSpark.tempDir(tag), cfg)

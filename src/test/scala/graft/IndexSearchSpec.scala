@@ -133,12 +133,14 @@ class IndexSearchSpec extends AnyFunSuite {
     val victims = corpusLocal.map(_.doc_id).filter(d => d % 7 == 3)
     seed.delete(victims)
     val live = corpusLocal.filterNot(d => victims.contains(d.doc_id))
-    Seq(cfg, cfg.copy(driverWandMaxBytes = 0), cfg.copy(maxDriverTombstones = 0),
-        cfg.copy(driverWandMaxBytes = 0, maxDriverTombstones = 0),
+    // the tombstone side of the driver gate: rows · 8 just inside and just
+    // past the bound (reads whose Σ df is over it run distributed either way)
+    Seq(cfg, cfg.copy(driverWandMaxBytes = 0), cfg.copy(driverWandMaxBytes = victims.size * 8L),
+        cfg.copy(driverWandMaxBytes = victims.size * 8L - 1),
         cfg.copy(driverBlobCacheBytes = 0)).foreach { c =>
       val eng = new SearchEngine(new IndexStore(spark, dir, c))
       assert(eng.store.segments.size == 2)
-      assert(eng.tombstonesSmall == (c.maxDriverTombstones > 0))
+      assert(eng.store.tombstoneCount() == victims.size)
       Seq(SearchMode.Wand, SearchMode.Or, SearchMode.And).foreach { mode =>
         distQueries.foreach { case (q, fields, bw) => assertExact(eng, live, q, fields, bw, mode) }
       }

@@ -74,13 +74,36 @@ class PlanSpec extends AnyFunSuite {
 
   test("past the tombstone bound, a warm distributed read is still one shuffle-free stage") {
     val store = new IndexStore(spark, TestSpark.tempDir("plan-tomb"),
-      IndexConfig(shardSpan = 64, fields = Seq("content"), maxDriverTombstones = 0))
+      IndexConfig(shardSpan = 64, fields = Seq("content"), driverWandMaxBytes = 0))
     store.createSegment(CorpusGen.generate(spark, 120, seed = 31))
     store.delete(Seq(3L, 70L))
     val eng = new SearchEngine(store)
-    assert(!eng.tombstonesSmall)
     repeatCounts(eng).zip(shapes).foreach { case (c, shape) =>
       assert(c == oneStage, s"$shape ran $c")
+    }
+  }
+
+  test("the driver gate, max(Σ df, tombstone rows) · 8 ≤ driverWandMaxBytes, at its boundary") {
+    import org.apache.spark.sql.functions.col
+    val dir = TestSpark.tempDir("plan-gate")
+    val cfg = IndexConfig(shardSpan = 64, fields = Seq("content"))
+    val store = new IndexStore(spark, dir, cfg)
+    store.createSegment(CorpusGen.generate(spark, 120, seed = 31))
+    store.delete(0L until 6L)
+    assert(store.tombstoneCount() == 6L)
+    val df = store.termDf().filter(col("field") === "content")
+    val rare = df.filter(col("df") === 1L).orderBy("term").first().getString(1)
+    /** Jobs of a warm repeat of `q` under `bytes`: 0 on the driver, 1 distributed. */
+    def warmJobs(q: String, bytes: Long): Int = {
+      val eng = new SearchEngine(new IndexStore(spark, dir, cfg.copy(driverWandMaxBytes = bytes)))
+      eng.search(q, Seq("content"), k = 10).collect()
+      JobCounter(spark)(eng.search(q, Seq("content"), k = 10).collect())._2.jobs
+    }
+    val hot = df.filter(col("term") === "import").first().getLong(2)
+    assert(hot > 6L)
+    // "import": Σ df binds; the rare term: the tombstone rows bind
+    Seq("import" -> hot, rare -> 6L).foreach { case (q, rows) =>
+      assert(warmJobs(q, rows * 8) == 0 && warmJobs(q, rows * 8 - 1) == 1, s"[$q] at $rows rows")
     }
   }
 

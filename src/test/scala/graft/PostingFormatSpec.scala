@@ -191,6 +191,7 @@ class PostingFormatSpec extends AnyFunSuite {
     val store = new IndexStore(spark, dir, IndexConfig(shardSpan = 32))
     store.createSegment(CorpusGen.generate(spark, 60, seed = 61))
     store.add(CorpusGen.generate(spark, 30, seed = 67).map(d => d.copy(doc_id = d.doc_id + 1000)))
+    store.delete(Seq(3L, 1004L))
     val out = new java.io.ByteArrayOutputStream()
     val (_, jobs) = JobCounter.appWide(spark)(Console.withOut(out)(Cli.run(spark, Array("stats", dir))))
     assert(jobs == 0, s"Cli stats ran $jobs Spark jobs")
@@ -203,6 +204,12 @@ class PostingFormatSpec extends AnyFunSuite {
       }
       assert(lines.exists(_.matches(
         s"seg-$seg index bytes per corpus byte \\d+\\.\\d{3}, posting format ${PostingCodec.Format}")), lines)
+    }
+    // the deletes: tombstone rows, then the df and field-stats corrections
+    for (table <- Seq("tombstones", "dfdelta", "tombstats")) {
+      val line = lines.find(_.startsWith(s"deletes $table ")).getOrElse(fail(s"no deletes $table line in $lines"))
+      val rows = spark.read.parquet(s"$dir/$table").count()
+      assert(rows > 0 && line.contains(s"rows=$rows ") && line.matches(".* bytes=[1-9]\\d* files=[1-9]\\d*"), line)
     }
   }
 }

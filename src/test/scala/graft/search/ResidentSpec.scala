@@ -48,7 +48,6 @@ class ResidentSpec extends AnyFunSuite {
     val terms = Analyzer.tokenize(q).distinct.sorted.toSeq
     val pairs = if (bw) terms.flatMap(eng.expandPrefix(_, Seq("content"))) else terms.map(("content", _))
     eng.termStats(pairs.distinct)
-    eng.tombstonesSmall
     ()
   }
 
@@ -113,12 +112,11 @@ class ResidentSpec extends AnyFunSuite {
   }
 
   test("deletes past the tombstone bound stay exact; tombstones are per version") {
-    val st = store(docs.grouped(120).toSeq, cfg.copy(maxDriverTombstones = 0))
+    val st = store(docs.grouped(120).toSeq)
     val dir = st.baseDir
     val eng = new SearchEngine(st)
     val first = docs.map(_.doc_id).filter(_ % 5 == 1)
     st.delete(first)
-    assert(!eng.tombstonesSmall)
     assertAllShapes(eng, docs.filterNot(d => first.contains(d.doc_id)))
     val tomb = residentRdds(dir).collect { case ("tombstones", id) => id }
     assert(tomb.size == 1, residentRdds(dir).toString)
@@ -137,8 +135,8 @@ class ResidentSpec extends AnyFunSuite {
     st.delete(victims)
     val live = docs.filterNot(d => victims.contains(d.doc_id))
     assertAllShapes(eng, live)
+    assert(residentRdds(dir).map(_._1) == Seq("postings seg-0", "postings seg-1", "tombstones"))
     val old = residentRdds(dir).map(_._2).toSet
-    assert(old.size == 2)
     st.compact()
     // compact() cleared the tombstones: a read of the old seg-0 would
     // resurface the deleted docs
@@ -176,32 +174,29 @@ class ResidentSpec extends AnyFunSuite {
       assert(!c.getName.contains("$anonfun$") && !c.isSynthetic &&
         !c.getDeclaredMethods.exists(_.getName == "writeReplace"), c.getName)
     }
-    // both sides of the tombstone bound: broadcast tombstones, resident ones
-    Seq(cfg, cfg.copy(maxDriverTombstones = 0)).foreach { c =>
-      val st = store(docs.grouped(120).toSeq, c)
-      val victims = docs.map(_.doc_id).filter(_ % 4 == 1)
-      st.delete(victims)
-      val eng = new SearchEngine(st)
-      assertExact(eng, docs.filterNot(d => victims.contains(d.doc_id)), "import class", SearchMode.Or, bw = false)
-      val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
-      val listener = new SparkListener {
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          stages.add(e.stageInfo); ()
-        }
+    // with deletes, the read's parents include the resident tombstones
+    val st = store(docs.grouped(120).toSeq)
+    val victims = docs.map(_.doc_id).filter(_ % 4 == 1)
+    st.delete(victims)
+    val eng = new SearchEngine(st)
+    assertExact(eng, docs.filterNot(d => victims.contains(d.doc_id)), "import class", SearchMode.Or, bw = false)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.add(e.stageInfo); ()
       }
-      spark.sparkContext.addSparkListener(listener)
-      val (_, counts) = try JobCounter(spark)(eng.search("import class", Seq("content"), k = 10).collect())
-        finally spark.sparkContext.removeSparkListener(listener)
-      assert(counts == JobCounter.Counts(1, 1, partitions), s"maxDriverTombstones=${c.maxDriverTombstones}: $counts")
-      // the stage's last RDD is the read; its parents are the resident RDDs
-      val rdds = stages.peek().rddInfos
-      val read = rdds.maxBy(_.id)
-      val parents = rdds.filter(r => read.parentIds.contains(r.id)).map(_.name).sorted
-      val tombs = if (c.maxDriverTombstones == 0) Seq("resident tombstones") else Nil
-      assert(read.name == "ResidentRead" &&
-        parents.map(_.stripSuffix(s" of ${st.baseDir}")) == Seq("resident postings seg-0",
-          "resident postings seg-1") ++ tombs, s"${read.name} <- $parents")
     }
+    spark.sparkContext.addSparkListener(listener)
+    val (_, counts) = try JobCounter(spark)(eng.search("import class", Seq("content"), k = 10).collect())
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(counts == JobCounter.Counts(1, 1, partitions), counts.toString)
+    // the stage's last RDD is the read; its parents are the resident RDDs
+    val rdds = stages.peek().rddInfos
+    val read = rdds.maxBy(_.id)
+    val parents = rdds.filter(r => read.parentIds.contains(r.id)).map(_.name).sorted
+    assert(read.name == "ResidentRead" &&
+      parents.map(_.stripSuffix(s" of ${st.baseDir}")) == Seq("resident postings seg-0",
+        "resident postings seg-1", "resident tombstones"), s"${read.name} <- $parents")
   }
 
   test("two threads' concurrent first reads build each segment once") {
